@@ -334,8 +334,9 @@ object Bench {
     // q_vec_index_refit and q_vec_pq_refit run a streaming replay
     // (FoldReplay's scoped shuffle-partitions set/restore) inside a
     // batch-named row — same hazard, same sequential-only treatment.
-    // The label-propagation dedup rows, kcore and pagerank joined in
-    // r16: their loops scope an AQE disable (Dsl.withoutAqeForLoop).
+    // The label-propagation dedup rows and kcore joined in r16: their
+    // loops scope an AQE disable (Dsl.withoutAqeForLoop). pagerank
+    // keeps AQE on and stays parallel-safe.
     val confMutating = Set("q_join_bloom_filtered",
       "q_vec_knn_graph", "q_vec_knn_graph_batch", "q_vec_index_refit",
       "q_vec_pq_refit",

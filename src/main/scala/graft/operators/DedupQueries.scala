@@ -540,7 +540,11 @@ object DedupQueries {
     * with `ComponentsSpec`'s planted-chain cases.
     *
     * @param vertices one `doc_id` column (every vertex, incl. isolated)
-    * @param pairs    undirected edge list as (u, v) columns
+    * @param pairs    undirected edge list as (u, v) columns; every
+    *                 endpoint MUST appear in `vertices` — propagation
+    *                 left-joins onto `vertices`, so an endpoint missing
+    *                 there gets no label row and is silently dropped
+    *                 (every current caller derives both from one table)
     * @return (doc_id, canon_id) — canon_id = component minimum
     */
   object Components {

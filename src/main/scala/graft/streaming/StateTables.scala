@@ -63,7 +63,11 @@ private[graft] object Snapshot {
     * subsequent manifest read then dies with a stale-checksum error
     * (observed the moment the port landed). The raw fs keeps the
     * pointer a plain file, exactly the pre-port on-disk layout; real
-    * schemes (hdfs:, s3a:) carry integrity in the store itself. */
+    * schemes (hdfs:, s3a:) carry integrity in the store itself. For
+    * `file:` the raw fs is graft.io.NioRawLocalFileSystem (registered
+    * in core-site.xml; it sets permissions in-process instead of
+    * forking `chmod`), a subclass of the stock class, so this match and
+    * [[atomicReplace]]'s still apply. */
   private def fsOf(p: HPath): FileSystem =
     p.getFileSystem(hconf()) match {
       case l: org.apache.hadoop.fs.LocalFileSystem => l.getRaw
@@ -174,55 +178,26 @@ private[graft] object Snapshot {
   /** Output-file sizing for state-table commits (r15, guide §6): the
     * local state tables are KB-sized, and writing them at the fold's
     * shuffle-partition count produced 4–8 tiny files per commit — each
-    * file costing its own create + rename + permission round trips,
-    * which on a native-lib-less local Hadoop FORK A SHELL per
-    * permission op (jstack: RawLocalFileSystem.setPermission → chmod,
-    * FileUtil.readLink → readlink; ~860 forks per corpus-dedup rep).
-    * One file per commit is the right layout for state-bounded tables
-    * at any scale; a deployment whose per-batch segments are large
-    * sizes them with spark.graft.state.writePartitions (the lakehouse
-    * target-file-size knob). repartition, not coalesce: coalesce would
-    * collapse the upstream fold's parallelism into the single write
-    * task. */
+    * file costing its own create, permission set, rename and footer
+    * read (all in-process since graft.io.LocalFs; stock Hadoop without
+    * libhadoop forked a `chmod` per file). One file per commit is the
+    * right layout for state-bounded tables at any scale; a deployment
+    * whose per-batch segments are large sizes them with
+    * spark.graft.state.writePartitions (the lakehouse target-file-size
+    * knob). repartition, not coalesce: coalesce would collapse the
+    * upstream fold's parallelism into the single write task. */
   def sized(df: DataFrame): DataFrame = {
     val n = df.sparkSession.conf
       .get("spark.graft.state.writePartitions", "1").toInt
     if (n <= 0) df else df.repartition(n)
   }
 
-  /** PER-ROOT SCHEMA MEMO (r16, guide §2.1 driver gaps): a state-table
-    * parquet read without an explicit schema launches a footer-read
-    * JOB during DataFrame construction — BenchProbe counted 2–4 such
-    * one-task ~25 ms jobs (plus their planning gaps) per micro-batch
-    * across every streaming fold. A root's schema is fixed by the
-    * fold's code, so the first read per JVM infers and memoizes it and
-    * every later read passes it explicitly (no job, listing stays
-    * driver-side). METADATA only — never rows; invalidated when the
-    * root is deleted ([[deleteRecursively]]), the one path specs use
-    * to rebuild a root with a different shape. */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
-
-  def readStateParquet(s: SparkSession, root: String,
-      dirs: Seq[String]): DataFrame = {
-    val known = schemaMemo.get(root)
-    if (known != null) s.read.schema(known).parquet(dirs: _*)
-    else {
-      val df = s.read.parquet(dirs: _*)
-      schemaMemo.put(root, df.schema)
-      df
-    }
-  }
-
   /** Recursive delete through the resolved FileSystem; a no-op when
-    * the path does not exist. Invalidates the schema/bid memos for the
-    * root and anything under it. */
+    * the path does not exist. */
   def deleteRecursively(path: String): Unit = {
     val p = new HPath(path)
     val fs = fsOf(p)
     if (fs.exists(p)) fs.delete(p, true)
-    schemaMemo.keySet.removeIf((k: String) => k.startsWith(path))
-    MonoidTable.invalidateBidMemo(path)
   }
 
   /** Recursive copy through the resolved FileSystems (the state-clone
@@ -259,26 +234,6 @@ private[graft] object MonoidTable {
   private def currentDir(root: String): Option[String] =
     Snapshot.currentManifest(root).flatMap(_.get(Key))
       .map(Snapshot.versionPath(root, _))
-
-  /** LAST-MERGED-BATCH MEMO (r16): the `_bid` fence stays embedded in
-    * the committed data (the crash-safety design is untouched), but
-    * re-READING it cost every id>0 merge a footer job + a one-row
-    * scalar action before the write — two driver round trips per
-    * micro-batch, per monoid row. The memo records (committed version
-    * dir, bid) AFTER each successful [[Snapshot.commit]]; a merge whose
-    * manifest still points at that exact version dir skips the
-    * re-read. Any path that changes the manifest underneath (GDPR
-    * [[publish]], a fresh JVM, a spec rebuilding the root) fails the
-    * version-dir check and falls back to reading the fence from the
-    * data — the memo can never claim a bid the manifest does not
-    * carry. */
-  private val bidMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]
-
-  private[streaming] def invalidateBidMemo(pathPrefix: String): Unit = {
-    bidMemo.keySet.removeIf((k: String) => k.startsWith(pathPrefix))
-    ()
-  }
 
   /** Merge one micro-batch's pre-aggregated partials into the keyed
     * state table. All non-key columns must be sum-mergeable (the monoid
