@@ -318,32 +318,14 @@ object Bench {
         .foreach(_.get())
       finally pool.shutdown()
     }
-    // CONCURRENCY SAFETY: rows whose build does a scoped set/restore of
-    // SESSION-GLOBAL conf must never share the pool — two overlapping
-    // set/restore pairs leave the second's "previous" value (the
-    // first's override) permanently applied. The r10 review caught
-    // exactly this: streaming replays re-pin shuffle.partitions, a
-    // racing restore leaked 4 into the session, and the timed loop
-    // silently measured every batch row at 4 shuffle partitions
-    // (invalidating two recorded bench runs — see BASELINE.md r10
-    // correction). Streaming rows and the bloom row therefore warm
-    // SEQUENTIALLY, in both warm phases.
-    // q_vec_knn_graph{,_batch} joined the set in r11: their traversal
-    // loop scopes an AQE disable (AnnGraph.withoutAqe), which must not
-    // overlap concurrent warm work on the shared session.
-    // q_vec_index_refit and q_vec_pq_refit run a streaming replay
-    // (FoldReplay's scoped shuffle-partitions set/restore) inside a
-    // batch-named row — same hazard, same sequential-only treatment.
-    // The label-propagation dedup rows and kcore joined in r16: their
-    // loops scope an AQE disable (Dsl.withoutAqeForLoop). pagerank
-    // keeps AQE on and stays parallel-safe.
-    val confMutating = Set("q_join_bloom_filtered",
-      "q_vec_knn_graph", "q_vec_knn_graph_batch", "q_vec_index_refit",
-      "q_vec_pq_refit",
-      "q_dedup_components", "q_dedup_cluster_sizes", "q_dedup_canonical",
-      "q_graph_kcore")
-    def parallelSafe(name: String): Boolean =
-      !name.startsWith("q_stream_") && !confMutating(name)
+    // Streaming rows warm SEQUENTIALLY, after the pool: a replay is a
+    // chain of small micro-batch jobs driven by its own query thread,
+    // and q_stream_vec_index replays into the state root that
+    // q_vec_index_refit maintains, so the two must not overlap. Rows
+    // that need their own conf (AQE off, replay shuffle sizing, bloom
+    // thresholds) set it on a graft.Scope clone, never on `spark`, so
+    // they pool like any other.
+    def parallelSafe(name: String): Boolean = !name.startsWith("q_stream_")
     // Snapshot the WHOLE runtime conf before any warm work: the leak
     // assert after the warm phases diffs against this.
     val confBeforeWarm = spark.conf.getAll
@@ -435,10 +417,8 @@ object Bench {
     // re-pay — it was 57 s of the r10 warmup (verdict #6). Instead warm
     // what IS one-time at the target SF: the staged inputs / schema
     // memos / model state (stream_staging), plus ONE representative
-    // replay for the shared micro-batch engine paths and the
-    // conf-mutating bloom row — still sequential (the set/restore
-    // race above). Per-row plan codegen is already hot from the
-    // sf0.001 pass.
+    // replay for the shared micro-batch engine paths and the bloom
+    // row. Per-row plan codegen is already hot from the sf0.001 pass.
     warmItem("stream_staging") {
       streaming.StreamingQueries.warmCaches(spark, sfDir)
     }

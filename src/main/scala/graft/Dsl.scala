@@ -107,26 +107,4 @@ object Dsl {
   def sumRevenue(price: Column, discount: Column): Column =
     sum(dec4(price) * (lit(1).cast(DecimalType(18, 4)) - dec4(discount)))
       .cast(DecimalType(18, 2)).cast(DoubleType)
-
-  /** Run `body` with AQE scoped off for an ITERATIVE FIXPOINT LOOP
-    * (r16, the [[graft.streaming.FoldReplay]] / AnnGraph precedent
-    * generalized): each round of a label-propagation / peel /
-    * power-iteration loop is a small pre-sized job, and AQE turns every
-    * exchange into its own stage-job with a driver re-optimization gap
-    * between — measured r16 on idle 32 cores: q_graph_kcore 3.04 →
-    * 1.79 s, q_graph_pagerank 3.71 → 2.97 s, the three
-    * label-propagation dedup rows each ~-0.1 s, while rows whose plans
-    * AQE genuinely improves (q_dedup_components_star's runtime
-    * broadcast conversions: 2.09 → 4.99 s WITHOUT it) keep it on.
-    * Overridable per deployment via spark.graft.iter.aqe — giant
-    * per-round states can want runtime re-optimization back.
-    * Session-global set/restore: callers must be in Bench's
-    * sequential-warm set (the r10 conf-leak lesson). */
-  def withoutAqeForLoop[A](s: org.apache.spark.sql.SparkSession)(
-      body: => A): A = {
-    val k = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(k)
-    s.conf.set(k, s.conf.get("spark.graft.iter.aqe", "false"))
-    try body finally s.conf.set(k, prev)
-  }
 }

@@ -197,28 +197,28 @@ object AnnGraph {
     s.head
   }
 
-  /** Run `body` with AQE disabled. The traversal issues dozens of TINY
-    * broadcast-join actions per search; AQE's per-query stage planning
-    * measured ~40% of the whole row's wall at sf0.1 (single probe
-    * 2.5 → 1.45 s, 16-probe batch 4.4 → 2.7 s) while buying nothing —
-    * these plans carry no exchange AQE could re-optimize, and that
-    * stays true at any corpus size (the per-hop work is an index
-    * lookup, not a shuffle). Scoped set/restore on session-global
-    * conf: concurrent work on the same session must not overlap a
-    * search (Bench warms these rows in its sequential lane for exactly
-    * this reason — the r10 shuffle-partitions leak lesson). */
-  private def withoutAqe[A](s: SparkSession)(body: => A): A = {
-    val k = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(k)
-    s.conf.set(k, "false")
-    try body finally s.conf.set(k, prev)
+  /** Run `body` on `emb` and `index` bound to a [[graft.Scope]] clone
+    * with AQE disabled; the hop frames `body` builds through the bound
+    * corpus's `sparkSession.implicits` land on the clone too. The
+    * traversal issues dozens of TINY broadcast-join actions per search;
+    * AQE's per-query stage planning measured ~40% of the whole row's
+    * wall at sf0.1 (single probe 2.5 → 1.45 s, 16-probe batch 4.4 →
+    * 2.7 s) while buying nothing — these plans carry no exchange AQE
+    * could re-optimize, and that stays true at any corpus size (the
+    * per-hop work is an index lookup, not a shuffle). */
+  private def withoutAqe[A](emb: DataFrame, index: GraphIndex)(
+      body: (DataFrame, GraphIndex) => A): A = {
+    val c = graft.Scope(emb.sparkSession, graft.Scope.aqeOff)
+    body(graft.Scope.bind(emb, c), index.copy(
+      adjacency = graft.Scope.bind(index.adjacency, c),
+      vectors = index.vectors.map(graft.Scope.bind(_, c))))
   }
 
   /** Greedy beam search for the `topK` nearest to `probeId`, seeded
     * from the index's per-cell entry points. */
   def search(emb: DataFrame, index: GraphIndex,
       probeId: Long, beam: Int, maxHops: Int,
-      topK: Int): SearchResult = withoutAqe(emb.sparkSession) {
+      topK: Int): SearchResult = withoutAqe(emb, index) { (emb, index) =>
     require(beam >= topK, s"beam $beam must cover topK $topK")
     import emb.sparkSession.implicits._
     val graph = index.adjacency
@@ -369,7 +369,8 @@ object AnnGraph {
     * single-probe path, plus the K-invariant job count. */
   def searchBatch(emb: DataFrame, index: GraphIndex, probeIds: Seq[Long],
       beam: Int, maxHops: Int,
-      topK: Int): Map[Long, SearchResult] = withoutAqe(emb.sparkSession) {
+      topK: Int): Map[Long, SearchResult] = withoutAqe(emb, index) {
+      (emb, index) =>
     require(beam >= topK, s"beam $beam must cover topK $topK")
     require(probeIds.nonEmpty, "searchBatch needs at least one probe")
     require(probeIds.distinct == probeIds, "probe ids must be distinct")

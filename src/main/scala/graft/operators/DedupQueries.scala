@@ -548,18 +548,23 @@ object DedupQueries {
     * @return (doc_id, canon_id) — canon_id = component minimum
     */
   object Components {
-    def labels(vertices: DataFrame, pairs: DataFrame): DataFrame =
-      // AQE off for the loop (r16, Dsl.withoutAqeForLoop): every round
+    def labels(vertices: DataFrame, pairs: DataFrame): DataFrame = {
+      // AQE off for the loop (r16), on a graft.Scope clone: every round
       // is a pre-sized bounded job; the per-stage re-optimization gaps
-      // cost more than they buy here. Callers sit in Bench's
-      // sequential-warm set.
-      graft.Dsl.withoutAqeForLoop(vertices.sparkSession) {
+      // cost more than they buy here. Measured r16 on idle 32 cores:
+      // the three label-propagation dedup rows each ~-0.1 s, while
+      // q_dedup_components_star's runtime broadcast conversions (2.09 →
+      // 4.99 s WITHOUT AQE) keep it on. The result is handed back on
+      // the caller's session.
+      val caller = vertices.sparkSession
+      val scoped = graft.Scope(caller, graft.Scope.aqeOff)
       val u = col("u"); val v = col("v")
-      val edges = pairs.select(u, v)
-        .union(pairs.select(v.as("u"), u.as("v")))
+      val p = graft.Scope.bind(pairs, scoped)
+      val edges = p.select(u, v)
+        .union(p.select(v.as("u"), u.as("v")))
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        var labels = vertices
+        var labels = graft.Scope.bind(vertices, scoped)
           .select(col("doc_id"), col("doc_id").as("canon_id"))
           .localCheckpoint(true)
         var changed = 1L
@@ -591,7 +596,7 @@ object DedupQueries {
         require(changed == 0,
           s"label propagation did not converge within $iter rounds — " +
             "component diameter exceeds the cap; use Components.star")
-        labels
+        graft.Scope.bind(labels, caller)
       } finally edges.unpersist()
     }
 

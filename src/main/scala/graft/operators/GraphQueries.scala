@@ -842,15 +842,14 @@ object GraphQueries {
       // edge set FOUR times (degree union ×2 + two semi joins), so an
       // unrolled chain re-derives round 1 4³ = 64 times by round 3 —
       // measured 29 s vs 1 s at sf0.1. Values unchanged.
-      // AQE off for the peel loop (r16, Dsl.withoutAqeForLoop): each
+      // AQE off for the peel loop (r16), on a graft.Scope clone: each
       // peel is a pre-sized bounded job; the per-stage re-optimization
       // gaps measured 3.04 → 1.79 s on idle 32 cores. Values unchanged.
-      val e = graft.Dsl.withoutAqeForLoop(s) {
-        var e0 = coEdges(s, dir)
-        for (_ <- 1 to 3) e0 = kcorePeel(s, e0, 2).localCheckpoint(true)
-        e0
-      }
-      nbOf(s, e).groupBy($"ctr").agg(count(lit(1)).as("deg"))
+      val scoped = graft.Scope(s, graft.Scope.aqeOff)
+      var e = graft.Scope.bind(coEdges(s, dir), scoped)
+      for (_ <- 1 to 3) e = kcorePeel(scoped, e, 2).localCheckpoint(true)
+      nbOf(s, graft.Scope.bind(e, s))
+        .groupBy($"ctr").agg(count(lit(1)).as("deg"))
         .select($"ctr".as("node"), $"deg")
         .orderBy($"node")
     },

@@ -433,11 +433,11 @@ object JoinQueries {
     * shuffling the whole fact table and shuffling the matching fifth —
     * the fact⋈fact analogue of DPP (which needs a partition column;
     * bloom filters work on any key). The thresholds assume cluster-scale
-    * scans (10 GB), so they are scoped to the fixture and the result is
-    * materialized UNDER the scope (optimization happens at action time —
-    * a lazily returned plan would optimize after the conf restore);
-    * broadcast is scoped off because the filter targets shuffle joins,
-    * which is what both sides being fact-sized forces anyway.
+    * scans (10 GB), so the row runs on a [[bloomScope]] clone sized to
+    * the fixture; the returned frame stays bound to it, so the action
+    * that runs it plans under the same conf. Broadcast is scoped off
+    * because the filter targets shuffle joins, which is what both sides
+    * being fact-sized forces anyway.
     * PlanAuditSpec asserts the bloom expression sits in the scan's
     * pushed data filters. Oracle = the same join unfiltered by any
     * bloom: the filter may only drop NON-matching rows. */
@@ -445,19 +445,16 @@ object JoinQueries {
     "q_join_bloom_filtered",
     (s, dir) => {
       import s.implicits._
-      val rows = withBloomConfs(s) {
-        val dim = Tables.orders(s, dir)
-          .where($"o_orderpriority" === "1-URGENT")
-          .select($"o_orderkey")
-        val joined = Tables.lineitem(s, dir)
-          .join(dim, $"l_orderkey" === $"o_orderkey")
-          .groupBy($"l_returnflag")
-          .agg(count(lit(1)).as("n_items"),
-            sumRevenue($"l_extendedprice", $"l_discount").as("revenue"))
-          .orderBy($"l_returnflag")
-        (joined.collect(), joined.schema)
-      }
-      s.createDataFrame(java.util.Arrays.asList(rows._1: _*), rows._2)
+      val scoped = bloomScope(s)
+      val dim = graft.Scope.bind(Tables.orders(s, dir), scoped)
+        .where($"o_orderpriority" === "1-URGENT")
+        .select($"o_orderkey")
+      graft.Scope.bind(Tables.lineitem(s, dir), scoped)
+        .join(dim, $"l_orderkey" === $"o_orderkey")
+        .groupBy($"l_returnflag")
+        .agg(count(lit(1)).as("n_items"),
+          sumRevenue($"l_extendedprice", $"l_discount").as("revenue"))
+        .orderBy($"l_returnflag")
     },
     oracle = Some(
       """SELECT l_returnflag, COUNT(*) AS n_items,
@@ -468,26 +465,17 @@ object JoinQueries {
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin))
 
-  /** Scope the runtime-bloom-filter confs around `body` and restore.
-    * Package-visible so PlanAuditSpec audits the identical scope. */
-  private[graft] def withBloomConfs[A](s: org.apache.spark.sql.SparkSession)(
-      body: => A): A = {
-    val scoped = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      // Default assumes a ≥10 GB application-side scan; the fixture is
-      // smaller, the plan shape is what's under test.
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      // Both sides fact-sized at 100 TB ⇒ shuffle join, the shape the
-      // filter exists for (a broadcast join IS already the filter).
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prior = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+  /** A [[graft.Scope]] clone of `s` carrying the runtime-bloom-filter
+    * confs. Package-visible so PlanAuditSpec audits the identical scope. */
+  private[graft] def bloomScope(s: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession = graft.Scope(s,
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    // Default assumes a ≥10 GB application-side scan; the fixture is
+    // smaller, the plan shape is what's under test.
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    // Both sides fact-sized at 100 TB ⇒ shuffle join, the shape the
+    // filter exists for (a broadcast join IS already the filter).
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   /** q_join_asof_nearest — the NEAREST direction of the as-of family
     * (pandas merge_asof direction='nearest' / kdb aj with both-sided

@@ -71,14 +71,11 @@ object LayoutQueries {
           // fewer than n files. Sizing maxPartitionBytes to the target
           // for this one rewrite makes the scan yield ≥ n partitions at
           // ANY scale, so coalesce(n) lands exactly n — still narrow, no
-          // shuffle. The conf lives on a CLONED session (isolated
-          // SQLConf, shared context) so a query planned concurrently on
-          // `s` never sees the tiny split size — set/restore on the
-          // shared conf would leak for the whole write job's duration.
-          val s2 = s.newSession()
-          s2.conf.set("spark.sql.files.maxPartitionBytes",
-            targetFileBytes.toString)
-          s2.read.parquet(frag).coalesce(n)
+          // shuffle. The conf lives on a graft.Scope clone, so a query
+          // planned concurrently on `s` never sees the tiny split size.
+          graft.Scope(s, "spark.sql.files.maxPartitionBytes" ->
+              targetFileBytes.toString)
+            .read.parquet(frag).coalesce(n)
             .write.mode("overwrite").parquet(compact)
           (frag, compact, n)
       }

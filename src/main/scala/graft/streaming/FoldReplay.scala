@@ -1,54 +1,47 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import graft.Scope
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.streaming.Trigger
 
 /** The shared foreachBatch replay runner (r12 review: this ~20-line
   * shape existed as EIGHT verbatim copies across the streaming rows):
-  * scope the replay's shuffle sizing (state-table shuffles carry
-  * state-sized rows, not corpus-sized — the 32-partition bench default
-  * would pay 32 tiny tasks per tiny shuffle), drive the streaming
-  * source through `fold` under AvailableNow, bound the wait, restore
-  * the conf even on failure. Rows whose per-batch work includes a
-  * corpus-scale aggregate (the banding rows) pass a larger
-  * `shufflePartitions`; crash-injection specs pass a `checkpoint` so a
-  * restart re-delivers the fenced batch. */
+  * run the replay on a [[graft.Scope]] clone that sizes its shuffles to
+  * state (state-table shuffles carry state-sized rows, not corpus-sized
+  * — the 32-partition bench default would pay 32 tiny tasks per tiny
+  * shuffle), drive the streaming source through `fold` under
+  * AvailableNow, bound the wait. The folds plan on `batch.sparkSession`,
+  * a child of the clone, so they inherit its conf. Rows whose per-batch
+  * work includes a corpus-scale aggregate (the banding rows) pass a
+  * larger `shufflePartitions`; crash-injection specs pass a
+  * `checkpoint` so a restart re-delivers the fenced batch. */
 private[graft] object FoldReplay {
   def run(src: DataFrame, name: String,
       shufflePartitions: String = "4",
       checkpoint: Option[String] = None)(
       fold: (DataFrame, Long) => Unit): Unit = {
     val s = src.sparkSession
-    val pKey = "spark.sql.shuffle.partitions"
-    val prevP = s.conf.get(pKey)
-    s.conf.set(pKey,
-      s.conf.get("spark.graft.replay.shufflePartitions", shufflePartitions))
-    // AQE off for the fold's micro-batch jobs (r15, scoped + restored):
-    // each per-batch state write is a SMALL bounded job, and AQE turns
-    // every one into a stage-by-stage sequence of jobs with a driver
-    // re-optimization between them — measured ~3 jobs per AppendLog
-    // write at fixture scale, with the inter-job driver gaps rivaling
-    // the task time (BenchProbe: job-time 2.9 s vs 4+ s of gaps per
-    // corpus-dedup rep). The replay already pins shuffle partitions to
-    // state size by hand, which is the decision AQE would be making.
-    // Overridable (spark.graft.replay.aqe) for deployments whose
-    // per-batch volumes are big enough that runtime re-optimization
-    // pays for its scheduling latency.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = s.conf.get(aqeKey)
-    s.conf.set(aqeKey, s.conf.get("spark.graft.replay.aqe", "false"))
+    // AQE off for the fold's micro-batch jobs (r15): each per-batch
+    // state write is a SMALL bounded job, and AQE turns every one into
+    // a stage-by-stage sequence of jobs with a driver re-optimization
+    // between them — measured ~3 jobs per AppendLog write at fixture
+    // scale, with the inter-job driver gaps rivaling the task time
+    // (BenchProbe: job-time 2.9 s vs 4+ s of gaps per corpus-dedup
+    // rep). The replay already pins shuffle partitions to state size by
+    // hand, which is the decision AQE would be making.
+    val scoped = Scope(s,
+      "spark.sql.shuffle.partitions" ->
+        s.conf.get("spark.graft.replay.shufflePartitions", shufflePartitions),
+      Scope.aqeOff)
+    var w = Scope.bind(src, scoped).writeStream.trigger(Trigger.AvailableNow())
+    checkpoint.foreach(c => w = w.option("checkpointLocation", c))
     try {
-      var w = src.writeStream.trigger(Trigger.AvailableNow())
-      checkpoint.foreach(c => w = w.option("checkpointLocation", c))
       val q = w.foreachBatch((b: DataFrame, id: Long) => fold(b, id)).start()
       if (!q.awaitTermination(300000)) {
         q.stop()
         throw new IllegalStateException(
           s"$name replay did not finish within 300 s")
       }
-    } finally {
-      s.conf.set(pKey, prevP)
-      s.conf.set(aqeKey, prevAqe)
-    }
+    } finally GraftShims.releaseStreams(scoped, s)
   }
 }

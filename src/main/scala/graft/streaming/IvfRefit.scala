@@ -281,7 +281,7 @@ object IvfRefit {
     * invocation so every rep refits the SAME generation (the report is
     * a pure function of the corpus; without the reset rep 2 would refit
     * the already-refit index). Runs a streaming replay inside (the
-    * stats fold), so Bench treats it as conf-scoped/sequential-only. */
+    * stats fold). */
   val qVecIndexRefit: Q = Q(
     "q_vec_index_refit",
     (s, dir) => {

@@ -52,8 +52,7 @@ import org.apache.spark.sql.functions._
   * Bench-cost honesty: like q_vec_index_refit, each rep resets and
   * re-bootstraps the generation store so every rep refits the SAME
   * generation; the one-time stats replay lands behind the run-once
-  * latch in warmup. Runs a streaming replay inside a batch-named row ⇒
-  * Bench treats it as conf-scoped/sequential-only.
+  * latch in warmup. Runs a streaming replay inside a batch-named row.
   *
   * T-row (k-means state + the generation store are un-SQL-able):
   * PqRefitSpec pins stats-path == batch M-step, the train(iters+1)

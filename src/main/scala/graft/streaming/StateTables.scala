@@ -181,16 +181,10 @@ private[graft] object Snapshot {
     * file costing its own create, permission set, rename and footer
     * read (all in-process since graft.io.LocalFs; stock Hadoop without
     * libhadoop forked a `chmod` per file). One file per commit is the
-    * right layout for state-bounded tables at any scale; a deployment
-    * whose per-batch segments are large sizes them with
-    * spark.graft.state.writePartitions (the lakehouse target-file-size
-    * knob). repartition, not coalesce: coalesce would collapse the
-    * upstream fold's parallelism into the single write task. */
-  def sized(df: DataFrame): DataFrame = {
-    val n = df.sparkSession.conf
-      .get("spark.graft.state.writePartitions", "1").toInt
-    if (n <= 0) df else df.repartition(n)
-  }
+    * right layout for state-bounded tables at any scale. repartition,
+    * not coalesce: coalesce would collapse the upstream fold's
+    * parallelism into the single write task. */
+  def sized(df: DataFrame): DataFrame = df.repartition(1)
 
   /** Recursive delete through the resolved FileSystem; a no-op when
     * the path does not exist. */

@@ -240,7 +240,8 @@ object StreamVecSearch {
       val src = s.readStream.schema(QueryStage.schema(s, inDir))
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       FoldReplay.run(src, "q_stream_vec_search") { (batch, id) =>
-        foldBatch(results, pathPostings(s, postings), cb, batch, id)
+        foldBatch(results, pathPostings(batch.sparkSession, postings), cb,
+          batch, id)
       }
       AppendLog.read(s, results).getOrElse(throw new IllegalStateException(
           s"results log at $results has no committed segments"))

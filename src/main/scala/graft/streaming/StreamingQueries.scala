@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.{Q, Tables}
 import graft.Dsl._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -234,11 +234,12 @@ object StreamingQueries {
       * (q_stream_stateful_tws' eviction tombstones) and outer-join
       * null padding (q_stream_stream_outer) both fire exactly when the
       * watermark advances past the data — with the batch disabled they
-      * would silently emit nothing. Scoped + restored like the
-      * shuffle-partition knob. */
+      * would silently emit nothing. Scoped like the shuffle-partition
+      * knob. `conf`: further settings for the replay's scope. */
     def run(
         s: SparkSession, dir: String, name: String, mode: String,
-        updateKeys: Seq[String] = Nil, watermarkBatch: Boolean = false)(
+        updateKeys: Seq[String] = Nil, watermarkBatch: Boolean = false,
+        conf: Seq[(String, String)] = Nil)(
         transform: DataFrame => DataFrame): DataFrame = {
       require(mode != "update" || updateKeys.nonEmpty,
         "update-mode replay needs the delta key to reconcile multi-batch output")
@@ -253,19 +254,18 @@ object StreamingQueries {
       // 4 shaves the store setup further with state still ≤ a few
       // hundred keys per store. A
       // 100 TB stream sets this to match its key cardinality instead;
-      // the knob is per-query (scoped + restored), exactly as a
+      // the knob is per-query (a graft.Scope clone), exactly as a
       // production job configures its own trigger. It stays OVERRIDABLE
       // (spark.graft.replay.shufflePartitions) so DeterminismSpec's
       // partition sweep really varies the streaming state layout instead
       // of being silently pinned to one value.
-      val pKey = "spark.sql.shuffle.partitions"
-      val prevP = s.conf.get(pKey)
-      s.conf.set(pKey, s.conf.get("spark.graft.replay.shufflePartitions", "4"))
-      val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prevNd = s.conf.get(ndKey)
-      s.conf.set(ndKey, watermarkBatch.toString)
-      val landed = try {
-        val q = transform(src)
+      val scoped = graft.Scope(s, conf ++ Seq(
+        "spark.sql.shuffle.partitions" ->
+          s.conf.get("spark.graft.replay.shufflePartitions", "4"),
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          watermarkBatch.toString): _*)
+      try {
+        val q = transform(graft.Scope.bind(src, scoped))
           .writeStream
           .outputMode(mode)
           .trigger(Trigger.AvailableNow())
@@ -279,11 +279,8 @@ object StreamingQueries {
             s"streaming replay '$name' did not finish within 300 s — " +
               "refusing to read a partial result")
         }
-        s.read.parquet(out)
-      } finally {
-        s.conf.set(pKey, prevP)
-        s.conf.set(ndKey, prevNd)
-      }
+      } finally GraftShims.releaseStreams(scoped, s)
+      val landed = s.read.parquet(out)
       // Delta modes carry `_batch` as a partition column (see landBatch);
       // update mode reconciles on it, append mode just drops it (no-op
       // for complete mode, which has no such column).
@@ -418,24 +415,19 @@ object StreamingQueries {
     * exact expected eviction set batch-side and pins it. */
   val qStreamStatefulTws: Q = Q(
     "q_stream_stateful_tws",
-    (s, dir) => {
-      // transformWithState requires the RocksDB provider; scope the
-      // switch to this replay and restore (a shared session must not
-      // leak provider changes into later HDFS-backed stateful queries).
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try Replay.run(s, dir, "stateful_tws", "update",
-        updateKeys = Seq("user_id"), watermarkBatch = true) { df =>
+    (s, dir) =>
+      // transformWithState requires the RocksDB provider; it rides in
+      // the replay's scope, so later HDFS-backed stateful queries on
+      // the caller's session keep their provider.
+      Replay.run(s, dir, "stateful_tws", "update",
+        updateKeys = Seq("user_id"), watermarkBatch = true,
+        conf = Seq("spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider"))) { df =>
         import df.sparkSession.implicits._
         StatefulCountsTws(
           df.withWatermark("ts", "10 minutes").as[StatefulCounts.Ev]).toDF()
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
-    })
+      })
 
   /** Doc counts are fixture constants — cache per (session, dir) so the
     * bench's repeated reps don't pay a count() job each (it was ~15% of

@@ -222,8 +222,7 @@ object TokenizerRefit {
     * full-stream word counts, report the per-entry drift. Generation
     * root resets per invocation so every rep refits the SAME
     * generation; the one-time stats replay lands behind the run-once
-    * latch in warmup. q_stream_* ⇒ Bench runs it sequentially (the
-    * replay's scoped conf set/restore). */
+    * latch in warmup. q_stream_* ⇒ Bench warms it sequentially. */
   val qStreamTokenizerRefit: Q = Q(
     "q_stream_tokenizer_refit",
     (s, dir) => {

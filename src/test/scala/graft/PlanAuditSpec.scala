@@ -53,11 +53,12 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
 
   test("q_join_bloom_filtered injects a runtime bloom filter into the fact scan") {
     import spark.implicits._
-    operators.JoinQueries.withBloomConfs(spark) {
-      val dim = Tables.orders(spark, sfDir)
+    val scoped = operators.JoinQueries.bloomScope(spark)
+    locally {
+      val dim = Scope.bind(Tables.orders(spark, sfDir), scoped)
         .where($"o_orderpriority" === "1-URGENT")
         .select($"o_orderkey")
-      val joined = Tables.lineitem(spark, sfDir)
+      val joined = Scope.bind(Tables.lineitem(spark, sfDir), scoped)
         .join(dim, $"l_orderkey" === $"o_orderkey")
         .groupBy($"l_returnflag")
         .agg(org.apache.spark.sql.functions.count(
@@ -439,12 +440,14 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     // warehouse-scale SMJ would get (the app-side size gate exists only
     // to skip the overhead on small scans; broadcast is disabled because
     // a broadcast join already prunes via its hashed relation).
-    // Same scope as the product query — withBloomConfs exists precisely
-    // so this audit and q_join_bloom_filtered can never drift apart.
+    // Same scope as the product query — bloomScope exists precisely so
+    // this audit and q_join_bloom_filtered can never drift apart.
     import org.apache.spark.sql.functions.col
-    operators.JoinQueries.withBloomConfs(spark) {
-      val dim = Tables.orders(spark, sfDir).where(col("o_orderstatus") === "P")
-      val fact = Tables.lineitem(spark, sfDir)
+    val scoped = operators.JoinQueries.bloomScope(spark)
+    locally {
+      val dim = Scope.bind(Tables.orders(spark, sfDir), scoped)
+        .where(col("o_orderstatus") === "P")
+      val fact = Scope.bind(Tables.lineitem(spark, sfDir), scoped)
       val j = fact.join(dim, col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey"), col("l_quantity"))
       val p = j.queryExecution.optimizedPlan.toString
