@@ -446,9 +446,9 @@ object Bench {
       if (before != now) Some(s"$k: $before -> $now") else None
     }
     require(confDrift.isEmpty,
-      s"warm phase leaked session conf: $confDrift — a scoped " +
-        "set/restore raced; fix the offending build (or add it to the " +
-        "sequential-only set) before trusting any timing")
+      s"warm phase leaked session conf: $confDrift — a build wrote " +
+        "conf on the caller's session instead of a graft.Scope clone; " +
+        "move that conf onto a clone before trusting any timing")
     val warmupSec = warmItems.map(_._2).sum
     // A crashed query must never look like a fast one: record the error
     // and surface it in the JSON (errors list + "error" sentinel value).

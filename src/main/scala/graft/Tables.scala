@@ -1,24 +1,74 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.TimeUnit
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Fixture-table readers (schemas documented in FIXTURES.md).
   *
-  * Schemas come from the parquet footers (fixed, driver-generated) — at
-  * 100 TB the same call works unchanged because Spark reads the footer of
-  * one file per table, not the data. Scale note (SURVEY.md §7): production
-  * tables would be date-partitioned directories; `spark.read.parquet(dir)`
-  * plus partition pruning handles that with the same code path.
+  * Every read is bound to the table's schema. A schema-less
+  * `spark.read.parquet(path)` infers the schema from the footers, and
+  * Spark runs that inference as a job, one per read, even for a single
+  * file. Here the schema is inferred once per JVM for each (file,
+  * stamp, inference conf) and passed to `.schema(...)`, so building a
+  * frame costs a file listing and no job. The stamp is the file's
+  * size, mtime and file key, so a rewritten fixture is inferred again:
+  * a bound read would silently null a column the file no longer has.
+  * The key holds no session, so a `graft.Scope` clone hits the same
+  * entry unless it changed an inference conf. A path that is not a
+  * regular local file (a directory, a URI) is read unbound. Scale note
+  * (SURVEY.md §7): production tables would be date-partitioned
+  * directories; `spark.read.parquet(dir)` plus partition pruning
+  * handles that with the same code path, at the cost of the one
+  * inference job per read.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Every conf that changes which footers inference reads or how a
+    * footer converts to a Spark schema (`ParquetUtils.inferSchema` and
+    * `ParquetToSparkSchemaConverter`'s inputs in Spark 4.1). */
+  private val inferenceConf: Seq[String] = Seq(
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  private val schemas =
+    new Memo[(String, Long, Long, AnyRef, Seq[String]), StructType]
+
+  /** `spark.read.parquet` of the table's file, bound to its memoized
+    * schema. */
+  def apply(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val stat =
+      try {
+        val p = Paths.get(path).toAbsolutePath.normalize
+        Some(p -> Files.readAttributes(p, classOf[BasicFileAttributes]))
+      } catch { case _: Exception => None }
+    stat.filter(_._2.isRegularFile) match {
+      case Some((p, a)) =>
+        val conf = s.sessionState.conf
+        val key = (p.toString, a.size,
+          a.lastModifiedTime.to(TimeUnit.NANOSECONDS), a.fileKey,
+          inferenceConf.map(conf.getConfString))
+        s.read.schema(schemas(key)(s.read.parquet(path).schema)).parquet(path)
+      case None => s.read.parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

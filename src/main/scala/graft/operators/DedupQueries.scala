@@ -544,7 +544,9 @@ object DedupQueries {
     *                 endpoint MUST appear in `vertices` — propagation
     *                 left-joins onto `vertices`, so an endpoint missing
     *                 there gets no label row and is silently dropped
-    *                 (every current caller derives both from one table)
+    *                 (every current caller derives both from one table
+    *                 through `componentGraph`, which ComponentsSpec
+    *                 checks for dangling endpoints)
     * @return (doc_id, canon_id) — canon_id = component minimum
     */
   object Components {
@@ -718,12 +720,18 @@ object DedupQueries {
       .select($"u", $"v")
   }
 
+  /** The (vertices, pairs) graph every components row clusters: each
+    * shingled doc as a vertex and the [[nearDupPairs]] edges, whose
+    * endpoints are drawn from the same docs. */
+  private[graft] def componentGraph(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) =
+    (Shingled(s, dir).select(col("doc_id")), nearDupPairs(s, dir))
+
   val qDedupComponents: Q = Q(
     "q_dedup_components",
     (s, dir) => {
       import s.implicits._
-      Components.labels(
-          Shingled(s, dir).select($"doc_id"), nearDupPairs(s, dir))
+      (Components.labels _).tupled(componentGraph(s, dir))
         .orderBy($"doc_id")
     },
     oracle = Some(componentLabelsSql(
@@ -770,8 +778,7 @@ object DedupQueries {
     "q_dedup_cluster_sizes",
     (s, dir) => {
       import s.implicits._
-      Components.labels(
-          Shingled(s, dir).select($"doc_id"), nearDupPairs(s, dir))
+      (Components.labels _).tupled(componentGraph(s, dir))
         .groupBy($"canon_id").agg(count(lit(1)).as("sz"))
         .groupBy($"sz").agg(count(lit(1)).as("n_clusters"))
         .orderBy($"sz")
@@ -801,8 +808,7 @@ object DedupQueries {
     "q_dedup_canonical",
     (s, dir) => {
       import s.implicits._
-      val labels = Components.labels(
-        Shingled(s, dir).select($"doc_id"), nearDupPairs(s, dir))
+      val labels = (Components.labels _).tupled(componentGraph(s, dir))
       val lens = Tables.documents(s, dir)
         .select($"doc_id", length($"text").cast(LongType).as("keep_chars"))
       labels.join(lens, "doc_id")
@@ -837,8 +843,7 @@ object DedupQueries {
     "q_dedup_components_star",
     (s, dir) => {
       import s.implicits._
-      Components.star(
-          Shingled(s, dir).select($"doc_id"), nearDupPairs(s, dir))
+      (Components.star _).tupled(componentGraph(s, dir))
         .orderBy($"doc_id")
     },
     oracle = qDedupComponents.oracle)

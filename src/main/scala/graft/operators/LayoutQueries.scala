@@ -4,6 +4,7 @@ import graft.{Q, Tables}
 import graft.Dsl._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Data-layout operators — small-file compaction and sort-clustered
   * writes (SURVEY.md §2 extension, r7). Derivation: north-star ETL; at
@@ -36,6 +37,25 @@ object LayoutQueries {
       * non-degenerate at every SF (>1 input file merges into ≥1 output
       * file, and at sf0.1 into >1, exercising the ceil). */
     val targetFileBytes: Long = 1L << 21 // 2 MiB
+
+    /** Each built dir's schema, inferred once right after its write
+      * inside the same memo build, so the layout rows read it bound
+      * (one file listing, no inference job per row build). Keyed like
+      * the builds. */
+    private val schemas = new graft.Memo[(SparkSession, String), StructType]
+
+    private def schemaOf(s: SparkSession, out: String): StructType =
+      schemas((s, out))(s.read.parquet(out).schema)
+
+    private def written(s: SparkSession, out: String): String = {
+      schemaOf(s, out)
+      out
+    }
+
+    /** `s.read.parquet(out)` for a dir a builder below returned, bound
+      * to the schema inferred when it was written. */
+    def read(s: SparkSession, out: String): DataFrame =
+      s.read.schema(schemaOf(s, out)).parquet(out)
 
     /** Returns (fragmentedDir, compactedDir, nCompactedFiles).
       *
@@ -77,7 +97,7 @@ object LayoutQueries {
               targetFileBytes.toString)
             .read.parquet(frag).coalesce(n)
             .write.mode("overwrite").parquet(compact)
-          (frag, compact, n)
+          (frag, written(s, compact), n)
       }
 
     /** Sort-clustered events: range-partitioned on user_id into 8 files,
@@ -98,7 +118,7 @@ object LayoutQueries {
             .repartitionByRange(8, col("user_id"))
             .sortWithinPartitions(col("user_id"), col("ts"))
             .write.mode("overwrite").parquet(out)
-          out
+          written(s, out)
       }
 
     /** Range-normalize `x` from [lo, hi] onto the full 16-bit lattice.
@@ -145,12 +165,13 @@ object LayoutQueries {
       zorderCache((s, dir)) {
           val out = root.resolve(dir.replaceAll("[^A-Za-z0-9.]+", "_"))
             .resolve("events_zorder").toString
-          val ev = Tables.events(s, dir)
+          val events = Tables.events(s, dir)
+          val ev = events
             .withColumn("ud", expr("unix_micros(ts) div 86400000000"))
           val bounds = ev.agg(
             min(col("user_id")).as("ulo"), max(col("user_id")).as("uhi"),
             min(col("ud")).as("dlo"), max(col("ud")).as("dhi"))
-          val cols = Tables.events(s, dir).columns.map(col)
+          val cols = events.columns.map(col)
           ev.crossJoin(broadcast(bounds))
             .withColumn("su", scale16(col("user_id"), col("ulo"), col("uhi")))
             .withColumn("sd", scale16(col("ud"), col("dlo"), col("dhi")))
@@ -159,7 +180,7 @@ object LayoutQueries {
             .sortWithinPartitions(col("z"))
             .select(cols: _*)
             .write.mode("overwrite").parquet(out)
-          out
+          written(s, out)
       }
 
     /** Hive-style partitioned events (`event_type=.../`): the directory
@@ -177,7 +198,7 @@ object LayoutQueries {
           Tables.events(s, dir)
             .write.partitionBy("event_type")
             .mode("overwrite").parquet(out)
-          out
+          written(s, out)
       }
 
     /** File-backed event-type dimension (type → funnel category) for
@@ -199,7 +220,7 @@ object LayoutQueries {
                 "conversion").otherwise("engagement"))
             .coalesce(1)
             .write.mode("overwrite").parquet(out)
-          out
+          written(s, out)
       }
   }
 
@@ -213,7 +234,7 @@ object LayoutQueries {
     (s, dir) => {
       import s.implicits._
       val (_, compact, _) = Maintained(s, dir)
-      s.read.parquet(compact)
+      Maintained.read(s, compact)
         .groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
           sumMoney($"o_totalprice").as("revenue"))
@@ -237,7 +258,7 @@ object LayoutQueries {
     (s, dir) => {
       import s.implicits._
       val sorted = Maintained.sortedEvents(s, dir)
-      s.read.parquet(sorted)
+      Maintained.read(s, sorted)
         .where($"user_id" <= 1)
         .groupBy($"user_id", $"event_type")
         .agg(count(lit(1)).as("n"), sumMoney($"value").as("sum_value"))
@@ -263,7 +284,7 @@ object LayoutQueries {
     (s, dir) => {
       import s.implicits._
       val parted = Maintained.partitionedEvents(s, dir)
-      s.read.parquet(parted)
+      Maintained.read(s, parted)
         .where($"event_type" === "purchase")
         .groupBy(date_trunc("day", $"ts").cast("timestamp_ntz").as("day"))
         .agg(count(lit(1)).as("n"), sumMoney($"value").as("sum_value"))
@@ -292,7 +313,7 @@ object LayoutQueries {
     (s, dir) => {
       import s.implicits._
       val z = Maintained.zorderedEvents(s, dir)
-      s.read.parquet(z)
+      Maintained.read(s, z)
         .where($"user_id".between(2, 5) &&
           $"ts" < lit("2024-01-11 00:00:00").cast("timestamp"))
         .groupBy($"event_type")
@@ -326,8 +347,8 @@ object LayoutQueries {
     "q_layout_dpp",
     (s, dir) => {
       import s.implicits._
-      val fact = s.read.parquet(Maintained.partitionedEvents(s, dir))
-      val dim = s.read.parquet(Maintained.typeDim(s, dir))
+      val fact = Maintained.read(s, Maintained.partitionedEvents(s, dir))
+      val dim = Maintained.read(s, Maintained.typeDim(s, dir))
       fact.join(dim, Seq("event_type"))
         .where($"category" === "conversion")
         .groupBy($"event_type")

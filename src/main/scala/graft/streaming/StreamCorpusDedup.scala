@@ -156,7 +156,7 @@ object StreamCorpusDedup {
     * that makes the both-directions flag update load-bearing). */
   private[graft] val DocStage: ChunkStage = new ChunkStage(
     "graft_stream_corpusdedup", "doc_id",
-    (s, dir) => s.read.parquet(s"$dir/documents.parquet")
+    (s, dir) => graft.Tables.documents(s, dir)
       .select(col("doc_id"), col("text")))
 
   /** q_stream_dedup_corpus (T) — the verdict table after the staged

@@ -108,7 +108,7 @@ object StreamVecIndex {
     * disjoint and test nothing; the UpsertStage rule). */
   private[graft] val VecStage: ChunkStage = new ChunkStage(
     "graft_stream_vecindex", "vec_id",
-    (s, dir) => s.read.parquet(s"$dir/embeddings.parquet")
+    (s, dir) => graft.Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding")))
 
   /** Run the maintenance replay: assign each micro-batch against the

@@ -571,7 +571,7 @@ object StreamingQueries {
     * trivially disjoint and test nothing). */
   private[graft] val UpsertStage: ChunkStage = new ChunkStage(
     "graft_stream_upsert", "event_id",
-    (s, dir) => s.read.parquet(s"$dir/events.parquet"))
+    (s, dir) => graft.Tables(s, dir, "events"))
 
   /** q_stream_upsert (added r8) — STREAMING UPSERT SINK: each
     * micro-batch is MERGED into a keyed parquet state table via

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.DedupQueries.Components
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected-components label propagation (q_dedup_components' engine).
@@ -36,6 +38,31 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
       Seq((10L, 11L), (21L, 20L), (21L, 22L)))
     assert(got == Map(10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 30L -> 30L))
+  }
+
+  /** The endpoints of `pairs` missing from `vertices`: the ones labels
+    * and star left-join away silently. */
+  private def dangling(vertices: DataFrame, pairs: DataFrame): Set[Long] =
+    pairs.select(col("u").as("doc_id"))
+      .union(pairs.select(col("v").as("doc_id")))
+      .distinct()
+      .join(vertices.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .collect().map(_.getLong(0)).toSet
+
+  test("every components row's edge endpoints are vertices (sf0.001)") {
+    // componentGraph feeds all four components rows.
+    val (vertices, pairs) = graft.operators.DedupQueries.componentGraph(spark, sfDir)
+    assert(pairs.count() > 0, "the fixture graph should have edges")
+    assert(dangling(vertices, pairs).isEmpty)
+  }
+
+  test("a planted dangling edge is detected") {
+    val got = dangling(
+        Seq(1L, 2L, 3L).toDF("doc_id"),
+        Seq((1L, 2L), (3L, 99L), (98L, 2L)).toDF("u", "v"))
+    assert(got == Set(98L, 99L))
+    // What the check guards against: labels drops the endpoint.
+    assert(!run(Seq(1L, 2L, 3L), Seq((3L, 99L))).contains(99L))
   }
 
   // ---- Components.star: the O(log n)-round large-star/small-star form.
