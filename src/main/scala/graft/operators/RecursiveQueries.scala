@@ -74,7 +74,7 @@ object RecursiveQueries {
       // BLOCKED recursion (r16, guide §1.2 "the distributed algorithm"):
       // Spark executes each recursive step as its own job, so the
       // day-per-step form paid ~150 job round-trips of pure scheduling
-      // for microseconds of work each (BenchProbe: 159 jobs, 2.8 s of
+      // for microseconds of work each (Tool probe: 159 jobs, 2.8 s of
       // job time under 4–5 s of inter-job driver gaps). One step now
       // advances a BLOCK of 16 days: the bounded seq table is
       // pre-grouped into per-type blocks of (i, day, y) triples

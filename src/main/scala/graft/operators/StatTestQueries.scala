@@ -1100,7 +1100,7 @@ object StatTestQueries {
       // second explode, once per (row, g).
       // Repartition BEFORE the fan-out (r16, guide §2.5 input skew):
       // the events parquet at bench scale is ONE split, so the whole
-      // 64× explode + md5 + partial agg ran as ONE task (BenchProbe:
+      // 64× explode + md5 + partial agg ran as ONE task (Tool probe:
       // a 1.7 s single-task job inside a 2.0 s row). The exchange
       // moves only the narrow (type, id, c) base rows — the 64×
       // multiplication happens after, spread across the cores — and

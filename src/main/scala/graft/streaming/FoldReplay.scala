@@ -26,7 +26,7 @@ private[graft] object FoldReplay {
     // a stage-by-stage sequence of jobs with a driver re-optimization
     // between them — measured ~3 jobs per AppendLog write at fixture
     // scale, with the inter-job driver gaps rivaling the task time
-    // (BenchProbe: job-time 2.9 s vs 4+ s of gaps per corpus-dedup
+    // (Tool probe: job-time 2.9 s vs 4+ s of gaps per corpus-dedup
     // rep). The replay already pins shuffle partitions to state size by
     // hand, which is the decision AQE would be making.
     val scoped = Scope(s,

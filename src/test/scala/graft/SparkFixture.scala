@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for all specs (SURVEY.md §5 item 2).
   * One session per test JVM (Test/fork := true) — specs must not stop it.
-  * Config mirrors Verify.scala so specs exercise the same read paths
-  * (UTC, µs parquet timestamps, events-nanos legacy read). */
+  * Built by [[Sessions.local]] at 4 cpus, so specs run under the same
+  * conf as Verify and Bench (UTC, µs parquet timestamps, events-nanos
+  * legacy read, v2 committer without `_SUCCESS`). */
 trait SparkFixture {
   lazy val spark: SparkSession = SparkFixture.session
   val sfDir = "/root/testdata/sf0.001"
@@ -13,15 +14,7 @@ trait SparkFixture {
 
 object SparkFixture {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("4")
     s.sparkContext.setLogLevel("WARN")
     s
   }
