@@ -26,7 +26,9 @@ import scala.jdk.CollectionConverters._
   *  - `probe <row>`: one row, warmed once, then every Spark job each of
   *    [[Reps]] reps launched (wall, stages, tasks), so a multi-job row
   *    (streaming replays, iterative loops, state-table folds) is
-  *    attributable job by job instead of one opaque median.
+  *    attributable job by job instead of one opaque median. A replay's
+  *    job is labelled `<row> batch = N`; a job with no description by
+  *    its stage names.
   *  - `plan <row[,row...]>`: each row's `.explain("formatted")` plan, to
   *    stdout or to `<outDir>/<row>_<suffix>.txt`. A replay row's build
   *    runs the replay first, so the plan is the one the timed action
@@ -105,6 +107,14 @@ object Tool {
     val taskMs = ArrayBuffer.empty[Long]
   }
 
+  /** A job description's label: its first line, plus the `batch = N`
+    * line of a streaming micro-batch's description
+    * (`<query name>\nid = …\nrunId = …\nbatch = N`). */
+  private[graft] def label(desc: String): String = {
+    val lines = desc.split('\n')
+    (lines.head +: lines.tail.filter(_.startsWith("batch = "))).mkString(" ")
+  }
+
   private def probe(s: SparkSession, dir: String, q: Q): Unit = {
     val jobs = new ConcurrentHashMap[Int, Job]
     // Tasks attribute to their job through the stageId→jobId map each
@@ -118,7 +128,7 @@ object Tool {
         if (recording.get()) {
           val d = Option(e.properties)
             .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .filter(_.nonEmpty)
+            .filter(_.nonEmpty).map(label)
             .getOrElse(e.stageInfos.map(_.name.takeWhile(_ != '\n'))
               .distinct.mkString(" | "))
           jobs.put(e.jobId, new Job(e.jobId, d, e.time, e.stageIds.size))

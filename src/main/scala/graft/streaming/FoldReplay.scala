@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.Scope
-import org.apache.spark.sql.{DataFrame, GraftShims}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The shared foreachBatch replay runner (r12 review: this ~20-line
   * shape existed as EIGHT verbatim copies across the streaming rows):
@@ -33,15 +33,29 @@ private[graft] object FoldReplay {
       "spark.sql.shuffle.partitions" ->
         s.conf.get("spark.graft.replay.shufflePartitions", shufflePartitions),
       Scope.aqeOff)
-    var w = Scope.bind(src, scoped).writeStream.trigger(Trigger.AvailableNow())
+    var w = Scope.bind(src, scoped).writeStream.queryName(name)
+      .trigger(Trigger.AvailableNow())
     checkpoint.foreach(c => w = w.option("checkpointLocation", c))
+    drive(s, scoped, name)(
+      w.foreachBatch((b: DataFrame, id: Long) => fold(b, id)).start())
+  }
+
+  /** Run one replay query that `start` starts on `scoped`, a clone of
+    * `s`, to completion (bounded wait), then release the clone's
+    * streams. `s`'s streaming listeners see the query's progress: they
+    * are forwarded to the clone's manager first. The query is named
+    * `name`, so every job a micro-batch starts carries
+    * `<name>\nid = …\nrunId = …\nbatch = N` as its description. */
+  private[streaming] def drive(s: SparkSession, scoped: SparkSession,
+      name: String)(start: => StreamingQuery): Unit = {
+    val forwarded = GraftShims.forwardListeners(scoped, s)
     try {
-      val q = w.foreachBatch((b: DataFrame, id: Long) => fold(b, id)).start()
+      val q = start
       if (!q.awaitTermination(300000)) {
         q.stop()
         throw new IllegalStateException(
           s"$name replay did not finish within 300 s")
       }
-    } finally GraftShims.releaseStreams(scoped, s)
+    } finally GraftShims.releaseStreams(scoped, s, forwarded)
   }
 }

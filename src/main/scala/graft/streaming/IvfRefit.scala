@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** IVF CODEBOOK REFIT — the offline maintenance event that closes the
   * index-lifecycle loop (r12 verdict ask #1): [[StreamVecIndex]]
@@ -112,11 +113,9 @@ object IvfRefit {
     }
 
     def readCodebook(s: SparkSession, root: String): Seq[Array[Float]] = {
-      val dir = Snapshot.currentManifest(root).flatMap(_.get("codebook"))
-        .map(Snapshot.versionPath(root, _))
+      val rows = Snapshot.readSelected(s, root)(_.get("codebook"))
         .getOrElse(throw new IllegalStateException(
           s"generation store at $root has no committed codebook"))
-      val rows = s.read.parquet(dir)
         .select(col("cell"), col("pos"), col("c_micro"))
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
       val k = rows.map(_._1).max + 1
@@ -129,16 +128,12 @@ object IvfRefit {
     /** The committed postings: union of every cell key's directory
       * (the data files carry the `cell` column — partition-dir
       * recovery would break across mixed version basePaths). */
-    def readPostings(s: SparkSession, root: String): DataFrame = {
-      val dirs = Snapshot.currentManifest(root).getOrElse(Map.empty)
-        .collect { case (k, v) if k.startsWith("cell") =>
-          Snapshot.versionPath(root, v) }
-        .toSeq.sorted
-      if (dirs.isEmpty) throw new IllegalStateException(
-        s"generation store at $root holds no postings")
-      s.read.parquet(dirs: _*)
+    def readPostings(s: SparkSession, root: String): DataFrame =
+      Snapshot.readSelected(s, root)(_.collect {
+        case (k, v) if k.startsWith("cell") => v })
+        .getOrElse(throw new IllegalStateException(
+          s"generation store at $root holds no postings"))
         .select(col("vec_id"), col("embedding"), col("cell"))
-    }
 
     /** Bootstrap generation 0: assign the corpus (vec_id, embedding)
       * under `cb`, lay the postings out one directory per occupied
@@ -147,20 +142,17 @@ object IvfRefit {
         cb: Seq[Array[Float]]): Unit = {
       val assigned = AnnIvf.assign(
         corpus.select(col("vec_id"), col("embedding")), cb)
-      val vP = Snapshot.nextVersion(root)
-      assigned
-        .select(col("vec_id"), col("embedding"), col("cell"),
-          col("cell").as("pcell"))
-        .write.mode("overwrite").partitionBy("pcell")
-        .parquet(Snapshot.versionPath(root, vP))
+      val (vP, postings) = Snapshot.write(root,
+        assigned.select(col("vec_id"), col("embedding"), col("cell"),
+          col("cell").as("pcell")),
+        "pcell")
       val occupied = assigned.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val vC = Snapshot.nextVersion(root)
-      codebookRows(s, cb).write.mode("overwrite")
-        .parquet(Snapshot.versionPath(root, vC))
+      val (vC, book) = Snapshot.write(root, codebookRows(s, cb))
       Snapshot.commit(root,
         occupied.map(c => s"cell$c" -> s"$vP/pcell=$c").toMap +
-          ("codebook" -> vC))
+          ("codebook" -> vC),
+        Map(vP -> postings, vC -> book))
     }
   }
 
@@ -216,29 +208,28 @@ object IvfRefit {
       }.toSet
       // The delta write: ONLY affected cells' new content. Unaffected
       // cells keep their committed directories by manifest pointer.
-      val manifest: Snapshot.Manifest =
-        if (affected.isEmpty) prior
+      val (manifest, written) =
+        if (affected.isEmpty) (prior, Map.empty[String, StructType])
         else {
-          val vP = Snapshot.nextVersion(root)
-          assigned.where(col("cell_new").isin(affected.toSeq: _*))
-            .select(col("vec_id"), col("embedding"),
-              col("cell_new").as("cell"), col("cell_new").as("pcell"))
-            .write.mode("overwrite").partitionBy("pcell")
-            .parquet(Snapshot.versionPath(root, vP))
+          val (vP, schema) = Snapshot.write(root,
+            assigned.where(col("cell_new").isin(affected.toSeq: _*))
+              .select(col("vec_id"), col("embedding"),
+                col("cell_new").as("cell"), col("cell_new").as("pcell")),
+            "pcell")
           val emptied = moved.collect {
             case (c, _, _, _, nNew) if affected(c) && nNew == 0L => c
           }
-          prior --
+          (prior --
             emptied.map(c => s"cell$c") ++
             moved.collect { case (c, _, _, _, nNew)
-              if affected(c) && nNew > 0L => s"cell$c" -> s"$vP/pcell=$c" }
+              if affected(c) && nNew > 0L => s"cell$c" -> s"$vP/pcell=$c" },
+            Map(vP -> schema))
         }
-      val vC = Snapshot.nextVersion(root)
-      Gen.codebookRows(s, newCb).write.mode("overwrite")
-        .parquet(Snapshot.versionPath(root, vC))
+      val (vC, book) = Snapshot.write(root, Gen.codebookRows(s, newCb))
       if (abortBeforeCommit) throw new IllegalStateException(
         "injected crash before the generation swap")
-      Snapshot.commit(root, manifest + ("codebook" -> vC))
+      Snapshot.commit(root, manifest + ("codebook" -> vC),
+        written + (vC -> book))
 
       // Report: movement accounting + the centroid shift, in exact
       // micro-units² (both codebooks micro-rounded — deterministic).

@@ -93,23 +93,19 @@ object ModelRefit {
         model: QualityClassifier.Model,
         abortBeforeCommit: Boolean = false): Unit = {
       import s.implicits._
-      val v = Snapshot.nextVersion(root)
-      model.w.zipWithIndex
+      val (v, schema) = Snapshot.write(root, model.w.zipWithIndex
         .map { case (w, j) =>
           (j, java.lang.Double.doubleToLongBits(w)) }
-        .toDF("j", "w_bits")
-        .write.mode("overwrite").parquet(Snapshot.versionPath(root, v))
+        .toDF("j", "w_bits"))
       if (abortBeforeCommit) throw new IllegalStateException(
         "injected crash before the model generation swap")
-      Snapshot.commit(root, Map("model" -> v))
+      Snapshot.commit(root, Map("model" -> v), Map(v -> schema))
     }
 
     def read(s: SparkSession, root: String): QualityClassifier.Model = {
-      val dir = Snapshot.currentManifest(root).flatMap(_.get("model"))
-        .map(Snapshot.versionPath(root, _))
+      val w = Snapshot.readSelected(s, root)(_.get("model"))
         .getOrElse(throw new IllegalStateException(
           s"model generation store at $root has no committed model"))
-      val w = s.read.parquet(dir)
         .select(col("j"), col("w_bits"))
         .collect().map(r => (r.getInt(0), r.getLong(1)))
         .sortBy(_._1)

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** PQ SUB-CODEBOOK REFIT — [[IvfRefit]]'s maintenance discipline applied
   * to the OTHER half of the IVF-PQ stack (r13 verdict missing #2): the
@@ -139,11 +140,9 @@ object PqRefit {
 
     def readCodebooks(s: SparkSession, root: String)
         : Seq[Seq[Array[Float]]] = {
-      val dir = Snapshot.currentManifest(root).flatMap(_.get("codebook"))
-        .map(Snapshot.versionPath(root, _))
+      val rows = Snapshot.readSelected(s, root)(_.get("codebook"))
         .getOrElse(throw new IllegalStateException(
           s"PQ generation store at $root has no committed codebook"))
-      val rows = s.read.parquet(dir)
         .select(col("j"), col("cell"), col("pos"), col("c_micro"))
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
@@ -158,16 +157,12 @@ object PqRefit {
       }
     }
 
-    def readPostings(s: SparkSession, root: String): DataFrame = {
-      val dirs = Snapshot.currentManifest(root).getOrElse(Map.empty)
-        .collect { case (k, v) if k.startsWith("cell") =>
-          Snapshot.versionPath(root, v) }
-        .toSeq.sorted
-      if (dirs.isEmpty) throw new IllegalStateException(
-        s"PQ generation store at $root holds no postings")
-      s.read.parquet(dirs: _*)
+    def readPostings(s: SparkSession, root: String): DataFrame =
+      Snapshot.readSelected(s, root)(_.collect {
+        case (k, v) if k.startsWith("cell") => v })
+        .getOrElse(throw new IllegalStateException(
+          s"PQ generation store at $root holds no postings"))
         .select(col("vec_id"), col("embedding"), col("cell"), col("code"))
-    }
 
     /** Bootstrap generation 0: coarse-assign + PQ-encode the corpus
       * (the IvfPqIndex composition, through the batch row's own
@@ -180,20 +175,17 @@ object PqRefit {
         AnnIvf.assign(corpus.select(col("vec_id"), col("embedding")),
           coarseCb),
         books)
-      val vP = Snapshot.nextVersion(root)
-      coded
-        .select(col("vec_id"), col("embedding"), col("cell"), col("code"),
-          col("cell").as("pcell"))
-        .write.mode("overwrite").partitionBy("pcell")
-        .parquet(Snapshot.versionPath(root, vP))
+      val (vP, postings) = Snapshot.write(root,
+        coded.select(col("vec_id"), col("embedding"), col("cell"),
+          col("code"), col("cell").as("pcell")),
+        "pcell")
       val occupied = coded.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val vC = Snapshot.nextVersion(root)
-      codebookRows(s, books).write.mode("overwrite")
-        .parquet(Snapshot.versionPath(root, vC))
+      val (vC, book) = Snapshot.write(root, codebookRows(s, books))
       Snapshot.commit(root,
         occupied.map(c => s"cell$c" -> s"$vP/pcell=$c").toMap +
-          ("codebook" -> vC))
+          ("codebook" -> vC),
+        Map(vP -> postings, vC -> book))
     }
   }
 
@@ -228,23 +220,22 @@ object PqRefit {
         .where(col("code_new") =!= col("code_old"))
         .select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val manifest: Snapshot.Manifest =
-        if (changedCells.isEmpty) prior
+      val (manifest, written) =
+        if (changedCells.isEmpty) (prior, Map.empty[String, StructType])
         else {
-          val vP = Snapshot.nextVersion(root)
-          recoded.where(col("cell").isin(changedCells: _*))
-            .select(col("vec_id"), col("embedding"), col("cell"),
-              col("code_new").as("code"), col("cell").as("pcell"))
-            .write.mode("overwrite").partitionBy("pcell")
-            .parquet(Snapshot.versionPath(root, vP))
-          prior ++ changedCells.map(c => s"cell$c" -> s"$vP/pcell=$c")
+          val (vP, schema) = Snapshot.write(root,
+            recoded.where(col("cell").isin(changedCells: _*))
+              .select(col("vec_id"), col("embedding"), col("cell"),
+                col("code_new").as("code"), col("cell").as("pcell")),
+            "pcell")
+          (prior ++ changedCells.map(c => s"cell$c" -> s"$vP/pcell=$c"),
+            Map(vP -> schema))
         }
-      val vC = Snapshot.nextVersion(root)
-      Gen.codebookRows(s, newBooks).write.mode("overwrite")
-        .parquet(Snapshot.versionPath(root, vC))
+      val (vC, book) = Snapshot.write(root, Gen.codebookRows(s, newBooks))
       if (abortBeforeCommit) throw new IllegalStateException(
         "injected crash before the PQ generation swap")
-      Snapshot.commit(root, manifest + ("codebook" -> vC))
+      Snapshot.commit(root, manifest + ("codebook" -> vC),
+        written + (vC -> book))
 
       // Report: per-subspace changed-code counts in ONE action (packed
       // 4-bit fields compared in place — never m driver round-trips),

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Atomic snapshot commits for the local parquet state tables: every
   * publish writes a NEW version directory and then atomically swaps a
@@ -17,7 +18,8 @@ import org.apache.spark.sql.functions._
   * asserts the table reads back as the last committed version).
   *
   * Layout under a state root:
-  *   `_current`   pointer file (the commit); content = manifest text
+  *   `_current`   pointer file (the commit); content = manifest text,
+  *                each mapped version's schema, the monoid fence
   *   `v<N>/`      immutable version directories (parquet)
   * Writers never touch a committed version directory, so publishes need
   * no localCheckpoint lineage break: the new version reads the old one
@@ -40,6 +42,25 @@ private[graft] object Snapshot {
     * manifest swap commits every touched bucket's new version in one
     * filesystem rename (the lakehouse-manifest shape). */
   type Manifest = Map[String, String]
+
+  /** A committed pointer: the manifest plus two kinds of RESERVED line
+    * the manifest never exposes (keys starting `@` are refused):
+    *  - `@schema<TAB>v<N><TAB>json` — the schema of every version
+    *    directory the manifest references, recorded at write time from
+    *    the written frame, so every read of a committed version binds
+    *    it ([[read]]) and no micro-batch runs a schema-inference job;
+    *  - `@bid<TAB>n` — [[MonoidTable]]'s last merged batch id, the
+    *    re-delivery fence, read without a job.
+    * Both ride the same atomic rename as the data they describe. */
+  final case class Pointer(manifest: Manifest,
+      schemas: Map[String, StructType], bid: Option[Long])
+
+  private val SchemaLine = "@schema\t"
+  private val BidLine = "@bid\t"
+
+  /** The version directory a manifest value lives in (`v3/_bkt=1` →
+    * `v3`): the unit GC keeps or sweeps and the schema lines key. */
+  private def versionDir(rel: String): String = rel.split('/').head
 
   /** The session's Hadoop configuration — the ONE filesystem-resolution
     * seam for every state-table operation (r13 verdict #3: the
@@ -74,10 +95,10 @@ private[graft] object Snapshot {
       case other => other
     }
 
-  private def pointer(root: String): HPath = new HPath(root, "_current")
+  private def pointerPath(root: String): HPath = new HPath(root, "_current")
 
-  def currentManifest(root: String): Option[Manifest] = {
-    val p = pointer(root)
+  def current(root: String): Option[Pointer] = {
+    val p = pointerPath(root)
     val fs = fsOf(p)
     if (!fs.exists(p)) None
     else {
@@ -86,12 +107,24 @@ private[graft] object Snapshot {
         try new String(in.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8)
         finally in.close()
-      Some(text.linesIterator.filter(_.nonEmpty).map { l =>
+      val lines = text.linesIterator.filter(_.nonEmpty).toSeq
+      def split(l: String): (String, String) = {
         val i = l.indexOf('\t')
         l.substring(0, i) -> l.substring(i + 1)
-      }.toMap)
+      }
+      Some(Pointer(
+        lines.filterNot(_.startsWith("@")).map(split).toMap,
+        lines.filter(_.startsWith(SchemaLine))
+          .map(l => split(l.substring(SchemaLine.length)))
+          .map { case (v, json) =>
+            v -> DataType.fromJson(json).asInstanceOf[StructType] }.toMap,
+        lines.find(_.startsWith(BidLine))
+          .map(_.substring(BidLine.length).toLong)))
     }
   }
+
+  def currentManifest(root: String): Option[Manifest] =
+    current(root).map(_.manifest)
 
   /** Next version directory name: max existing v<N> + 1 — monotonic
     * across crash-orphaned directories, so a retry never writes into a
@@ -112,6 +145,11 @@ private[graft] object Snapshot {
 
   /** Publish: atomically swap the pointer onto `manifest`, then GC
     * version directories (torn orphans from crashed attempts included).
+    * `written` holds the schema of every version directory this commit
+    * adds ([[write]] returns it); a directory the prior pointer already
+    * mapped keeps its recorded schema. A commit that would map a
+    * directory with no recorded schema is refused — readers never
+    * infer. `bid` is the monoid fence line; None writes none.
     *
     * RETENTION WINDOW: GC keeps the versions referenced by the new
     * manifest AND by the one it replaces, so a reader that resolved
@@ -124,21 +162,74 @@ private[graft] object Snapshot {
     * still not lag MORE than one commit — the lakehouse retention knob,
     * fixed at window 1 here because the replay cadence is the only
     * writer. */
-  def commit(root: String, manifest: Manifest): Unit = {
+  def commit(root: String, manifest: Manifest,
+      written: Map[String, StructType] = Map.empty,
+      bid: Option[Long] = None): Unit = {
+    require(!manifest.keys.exists(_.startsWith("@")),
+      s"manifest keys starting with @ are reserved: ${manifest.keys}")
+    val prior = current(root)
+    val dirs = manifest.values.map(versionDir).toSet
+    val known = prior.fold(Map.empty[String, StructType])(_.schemas) ++
+      written
+    val unknown = dirs.filterNot(known.contains)
+    require(unknown.isEmpty,
+      s"commit at $root maps ${unknown.mkString(", ")} with no recorded schema")
     val rootP = new HPath(root)
     val fs = fsOf(rootP)
     fs.mkdirs(rootP)
-    val prior = currentManifest(root).getOrElse(Map.empty)
+    val lines = manifest.toSeq.sorted.map { case (k, v) => s"$k\t$v" } ++
+      dirs.toSeq.sorted.map(d => s"$SchemaLine$d\t${known(d).json}") ++
+      bid.map(n => s"$BidLine$n")
     val tmp = new HPath(root, "_current.tmp")
     val out = fs.create(tmp, true)
-    try out.write(manifest.toSeq.sorted
-      .map { case (k, v) => s"$k\t$v" }.mkString("\n")
+    try out.write(lines.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    atomicReplace(fs, tmp, pointer(root))
-    gc(root, (manifest.values ++ prior.values)
-      .map(_.split('/').head).toSet)
+    atomicReplace(fs, tmp, pointerPath(root))
+    gc(root, dirs ++
+      prior.fold(Set.empty[String])(_.manifest.values.map(versionDir).toSet))
   }
+
+  /** Write `df` as the root's next version directory, laid out by
+    * `partitionBy`. Returns the directory and the schema a bound read
+    * of it (or of one of its partition subdirectories) sees: the
+    * written columns minus the partition columns, all nullable —
+    * exactly what parquet schema inference would return. Analysis
+    * only, no job. */
+  def write(root: String, df: DataFrame, partitionBy: String*)
+      : (String, StructType) = {
+    val v = nextVersion(root)
+    val w = df.write.mode("overwrite")
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+      .parquet(versionPath(root, v))
+    v -> GraftShims.asNullable(
+      StructType(df.schema.filterNot(f => partitionBy.contains(f.name))))
+  }
+
+  /** THE reader of committed versions: one scan over the directories
+    * `rels` name (deduplicated — several keys may share one), bound to
+    * the schema `p` recorded for them, so building the frame starts no
+    * job. The first directory's schema binds the scan, the file schema
+    * inference would have read. */
+  def read(s: SparkSession, root: String, p: Pointer,
+      rels: Iterable[String]): DataFrame = {
+    val sorted = rels.toSeq.distinct.sorted
+    require(sorted.nonEmpty, s"no version directories to read at $root")
+    val dir = versionDir(sorted.head)
+    val schema = p.schemas.getOrElse(dir, throw new IllegalStateException(
+      s"state root $root records no schema for $dir"))
+    s.read.schema(schema).parquet(sorted.map(versionPath(root, _)): _*)
+  }
+
+  /** The committed directories `pick` selects from the root's manifest,
+    * in one bound [[read]]; None before any commit or when `pick`
+    * selects none. */
+  def readSelected(s: SparkSession, root: String)(
+      pick: Manifest => Iterable[String]): Option[DataFrame] =
+    current(root).flatMap { p =>
+      val rels = pick(p.manifest)
+      if (rels.isEmpty) None else Some(read(s, root, p, rels))
+    }
 
   /** The pointer swap primitive. On LOCAL filesystems the swap keeps
     * the POSIX rename(2) guarantee via java.nio ATOMIC_MOVE — Hadoop's
@@ -213,21 +304,17 @@ private[graft] object Snapshot {
   * the sink write but before the epoch commits, the SAME batchId is
   * re-delivered on restart. A newest-wins merge absorbs that for free
   * (max is idempotent), but count/sum monoids are NOT: merging the same
-  * partials twice double-counts. So [[MonoidTable.merge]] persists the
-  * last merged batch id WITH the state (an embedded `_bid` column —
-  * same atomic commit, never a sidecar that could diverge from the
-  * data it fences) and no-ops on `id <= last`. Re-delivery of batch 0
-  * is safe by construction (it resets the table to the same content).
-  * Publishes go through [[Snapshot.commit]], so a crash mid-write
-  * leaves the previous version committed, fence intact.
+  * partials twice double-counts. So [[MonoidTable.merge]] records the
+  * last merged batch id in the pointer's `@bid` line — same atomic
+  * commit as the data it fences, never a sidecar that could diverge
+  * from it — and no-ops on `id <= last`: a manifest lookup, not a job.
+  * Re-delivery of batch 0 is safe by construction (it resets the table
+  * to the same content). Publishes go through [[Snapshot.commit]], so a
+  * crash mid-write leaves the previous version committed, fence intact.
   */
 private[graft] object MonoidTable {
 
   private val Key = "table"
-
-  private def currentDir(root: String): Option[String] =
-    Snapshot.currentManifest(root).flatMap(_.get(Key))
-      .map(Snapshot.versionPath(root, _))
 
   /** Merge one micro-batch's pre-aggregated partials into the keyed
     * state table. All non-key columns must be sum-mergeable (the monoid
@@ -238,29 +325,27 @@ private[graft] object MonoidTable {
   def merge(state: String, partials: DataFrame, id: Long,
       keys: Seq[String]): Unit = {
     val bs = partials.sparkSession
-    val toWrite =
-      if (id == 0L) Some(partials)
-      else {
-        // Batch > 0 against a never-committed table is a contract
-        // violation (the engine always delivers batch 0 first); the
-        // .get fails loudly rather than silently seeding mid-stream.
-        val st = bs.read.parquet(currentDir(state).get)
-        if (id <= lastBid(st)) None
-        else {
-          val valCols = partials.columns.filterNot(keys.contains).toSeq
-          val sums = valCols.map(c => sum(col(c)).as(c))
-          Some(st.drop("_bid").unionByName(partials)
-            .groupBy(keys.map(col): _*)
-            .agg(sums.head, sums.tail: _*))
-        }
-      }
+    // Batch > 0 against a never-committed table is a contract violation
+    // (the engine always delivers batch 0 first); the .get fails loudly
+    // rather than silently seeding mid-stream.
+    val prior = if (id == 0L) None else Some(Snapshot.current(state).get)
+    val toWrite = prior match {
+      case None => Some(partials)
+      case Some(p) if id <= p.bid.getOrElse(throw new IllegalStateException(
+          s"monoid state at $state records no batch fence")) => None
+      case Some(p) =>
+        val valCols = partials.columns.filterNot(keys.contains).toSeq
+        val sums = valCols.map(c => sum(col(c)).as(c))
+        Some(Snapshot.read(bs, state, p, p.manifest.get(Key))
+          .unionByName(partials)
+          .groupBy(keys.map(col): _*)
+          .agg(sums.head, sums.tail: _*))
+    }
     toWrite.foreach { m =>
-      val v = Snapshot.nextVersion(state)
       // The new version reads the committed one while writing — no
       // delete-before-write hazard, so no localCheckpoint lineage break
       // (the old overwrite discipline needed one).
-      Snapshot.sized(m.withColumn("_bid", lit(id)))
-        .write.mode("overwrite").parquet(Snapshot.versionPath(state, v))
+      val (v, schema) = Snapshot.write(state, Snapshot.sized(m))
       // Non-table manifest keys (GDPR-erasure fences) ride along,
       // repointed at the new version (a fence is a marker — left on an
       // old directory it would pin it past the retention window): a
@@ -274,57 +359,40 @@ private[graft] object MonoidTable {
       // Deliberately NOT preserved across the reset: a fence carried
       // into a world rebuilt from a dirty source would claim "erased"
       // over resurrected data — strictly worse than honestly resetting.
-      val keep: Set[String] =
-        if (id == 0L) Set.empty
-        else Snapshot.currentManifest(state).getOrElse(Map.empty).keySet
-      Snapshot.commit(state, (keep + Key).map(_ -> v).toMap)
+      val keep = prior.fold(Set.empty[String])(_.manifest.keySet)
+      Snapshot.commit(state, (keep + Key).map(_ -> v).toMap,
+        Map(v -> schema), Some(id))
     }
   }
 
-  /** The maintained table WITH its `_bid` fence column — for state
-    * surgery (GDPR erasure) that rewrites rows while preserving the
-    * stream's re-delivery fence exactly. */
-  private[graft] def readRaw(s: SparkSession, state: String): DataFrame =
-    s.read.parquet(currentDir(state).getOrElse(throw
-      new IllegalStateException(
-        s"monoid state at $state has no committed version")))
-
-  /** Publish a surgically-rewritten table as a new version, preserving
-    * every non-table manifest key and adding `fenceKeys` (the erasure
-    * fence) in the SAME atomic commit as the data they fence. Fence
-    * keys point at the new version so GC's keep-set follows the data
-    * (a fence pinned to an old directory would retain it forever).
-    * `df` must already carry `_bid`. */
+  /** Publish a surgically-rewritten table (GDPR erasure) as a new
+    * version, preserving every non-table manifest key and the stream's
+    * re-delivery fence, and adding `fenceKeys` (the erasure fence) in
+    * the SAME atomic commit as the data they fence. Fence keys point at
+    * the new version so GC's keep-set follows the data (a fence pinned
+    * to an old directory would retain it forever). */
   private[graft] def publish(state: String, df: DataFrame,
       fenceKeys: Set[String] = Set.empty): Unit = {
-    val prior = Snapshot.currentManifest(state).getOrElse(Map.empty)
-    val v = Snapshot.nextVersion(state)
-    Snapshot.sized(df).write.mode("overwrite")
-      .parquet(Snapshot.versionPath(state, v))
+    val prior = Snapshot.current(state)
+    val (v, schema) = Snapshot.write(state, Snapshot.sized(df))
     // Every key — table, new fences, PRIOR fences — repoints at the
     // new version: a fence is a marker, not a data reference, and one
     // left on an old directory would pin it past the retention window.
     Snapshot.commit(state,
-      (prior.keySet ++ fenceKeys + Key).map(_ -> v).toMap)
+      (prior.fold(Set.empty[String])(_.manifest.keySet) ++ fenceKeys + Key)
+        .map(_ -> v).toMap,
+      Map(v -> schema), prior.flatMap(_.bid))
   }
 
   /** True when the state's manifest carries `key` — the fence probe. */
   private[graft] def fenced(state: String, key: String): Boolean =
     Snapshot.currentManifest(state).exists(_.contains(key))
 
-  /** The fence: one scalar aggregate over the (domain-bounded) state
-    * table — a driver-side routing decision, not data movement. An
-    * empty state table (a batch-0 write of zero partials) reads as -1,
-    * so the next id merges against it normally. */
-  def lastBid(state: DataFrame): Long =
-    state.agg(coalesce(max(col("_bid")), lit(-1L))).head().getLong(0)
-
-  /** The maintained table, minus the fencing column. */
+  /** The maintained table. */
   def read(s: SparkSession, state: String): DataFrame =
-    s.read.parquet(currentDir(state).getOrElse(throw
+    Snapshot.readSelected(s, state)(_.get(Key)).getOrElse(throw
       new IllegalStateException(
-        s"monoid state at $state has no committed version")))
-      .drop("_bid")
+        s"monoid state at $state has no committed version"))
 }
 
 /** APPEND-ONLY segment log — the third state discipline beside the
@@ -339,7 +407,7 @@ private[graft] object MonoidTable {
   * Retry-idempotent by the MANIFEST KEY: foreachBatch re-delivery of a
   * committed batchId finds `seg<id>` already mapped and no-ops — the
   * fence lives in the same atomic pointer swap as the data it fences
-  * (the embedded-`_bid` argument in segment form). Batch 0 resets the
+  * (the monoid `@bid` argument in segment form). Batch 0 resets the
   * manifest to exactly its own segment, so a fresh invocation is
   * self-contained; the [[Snapshot]] retention window keeps racing
   * readers safe exactly as for the other disciplines. */
@@ -350,19 +418,15 @@ private[graft] object AppendLog {
       if (id == 0L) Map.empty
       else Snapshot.currentManifest(state).getOrElse(Map.empty)
     if (!prev.contains(s"seg$id")) {
-      val v = Snapshot.nextVersion(state)
-      Snapshot.sized(batch).write.mode("overwrite")
-        .parquet(Snapshot.versionPath(state, v))
-      Snapshot.commit(state, prev + (s"seg$id" -> v))
+      val (v, schema) = Snapshot.write(state, Snapshot.sized(batch))
+      Snapshot.commit(state, prev + (s"seg$id" -> v), Map(v -> schema))
     }
   }
 
-  /** The union of committed segments, or None before any commit /
-    * when every committed segment is empty of schema (cannot happen
-    * for unpartitioned writes, which always emit a schema'd file). */
+  /** The union of committed segments (a directory several keys share
+    * scans once), or None before any commit. */
   def read(s: SparkSession, state: String): Option[DataFrame] =
-    union(s, state,
-      Snapshot.currentManifest(state).getOrElse(Map.empty).values)
+    Snapshot.readSelected(s, state)(_.values)
 
   /** COMPACTION — the log's offline maintenance event (run on a
     * quiesced log, the codebook-refit cadence rule): fold every
@@ -375,21 +439,16 @@ private[graft] object AppendLog {
     * for ids ABOVE the compacted range (all a quiesced log's future
     * batches are), which is why compaction must not race an in-flight
     * retry. */
-  def compact(s: SparkSession, state: String): Unit = {
-    val manifest = Snapshot.currentManifest(state).getOrElse(Map.empty)
-    if (manifest.values.toSet.size > 1) {
-      val all = read(s, state).get
-      val v = Snapshot.nextVersion(state)
-      Snapshot.sized(all).write.mode("overwrite")
-        .parquet(Snapshot.versionPath(state, v))
-      Snapshot.commit(state, manifest.keys.map(_ -> v).toMap)
+  def compact(s: SparkSession, state: String): Unit =
+    Snapshot.current(state).foreach { p =>
+      if (p.manifest.values.toSet.size > 1)
+        fold(s, state, p, identity, p.manifest.keySet)
     }
-  }
 
   /** ERASURE REWRITE — compaction with a row filter (GDPR right-to-be-
     * forgotten against the maintained log): fold every committed
     * segment through `keep` into ONE directory and repoint EVERY
-    * manifest key at it, adding `extraKeys` (the erasure fence) in the
+    * manifest key at it, adding `fenceKeys` (the erasure fence) in the
     * same atomic commit. All seg keys survive as fence tombstones
     * (compact's rule: a re-delivered pre-erasure batchId still no-ops)
     * but the erased rows are PHYSICALLY gone — no version directory
@@ -397,16 +456,19 @@ private[graft] object AppendLog {
     * window is the only residual, exactly a lakehouse VACUUM horizon).
     * Same quiesced-log precondition as [[compact]]. */
   def rewrite(s: SparkSession, state: String, keep: DataFrame => DataFrame,
-      fenceKeys: Set[String] = Set.empty): Unit = {
-    val manifest = Snapshot.currentManifest(state).getOrElse(Map.empty)
-    if (manifest.nonEmpty) {
-      val all = read(s, state).get
-      val v = Snapshot.nextVersion(state)
-      Snapshot.sized(keep(all)).write.mode("overwrite")
-        .parquet(Snapshot.versionPath(state, v))
-      Snapshot.commit(state,
-        (manifest.keys ++ fenceKeys).map(_ -> v).toMap)
+      fenceKeys: Set[String] = Set.empty): Unit =
+    Snapshot.current(state).foreach { p =>
+      if (p.manifest.nonEmpty)
+        fold(s, state, p, keep, p.manifest.keySet ++ fenceKeys)
     }
+
+  /** Write `keep` of every committed segment as one directory and
+    * commit `keys`, all mapped to it. */
+  private def fold(s: SparkSession, state: String, p: Snapshot.Pointer,
+      keep: DataFrame => DataFrame, keys: Set[String]): Unit = {
+    val (v, schema) = Snapshot.write(state,
+      Snapshot.sized(keep(Snapshot.read(s, state, p, p.manifest.values))))
+    Snapshot.commit(state, keys.map(_ -> v).toMap, Map(v -> schema))
   }
 
   /** True when the log's manifest carries `key` — the fence probe. */
@@ -417,25 +479,15 @@ private[graft] object AppendLog {
     * that produced it (consumers fold FROM the segment instead of
     * recomputing the batch's expensive stage a second time). */
   def segment(s: SparkSession, state: String, id: Long): Option[DataFrame] =
-    union(s, state,
-      Snapshot.currentManifest(state).getOrElse(Map.empty).get(s"seg$id"))
+    Snapshot.readSelected(s, state)(_.get(s"seg$id"))
 
   /** The union of segments with batch id strictly BELOW `id` — "the
     * index as of this batch's arrival", exact under re-delivery (a
     * retried batch must not probe its own half-folded contribution). */
   def readBefore(s: SparkSession, state: String, id: Long)
       : Option[DataFrame] =
-    union(s, state, Snapshot.currentManifest(state).getOrElse(Map.empty)
-      .collect { case (k, v) if k.startsWith("seg") &&
-        k.drop(3).toLong < id => v })
-
-  private def union(s: SparkSession, state: String,
-      rel: Iterable[String]): Option[DataFrame] = {
-    // distinct: post-compaction every fence key points at the same
-    // folded directory, which must scan once, not once per key.
-    val dirs = rel.map(Snapshot.versionPath(state, _)).toSet.toSeq.sorted
-    if (dirs.isEmpty) None else Some(s.read.parquet(dirs: _*))
-  }
+    Snapshot.readSelected(s, state)(_.collect {
+      case (k, v) if k.startsWith("seg") && k.drop(3).toLong < id => v })
 }
 
 /** Newest-wins per-user snapshot maintenance, bucketed so merge cost is
@@ -484,17 +536,16 @@ private[graft] object UpsertState {
     * write job, one manifest swap. The touched-bucket list is a
     * driver-side collect bounded by `buckets` (8) — partition routing,
     * not data. An EMPTY batch 0 commits an empty manifest, which the
-    * first non-empty batch seeds naturally (no schema inference ever
-    * runs against a dataless directory — the r11 seeding special-case
+    * first non-empty batch seeds naturally (no read ever opens a
+    * dataless directory — the r11 seeding special-case
     * dissolved into the manifest design). */
   def merge(state: String, batch: DataFrame, id: Long): Unit = {
     val bs = batch.sparkSession
     val bl = withBucket(latest(batch))
     val touched = bl.select("_bkt").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val prev: Snapshot.Manifest =
-      if (id == 0L) Map.empty
-      else Snapshot.currentManifest(state).getOrElse(Map.empty)
+    val prior = if (id == 0L) None else Snapshot.current(state)
+    val prev = prior.fold(Map.empty: Snapshot.Manifest)(_.manifest)
     if (id == 0L && touched.isEmpty) {
       Snapshot.commit(state, Map.empty)
     } else if (touched.nonEmpty) {
@@ -502,21 +553,18 @@ private[graft] object UpsertState {
       // `_bkt` is a pure function of user_id, so it is RECOMPUTED on
       // read instead of tagged per-path (the first cut opened one scan
       // per bucket — 8 tiny scans per merge, +2 s at fixture scale).
-      val storedPaths = touched
-        .flatMap(b => prev.get(b.toString))
-        .map(Snapshot.versionPath(state, _))
+      val storedRels = touched.flatMap(b => prev.get(b.toString))
       val stored =
-        if (storedPaths.isEmpty) None
-        else Some(withBucket(bs.read.parquet(storedPaths: _*)))
+        if (storedRels.isEmpty) None
+        else prior.map(p => withBucket(Snapshot.read(bs, state, p, storedRels)))
       val merged = latest(stored.fold(bl)(bl.unionByName(_)))
       // ONE write job for all touched buckets: partitionBy lays the
       // version dir out as v<N>/_bkt=<b>/, and the manifest points each
       // bucket key at its subdirectory.
-      val v = Snapshot.nextVersion(state)
-      merged.write.mode("overwrite").partitionBy("_bkt")
-        .parquet(Snapshot.versionPath(state, v))
+      val (v, schema) = Snapshot.write(state, merged, "_bkt")
       Snapshot.commit(state,
-        prev ++ touched.map(b => b.toString -> s"$v/_bkt=$b"))
+        prev ++ touched.map(b => b.toString -> s"$v/_bkt=$b"),
+        Map(v -> schema))
     }
     // id > 0 with an empty batch: nothing to publish, manifest stands.
   }
@@ -524,12 +572,8 @@ private[graft] object UpsertState {
   /** The maintained snapshot: the union of every bucket's committed
     * data directory (manifest-addressed — one multi-path scan). A state
     * root that never committed, or whose manifest maps no buckets,
-    * fails with a NAMED error instead of a raw schema-inference one. */
-  def read(s: SparkSession, state: String): DataFrame = {
-    val dirs = Snapshot.currentManifest(state).getOrElse(Map.empty)
-      .values.map(Snapshot.versionPath(state, _)).toSeq.sorted
-    if (dirs.isEmpty) throw new IllegalStateException(
-      s"upsert state at $state holds no data — the replay saw no rows")
-    s.read.parquet(dirs: _*)
-  }
+    * fails with a NAMED error instead of a raw read one. */
+  def read(s: SparkSession, state: String): DataFrame =
+    Snapshot.readSelected(s, state)(_.values).getOrElse(throw new IllegalStateException(
+        s"upsert state at $state holds no data — the replay saw no rows"))
 }

@@ -27,9 +27,9 @@ import org.apache.spark.sql.streaming.Trigger
   * The dedup verdict (`flagged ⟺ n_coll > 0 ⟺ ∃ smaller-id doc
   * sharing a band`) therefore equals the batch q_dedup_minhash row's
   * `distinct doc_b` set exactly — spec-pinned, not assumed. Both
-  * merges are fenced (the monoid `_bid`; the append-log manifest key),
-  * so crash-retry re-delivery double-counts nothing; publishes are
-  * atomic snapshot commits.
+  * merges are fenced (the monoid pointer's `@bid` line; the append-log
+  * manifest key), so crash-retry re-delivery double-counts nothing;
+  * publishes are atomic snapshot commits.
   *
   * Scale (100 TB/day ingest): banding is the shared MinHash stage's
   * explode + map-side-combined min-aggregate (one 16-long signature
@@ -112,7 +112,7 @@ object StreamCorpusDedup {
     * lineage (a second full evaluation; measured 8.9 → ~4.4 s at
     * sf0.1). Crash between the two commits is covered by both fences:
     * re-delivery no-ops the append (manifest key) and re-runs the
-    * merge (monoid `_bid`) from the same segment bytes; the prior
+    * merge (monoid `@bid` fence) from the same segment bytes; the prior
     * index reads segments strictly BELOW this id, so a retried batch
     * never probes its own contribution. */
   private[graft] def foldBands(index: String, flags: String,

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** STREAMING GDPR ERASURE (r12 verdict ask #2) — right-to-be-forgotten
   * driven through the MAINTAINED streaming state, not just batch
@@ -111,7 +112,7 @@ object StreamGdpr {
             verify("r", "o"))
         .groupBy(col("r.doc_id").as("doc_id"))
         .agg(count(lit(1)).as("_refund"))
-      val cur = MonoidTable.readRaw(s, flags)
+      val cur = MonoidTable.read(s, flags)
       val next = cur.join(erased, Seq("doc_id"), "left_anti")
         .join(refund, Seq("doc_id"), "left")
         .withColumn("n_coll",
@@ -142,7 +143,7 @@ object StreamGdpr {
           coalesce(sum(col("n_tok")), lit(0L)).as("d_toks"))
         .head()
       val (dDocs, dToks) = (gone.getLong(0), gone.getLong(1))
-      val cur = MonoidTable.readRaw(s, funnel)
+      val cur = MonoidTable.read(s, funnel)
       val next = cur
         .withColumn("n_docs",
           when(col("stage").isin("arrived", "quality_pass"),
@@ -222,14 +223,13 @@ object StreamGdpr {
       eid: Long, deltas: DataFrame, keys: Seq[String],
       countCol: String): Unit =
     if (!MonoidTable.fenced(state, fence(eid))) {
-      val cur = MonoidTable.readRaw(s, state)
-      val valCols = cur.columns.toSeq
-        .filterNot(keys.contains).filterNot(_ == "_bid")
+      val cur = MonoidTable.read(s, state)
+      val valCols = cur.columns.toSeq.filterNot(keys.contains)
       val dp = valCols.foldLeft(deltas)((d, c) =>
         d.withColumnRenamed(c, s"_d$c"))
       val next = cur.join(dp, keys, "left")
         .select(cur.columns.toSeq.map {
-          case c if keys.contains(c) || c == "_bid" => col(c)
+          case c if keys.contains(c) => col(c)
           case c => (col(c) - coalesce(col(s"_d$c"), lit(0L))).as(c)
         }: _*)
       // FAIL LOUDLY on an inconsistent refund (r14 advice): a correct
@@ -332,20 +332,21 @@ object StreamGdpr {
       } else {
         val emptied = perCell.collect { case (c, 0L) => c }.toSet
         val rewrite = perCell.collect { case (c, k) if k > 0L => c }
-        val newEntries: Snapshot.Manifest =
-          if (rewrite.isEmpty) Map.empty
+        val (newEntries, written) =
+          if (rewrite.isEmpty)
+            (Map.empty[String, String], Map.empty[String, StructType])
           else {
-            val vP = Snapshot.nextVersion(root)
-            posts.join(erased, Seq("vec_id"), "left_anti")
-              .where(col("cell").isin(rewrite: _*))
-              .select(posts.columns.map(col) :+ col("cell").as("pcell"): _*)
-              .write.mode("overwrite").partitionBy("pcell")
-              .parquet(Snapshot.versionPath(root, vP))
-            rewrite.map(c => s"cell$c" -> s"$vP/pcell=$c").toMap
+            val (vP, schema) = Snapshot.write(root,
+              posts.join(erased, Seq("vec_id"), "left_anti")
+                .where(col("cell").isin(rewrite: _*))
+                .select(posts.columns.map(col) :+ col("cell").as("pcell"): _*),
+              "pcell")
+            (rewrite.map(c => s"cell$c" -> s"$vP/pcell=$c").toMap,
+              Map(vP -> schema))
           }
         Snapshot.commit(root,
           manifest -- emptied.map(c => s"cell$c") ++ newEntries +
-            fenceEntry)
+            fenceEntry, written)
       }
     }
   }

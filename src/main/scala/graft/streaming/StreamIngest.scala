@@ -50,12 +50,12 @@ import org.apache.spark.sql.streaming.Trigger
   * bands (an un-banded doc could otherwise silently vanish from the
   * accepted count).
   *
-  * Crash-retry: both merges are fenced (manifest key; `_bid`), and a
-  * crash BETWEEN the two state commits re-delivers the batch — the
-  * already-committed table no-ops, the other folds, and the pair
-  * converges (same per-table argument as the corpus-dedup row, pinned
-  * there through a real checkpoint restart; StreamIngestSpec pins the
-  * re-delivery no-op on both tables here).
+  * Crash-retry: both merges are fenced (manifest key; the monoid
+  * `@bid` line), and a crash BETWEEN the two state commits re-delivers
+  * the batch — the already-committed table no-ops, the other folds,
+  * and the pair converges (same per-table argument as the corpus-dedup
+  * row, pinned there through a real checkpoint restart;
+  * StreamIngestSpec pins the re-delivery no-op on both tables here).
   *
   * Bench-cost honesty (~7.4–8.2 s at sf0.1, the heaviest streaming row
   * beside its corpus-dedup parent): each of the 4 micro-batches pays

@@ -77,7 +77,7 @@ object StreamJoinQueries {
     "q_stream_static_enrich",
     (s, dir) => {
       val dim = customerDim(s, dir)
-      StreamingQueries.Replay.run(s, dir, "static_enrich", "complete") {
+      StreamingQueries.Replay.run(s, dir, "q_stream_static_enrich", "complete") {
         src => enrich(src.withWatermark("ts", "10 minutes"), dim)
       }
     })
@@ -140,7 +140,7 @@ object StreamJoinQueries {
     "q_stream_stream_join",
     (s, dir) => {
       import s.implicits._
-      StreamingQueries.Replay.run(s, dir, "stream_join", "append") { src =>
+      StreamingQueries.Replay.run(s, dir, "q_stream_stream_join", "append") { src =>
         val views = src.withWatermark("ts", "10 minutes")
         val purchases = StreamingQueries.Replay.eventsSource(s, dir)
           .withWatermark("ts", "10 minutes")
@@ -161,7 +161,7 @@ object StreamJoinQueries {
     "q_stream_stream_outer",
     (s, dir) => {
       import s.implicits._
-      StreamingQueries.Replay.run(s, dir, "stream_outer", "append",
+      StreamingQueries.Replay.run(s, dir, "q_stream_stream_outer", "append",
         watermarkBatch = true) { src =>
         val views = src.withWatermark("ts", "10 minutes")
         val purchases = StreamingQueries.Replay.eventsSource(s, dir)

@@ -178,14 +178,9 @@ object StreamVecSearch {
     * filesystem probe needed (the manifest is the listing), and the
     * data files carry the cell column themselves. */
   private[graft] def genPostings(s: SparkSession, root: String)
-      : Seq[Int] => Option[DataFrame] = { cells =>
-    val manifest = Snapshot.currentManifest(root).getOrElse(Map.empty)
-    val dirs = cells.flatMap(c => manifest.get(s"cell$c"))
-      .map(Snapshot.versionPath(root, _))
-    if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs: _*)
-      .select(col("vec_id"), col("embedding"), col("cell")))
-  }
+      : Seq[Int] => Option[DataFrame] = cells =>
+    Snapshot.readSelected(s, root)(m => cells.flatMap(c => m.get(s"cell$c")))
+      .map(_.select(col("vec_id"), col("embedding"), col("cell")))
 
   /** The postings index, batch-bootstrapped once per fixture dir and
     * laid out `cell=<c>/` so probed-cell reads prune physically — the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.{Q, Tables}
 import graft.Dsl._
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -235,7 +235,9 @@ object StreamingQueries {
       * null padding (q_stream_stream_outer) both fire exactly when the
       * watermark advances past the data — with the batch disabled they
       * would silently emit nothing. Scoped like the shuffle-partition
-      * knob. `conf`: further settings for the replay's scope. */
+      * knob. `conf`: further settings for the replay's scope. `name`:
+      * the catalog row's name; it names the query, which labels every
+      * micro-batch job, and the output directory. */
     def run(
         s: SparkSession, dir: String, name: String, mode: String,
         updateKeys: Seq[String] = Nil, watermarkBatch: Boolean = false,
@@ -264,22 +266,16 @@ object StreamingQueries {
           s.conf.get("spark.graft.replay.shufflePartitions", "4"),
         "spark.sql.streaming.noDataMicroBatches.enabled" ->
           watermarkBatch.toString): _*)
-      try {
-        val q = transform(graft.Scope.bind(src, scoped))
+      FoldReplay.drive(s, scoped, name)(
+        transform(graft.Scope.bind(src, scoped))
           .writeStream
+          .queryName(name)
           .outputMode(mode)
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, id: Long) =>
             landBatch(out, mode, batch, id)
           }
-          .start()
-        if (!q.awaitTermination(300000)) {
-          q.stop()
-          throw new IllegalStateException(
-            s"streaming replay '$name' did not finish within 300 s — " +
-              "refusing to read a partial result")
-        }
-      } finally GraftShims.releaseStreams(scoped, s)
+          .start())
       val landed = s.read.parquet(out)
       // Delta modes carry `_batch` as a partition column (see landBatch);
       // update mode reconciles on it, append mode just drops it (no-op
@@ -377,27 +373,27 @@ object StreamingQueries {
   /** #41s–#45 + quality filter as replayed, Bench-timed T-rows. */
   val qStreamTumbling: Q = Q(
     "q_stream_tumbling",
-    (s, dir) => Replay.run(s, dir, "tumbling", "complete")(tumbling))
+    (s, dir) => Replay.run(s, dir, "q_stream_tumbling", "complete")(tumbling))
 
   val qStreamSliding: Q = Q(
     "q_stream_sliding",
-    (s, dir) => Replay.run(s, dir, "sliding", "complete")(sliding))
+    (s, dir) => Replay.run(s, dir, "q_stream_sliding", "complete")(sliding))
 
   val qStreamSession: Q = Q(
     "q_stream_session",
-    (s, dir) => Replay.run(s, dir, "session", "complete")(session))
+    (s, dir) => Replay.run(s, dir, "q_stream_session", "complete")(session))
 
   val qStreamOhlc: Q = Q(
     "q_stream_ohlc",
-    (s, dir) => Replay.run(s, dir, "ohlc", "complete")(ohlc))
+    (s, dir) => Replay.run(s, dir, "q_stream_ohlc", "complete")(ohlc))
 
   val qStreamDedup: Q = Q(
     "q_stream_dedup",
-    (s, dir) => Replay.run(s, dir, "dedup", "append")(dedup))
+    (s, dir) => Replay.run(s, dir, "q_stream_dedup", "append")(dedup))
 
   val qStreamStateful: Q = Q(
     "q_stream_stateful",
-    (s, dir) => Replay.run(s, dir, "stateful", "update",
+    (s, dir) => Replay.run(s, dir, "q_stream_stateful", "update",
       updateKeys = Seq("user_id")) { df =>
       import df.sparkSession.implicits._
       StatefulCounts(df.as[StatefulCounts.Ev]).toDF()
@@ -419,7 +415,7 @@ object StreamingQueries {
       // transformWithState requires the RocksDB provider; it rides in
       // the replay's scope, so later HDFS-backed stateful queries on
       // the caller's session keep their provider.
-      Replay.run(s, dir, "stateful_tws", "update",
+      Replay.run(s, dir, "q_stream_stateful_tws", "update",
         updateKeys = Seq("user_id"), watermarkBatch = true,
         conf = Seq("spark.sql.streaming.stateStore.providerClass" ->
           ("org.apache.spark.sql.execution.streaming." +
@@ -468,7 +464,7 @@ object StreamingQueries {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))
     val nDocs = docCount((s, dir))(docs.count())
-    Replay.run(s, dir, "modelscore", "complete") { df =>
+    Replay.run(s, dir, "q_stream_model_score", "complete") { df =>
       modelScore(
         df.select(pmod(col("event_id"), lit(nDocs)).as("doc_id"), col("ts"))
           .join(broadcast(docs), "doc_id"), model)
@@ -495,7 +491,7 @@ object StreamingQueries {
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("text"))
       val nDocs = docCount((s, dir))(docs.count())
-      Replay.run(s, dir, "quality", "complete") { df =>
+      Replay.run(s, dir, "q_stream_quality_filter", "complete") { df =>
         qualityFilter(
           df.select(pmod(col("event_id"), lit(nDocs)).as("doc_id"), col("ts"))
             .join(broadcast(docs), "doc_id"))
@@ -531,7 +527,7 @@ object StreamingQueries {
       }
       val nDocs = docCount((s, dir))(
         graft.Tables.documents(s, dir).count())
-      Replay.run(s, dir, "contamination", "complete") { df =>
+      Replay.run(s, dir, "q_stream_contamination", "complete") { df =>
         contaminationCounts(
           df.select(pmod(col("event_id"), lit(nDocs)).as("doc_id"),
               col("ts"))
@@ -557,7 +553,7 @@ object StreamingQueries {
     (s, dir) => {
       import graft.functions.CountMin
       val landed =
-        Replay.run(s, dir, "countmin", "complete")(CountMin.streamFold)
+        Replay.run(s, dir, "q_stream_countmin", "complete")(CountMin.streamFold)
       // The landed sketch is bounded model state (d×w longs) — same
       // collect discipline as the PQ LUTs.
       CountMin.topFreq(s, dir, landed.head().getSeq[Long](1).toArray)

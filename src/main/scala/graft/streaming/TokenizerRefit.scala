@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   *     (lower-split of raw text, empty tokens dropped) — through the
   *     fenced [[MonoidTable.merge]]: state == the corpus's
   *     distinct-word count table bit-for-bit whatever the chunking
-  *     (exact-integer monoid; re-delivery no-ops on `_bid`).
+  *     (exact-integer monoid; re-delivery no-ops on the pointer's
+  *     `@bid` fence).
   *  2. REFIT — cap the maintained table to the top `maxVocab` words
   *     under the batch trainer's own (count DESC, word) total order —
   *     orderBy + limit runs distributed, ONLY the capped table reaches
@@ -94,32 +95,31 @@ object TokenizerRefit {
         merges: Vector[(String, String)], vocab: Map[String, Long],
         abortBeforeCommit: Boolean = false): Unit = {
       import s.implicits._
-      val vM = Snapshot.nextVersion(root)
-      merges.zipWithIndex.map { case ((l, r), k) => (k, l, r) }
-        .toDF("rank", "left", "right")
-        .write.mode("overwrite").parquet(Snapshot.versionPath(root, vM))
-      val vV = Snapshot.nextVersion(root)
-      vocab.toSeq.sortBy(_._1).toDF("piece", "lp_micro")
-        .write.mode("overwrite").parquet(Snapshot.versionPath(root, vV))
+      val (vM, mSchema) = Snapshot.write(root,
+        merges.zipWithIndex.map { case ((l, r), k) => (k, l, r) }
+          .toDF("rank", "left", "right"))
+      val (vV, vSchema) = Snapshot.write(root,
+        vocab.toSeq.sortBy(_._1).toDF("piece", "lp_micro"))
       if (abortBeforeCommit) throw new IllegalStateException(
         "injected crash before the tokenizer generation swap")
-      Snapshot.commit(root, Map("merges" -> vM, "vocab" -> vV))
+      Snapshot.commit(root, Map("merges" -> vM, "vocab" -> vV),
+        Map(vM -> mSchema, vV -> vSchema))
     }
 
-    private def keyDir(s: SparkSession, root: String, key: String): String =
-      Snapshot.currentManifest(root).flatMap(_.get(key))
-        .map(Snapshot.versionPath(root, _))
+    private def keyTable(s: SparkSession, root: String, key: String)
+        : DataFrame =
+      Snapshot.readSelected(s, root)(_.get(key))
         .getOrElse(throw new IllegalStateException(
           s"tokenizer generation store at $root has no committed $key"))
 
     def readMerges(s: SparkSession, root: String): Vector[(String, String)] =
-      s.read.parquet(keyDir(s, root, "merges"))
+      keyTable(s, root, "merges")
         .select(col("rank"), col("left"), col("right"))
         .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
         .sortBy(_._1).map(t => (t._2, t._3)).toVector
 
     def readVocab(s: SparkSession, root: String): Map[String, Long] =
-      s.read.parquet(keyDir(s, root, "vocab"))
+      keyTable(s, root, "vocab")
         .select(col("piece"), col("lp_micro"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }

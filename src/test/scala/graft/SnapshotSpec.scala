@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Snapshot
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Unit contract of the atomic snapshot commit protocol (r12) — the
   * pointer/manifest/GC mechanics in isolation; StreamFailureSpec covers
@@ -14,15 +15,21 @@ class SnapshotSpec extends AnyFunSuite {
   private def tmp(): String =
     Files.createTempDirectory("graft_snap").toString + "/t"
 
+  /** A commit recording one placeholder schema for every version
+    * directory `m` maps (every commit must record its versions'). */
+  private def commit(root: String, m: Snapshot.Manifest): Unit =
+    Snapshot.commit(root, m, m.values.map(v => v.split('/').head ->
+      StructType(Seq(StructField("k", LongType)))).toMap)
+
   test("manifest round-trips: empty, single key, multi-key with paths") {
     val root = tmp()
     assert(Snapshot.currentManifest(root).isEmpty, "no pointer yet")
-    Snapshot.commit(root, Map.empty)
+    commit(root, Map.empty)
     assert(Snapshot.currentManifest(root) == Some(Map.empty[String, String]))
-    Snapshot.commit(root, Map("table" -> "v0"))
+    commit(root, Map("table" -> "v0"))
     assert(Snapshot.currentManifest(root) == Some(Map("table" -> "v0")))
     val multi = Map("0" -> "v1/_bkt=0", "3" -> "v2/_bkt=3", "7" -> "v1/_bkt=7")
-    Snapshot.commit(root, multi)
+    commit(root, multi)
     assert(Snapshot.currentManifest(root) == Some(multi))
   }
 
@@ -48,14 +55,14 @@ class SnapshotSpec extends AnyFunSuite {
       Files.writeString(d.resolve("part-0.parquet"), v)
     }
     // v1 referenced by two keys (bucket layout), v0/v2 unreferenced.
-    Snapshot.commit(root, Map("0" -> "v1/_bkt=0", "1" -> "v1/_bkt=1"))
+    commit(root, Map("0" -> "v1/_bkt=0", "1" -> "v1/_bkt=1"))
     assert(Files.exists(Paths.get(root, "v1")))
     assert(!Files.exists(Paths.get(root, "v0")) &&
       !Files.exists(Paths.get(root, "v2")),
       "unreferenced versions must be swept")
     // The non-version junk dir is never GC's business.
     Files.createDirectories(Paths.get(root, "checkpoint"))
-    Snapshot.commit(root, Map("0" -> "v1/_bkt=0"))
+    commit(root, Map("0" -> "v1/_bkt=0"))
     assert(Files.exists(Paths.get(root, "checkpoint")))
   }
 
@@ -68,13 +75,13 @@ class SnapshotSpec extends AnyFunSuite {
       Files.writeString(d.resolve("part-0.parquet"), v)
     }
     mkv("v0")
-    Snapshot.commit(root, Map("t" -> "v0"))
+    commit(root, Map("t" -> "v0"))
     mkv("v1")
-    Snapshot.commit(root, Map("t" -> "v1"))
+    commit(root, Map("t" -> "v1"))
     assert(Files.exists(Paths.get(root, "v0")),
       "a reader holding v0 paths must survive the v1 commit")
     mkv("v2")
-    Snapshot.commit(root, Map("t" -> "v2"))
+    commit(root, Map("t" -> "v2"))
     assert(!Files.exists(Paths.get(root, "v0")),
       "v0 is out of the window after the v2 commit")
     assert(Files.exists(Paths.get(root, "v1")) &&
@@ -84,11 +91,11 @@ class SnapshotSpec extends AnyFunSuite {
   test("the pointer swap replaces atomically: a reader sees old or new, " +
       "never a missing pointer") {
     val root = tmp()
-    Snapshot.commit(root, Map("table" -> "v0"))
+    commit(root, Map("table" -> "v0"))
     // 50 rapid commits; the pointer must parse on every interleaved
     // read (same-dir ATOMIC_MOVE rename).
     (1 to 50).foreach { i =>
-      Snapshot.commit(root, Map("table" -> s"v$i"))
+      commit(root, Map("table" -> s"v$i"))
       val m = Snapshot.currentManifest(root)
       assert(m.isDefined && m.get("table").startsWith("v"))
     }

@@ -26,22 +26,22 @@ class StateTablesFsSpec extends AnyFunSuite with SparkFixture {
     assert(v0 == "v0")
     // create the version dir content through Spark (also a file: write)
     import spark.implicits._
-    Seq((1, "a")).toDF("k", "v").write
-      .parquet(Snapshot.versionPath(root, v0))
-    Snapshot.commit(root, Map("table" -> v0))
+    val df0 = Seq((1, "a")).toDF("k", "v")
+    df0.write.parquet(Snapshot.versionPath(root, v0))
+    Snapshot.commit(root, Map("table" -> v0), Map(v0 -> df0.schema))
     assert(Snapshot.currentManifest(root).contains(Map("table" -> v0)))
 
     val v1 = Snapshot.nextVersion(root)
     assert(v1 == "v1")
-    Seq((2, "b")).toDF("k", "v").write
-      .parquet(Snapshot.versionPath(root, v1))
-    Snapshot.commit(root, Map("table" -> v1))
+    val df1 = Seq((2, "b")).toDF("k", "v")
+    df1.write.parquet(Snapshot.versionPath(root, v1))
+    Snapshot.commit(root, Map("table" -> v1), Map(v1 -> df1.schema))
     assert(Snapshot.currentManifest(root).contains(Map("table" -> v1)))
     // retention window: v0 survives one commit, is swept by the next
     val v2 = Snapshot.nextVersion(root)
-    Seq((3, "c")).toDF("k", "v").write
-      .parquet(Snapshot.versionPath(root, v2))
-    Snapshot.commit(root, Map("table" -> v2))
+    val df2 = Seq((3, "c")).toDF("k", "v")
+    df2.write.parquet(Snapshot.versionPath(root, v2))
+    Snapshot.commit(root, Map("table" -> v2), Map(v2 -> df2.schema))
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "v0")),
@@ -98,8 +98,9 @@ class StateTablesFsSpec extends AnyFunSuite with SparkFixture {
   test("deleteRecursively and copyRecursively resolve the file: scheme") {
     import spark.implicits._
     val a = freshRoot("copy_src")
-    Seq((1, "a")).toDF("k", "v").write.parquet(a + "/v0")
-    Snapshot.commit(a, Map("table" -> "v0"))
+    val df = Seq((1, "a")).toDF("k", "v")
+    df.write.parquet(a + "/v0")
+    Snapshot.commit(a, Map("table" -> "v0"), Map("v0" -> df.schema))
     val b = a.stripSuffix("state") + "clone"
     Snapshot.copyRecursively(a, b)
     assert(Snapshot.currentManifest(b).contains(Map("table" -> "v0")))

@@ -337,8 +337,7 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
       "a torn uncommitted write must be invisible to readers")
 
     // (b) complete but unswapped: a real parquet dir, pointer untouched.
-    bp(99).withColumn("_bid", org.apache.spark.sql.functions.lit(1L))
-      .write.mode("overwrite").parquet(s"$state/v2")
+    bp(99).write.mode("overwrite").parquet(s"$state/v2")
     assert(asMap(MonoidTable.read(spark, state)) == committed,
       "an unswapped complete write must be invisible to readers")
 
