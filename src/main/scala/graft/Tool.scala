@@ -26,9 +26,9 @@ import scala.jdk.CollectionConverters._
   *  - `probe <row>`: one row, warmed once, then every Spark job each of
   *    [[Reps]] reps launched (wall, stages, tasks), so a multi-job row
   *    (streaming replays, iterative loops, state-table folds) is
-  *    attributable job by job instead of one opaque median. A replay's
-  *    job is labelled `<row> batch = N`; a job with no description by
-  *    its stage names.
+  *    attributable job by job instead of one opaque median. A job is
+  *    labelled `<row> rep N`, a replay's micro-batch job
+  *    `<row> batch = N`; a job with no description by its stage names.
   *  - `plan <row[,row...]>`: each row's `.explain("formatted")` plan, to
   *    stdout or to `<outDir>/<row>_<suffix>.txt`. A replay row's build
   *    runs the replay first, so the plan is the one the timed action
@@ -147,7 +147,13 @@ object Tool {
       jobs.clear()
       stageJob.clear()
       recording.set(true)
-      val wall = seconds(q.build(s, dir).count())
+      // AQE's stage futures copy the caller's local properties, so every
+      // job the rep starts carries this label; a replay's micro-batch
+      // sets its own `<row> batch = N`.
+      s.sparkContext.setJobDescription(s"${q.name} rep $r")
+      val wall =
+        try seconds(q.build(s, dir).count())
+        finally s.sparkContext.setJobDescription(null)
       // Drain the async listener bus before reading: tail task/jobEnd
       // events otherwise drop or bleed into the next rep. listenerBus is
       // private[spark] — reflection, with a bounded sleep as the

@@ -1011,7 +1011,7 @@ object AnalyticsQueries {
     * median extractions (values, then deviations) and one final
     * per-type agg — no float op anywhere.
     *
-    * Scale: both median passes use the [[StatQueries.bucketNtile]]
+    * Scale: both median passes use the [[StatQueries.bucketNtiles]]
     * rank decomposition idea directly: rank-at-position via per-bucket
     * offsets (dollar buckets — value-range-bounded domains) + a
     * bucket-partitioned distributed window; no single-partition window

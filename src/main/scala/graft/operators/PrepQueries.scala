@@ -409,7 +409,7 @@ object PrepQueries {
     * for a 2-dp metric under 500 at any corpus size); per-value
     * counts partial-agg before the one unpartitioned window, which
     * therefore runs over the bounded domain table only (the
-    * bucketNtile exception). */
+    * bucketNtiles exception). */
   val qPrepQuantileTransform: Q = Q(
     "q_prep_quantile_transform",
     (s, dir) => {

@@ -371,46 +371,68 @@ object StatQueries {
         |WHERE event_type = 'purchase'
         |ORDER BY event_id""".stripMargin))
 
+  /** One dimension of [[bucketNtiles]]: `bucket` must be a coarsening
+    * of the leading sort key and `ties` the remaining total order within
+    * a bucket — together they form the total order the DuckDB twin's
+    * `ntile(k) OVER (ORDER BY ...)` names. The tile lands in `out`. */
+  private[graft] final case class NtileDim(bucket: Column, ties: Seq[Column],
+      out: String)
+
   /** Global NTILE over an unbounded entity table WITHOUT a global
-    * single-partition window — the q_win_distribution technique,
-    * factored out: global rank = per-bucket offset (computed on the
-    * BUCKET table, whose size is the value domain, not the entity
-    * count) + row_number within the bucket (a DISTRIBUTED window,
-    * partitioned by bucket). The ntile bucket formula then mirrors the
-    * SQL-standard split (first n%k tiles get one extra row), so the
-    * DuckDB twin can write plain `ntile(k) OVER (ORDER BY ...)`.
+    * single-partition window, for any number of sort orders at once:
+    * global rank = per-bucket offset (computed on the BUCKET histogram,
+    * whose size is the value domain, not the entity count) + row_number
+    * within the bucket (a DISTRIBUTED window, partitioned by bucket).
+    * The ntile bucket formula then mirrors the SQL-standard split (first
+    * n%k tiles get one extra row), so the twin writes plain ntile(k).
     *
-    * `bucketCol` must be a coarsening of the leading sort key and
-    * `tieCols` the remaining total order within a bucket — together
-    * they must form the same total order the twin's OVER clause names.
-    * At 100 TB the bucket tables stay bounded because they are
-    * value-range-domains (days, counts, $100 spend buckets), which do
+    * Every dimension's bucket is stacked (a union of one-column reads)
+    * into `(dim, bucket)` rows and ONE histogram is aggregated over them;
+    * one small window partitioned by dim turns it into each bucket's
+    * offset and its dimension's `n`, folded into a single-row
+    * `(dim, bucket) -> (off, n)` map. That row is broadcast once and each
+    * entity row looks its offsets up before any rank step, so the rank
+    * windows run as a chain over the same rows: no join back on an
+    * entity key. (One broadcast join of an offsets table per dimension
+    * would aggregate the histogram once per join when the input is a
+    * cached frame: AQE does not reuse an exchange above a table-cache
+    * stage.) Everything stays lazy: building the frame starts no job.
+    *
+    * At 100 TB the histogram stays bounded because buckets are
+    * value-range domains (days, counts, $100 spend buckets), which do
     * not grow with row count. */
-  private def bucketNtile(
-      s: SparkSession, df: DataFrame, k: Int,
-      bucketCol: Column, tieCols: Seq[Column], out: String): DataFrame = {
-    import s.implicits._
-    val withB = df.withColumn("__bkt", bucketCol)
-    val buckets = withB.groupBy($"__bkt").agg(count(lit(1)).as("__c"))
-    val wCum = Window.orderBy($"__bkt")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = buckets
-      .withColumn("__off", sum($"__c").over(wCum) - $"__c")
-      .select($"__bkt", $"__off")
-    val total = buckets.agg(sum($"__c").cast(LongType).as("__n"))
-    val wIn = Window.partitionBy($"__bkt").orderBy(tieCols: _*)
-    withB.join(broadcast(offsets), "__bkt")
-      .crossJoin(broadcast(total))
-      .withColumn("__rn", row_number().over(wIn).cast(LongType) + $"__off")
-      .withColumn("__base", expr(s"__n div $k"))
-      .withColumn("__extra", $"__n" % k)
-      .withColumn(out,
-        when($"__rn" <= ($"__base" + 1) * $"__extra",
-          expr("(__rn - 1) div (__base + 1)") + 1)
-          .otherwise(
-            $"__extra" + expr("(__rn - 1 - (__base + 1) * __extra) div __base") + 1)
-          .cast(LongType))
-      .drop("__bkt", "__off", "__n", "__rn", "__base", "__extra")
+  private[graft] def bucketNtiles(df: DataFrame, k: Int,
+      dims: NtileDim*): DataFrame = {
+    val bkts = dims.indices.map(i => s"__bkt$i")
+    val withB = df.select(col("*") +: dims.zip(bkts).map { case (d, b) =>
+      d.bucket.cast(LongType).as(b) }: _*)
+    val byDim = Window.partitionBy("dim")
+    val offsets = bkts.zipWithIndex
+      .map { case (b, i) => withB.select(lit(i).as("dim"), col(b).as("bkt")) }
+      .reduce(_ union _)
+      .groupBy("dim", "bkt").agg(count(lit(1)).as("c"))
+      .select(struct("dim", "bkt").as("key"), struct(
+        (sum("c").over(byDim.orderBy("bkt").rowsBetween(
+          Window.unboundedPreceding, Window.currentRow)) - col("c")).as("off"),
+        sum("c").over(byDim).as("n")).as("value"))
+      .agg(map_from_entries(collect_list(struct("key", "value"))).as("__offs"))
+    // Look every dimension up at once, so the map never reaches a shuffle.
+    val looked = withB.crossJoin(broadcast(offsets))
+      .select(col("*") +: bkts.zipWithIndex.map { case (b, i) =>
+        col("__offs")(struct(lit(i).as("dim"), col(b).as("bkt"))).as(s"__o$i")
+      }: _*).drop("__offs")
+    dims.zip(bkts).zipWithIndex.foldLeft(looked) { case (d, ((dim, b), i)) =>
+      d.withColumn("__rn", row_number().over(Window.partitionBy(b)
+          .orderBy(dim.ties: _*)).cast(LongType) + col(s"__o$i.off"))
+        .withColumn("__base", expr(s"__o$i.n div $k"))
+        .withColumn("__extra", col(s"__o$i.n") % k)
+        // CaseWhen evaluates only the branch taken: when n < k every
+        // rn <= extra, so the `div __base` (base 0) branch never runs.
+        .withColumn(dim.out, expr("CAST(CASE WHEN __rn <= (__base + 1) * " +
+          "__extra THEN (__rn - 1) div (__base + 1) + 1 ELSE __extra + " +
+          "(__rn - 1 - (__base + 1) * __extra) div __base + 1 END AS BIGINT)"))
+        .drop("__rn", "__base", "__extra")
+    }.drop(bkts ++ dims.indices.map(i => s"__o$i"): _*)
   }
 
   /** q_events_rfm — RFM customer scoring (Recency / Frequency /
@@ -428,18 +450,18 @@ object StatQueries {
     * makes ntile deterministic in both engines.
     *
     * Scale (100 TB): the fact table collapses to per-user aggregates
-    * in one partial-agg shuffle. The three global quintiles then use
-    * [[bucketNtile]] — NO single-partition window ever sees the user
-    * table: ranks come from bucket-partitioned distributed windows
-    * plus offsets over bounded value-domain bucket tables (31 days /
-    * small counts / $100 spend buckets). The DuckDB twin writes plain
-    * ntile(5) windows; the hash-match proves the decomposition. */
-  /** Per-user RFM aggregate, persisted per (session, dir): each of the
-    * three quintile passes reads it THREE times (rows + bucket counts +
-    * total), so nine scans of a chained un-persisted plan would
-    * re-derive the purchase aggregation — and each other's windows —
-    * combinatorially (the first cut planned 43 single-partition
-    * exchanges; PlanAuditSpec now pins ≤ 6). */
+    * in one partial-agg shuffle. The three global quintiles then come
+    * from ONE [[bucketNtiles]] call — NO single-partition window ever
+    * sees the user table: one histogram over the stacked (dimension,
+    * bucket) values of the bounded domains (31 days / small counts /
+    * $100 spend buckets) gives every offset, and three bucket-partitioned
+    * rank windows run as a chain over the user rows, with no join back
+    * on user_id. The DuckDB twin writes plain ntile(5) windows; the
+    * hash-match proves the decomposition. */
+  /** Per-user RFM aggregate, persisted per (session, dir): each call
+    * reads it four times (one bucket column per dimension into the
+    * histogram, and the rank chain's rows), so an un-persisted plan
+    * would re-derive the purchase aggregation in every read. */
   private val rfmAggCache = new graft.Memo[(SparkSession, String), DataFrame]
 
   val qEventsRfm: Q = Q(
@@ -463,18 +485,11 @@ object StatQueries {
             $"sv".cast(DoubleType).as("monetary"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
-      // The three quintiles are INDEPENDENT functions of the persisted
-      // aggregate (not a chain): each pass's bucket/offset side plans
-      // read the InMemory scan, and the score tables join back keyed
-      // on user_id.
-      def pass(bucket: Column, ties: Seq[Column], out: String) =
-        bucketNtile(s, agg, 5, bucket, ties, out)
-          .select($"user_id", col(out))
-      agg
-        .join(pass($"recency_days", Seq($"user_id"), "qr"), "user_id")
-        .join(pass($"frequency", Seq($"user_id"), "qf"), "user_id")
-        .join(pass(expr("mon_cents div 10000"),
-          Seq($"mon_cents", $"user_id"), "qm"), "user_id")
+      bucketNtiles(agg, 5,
+        NtileDim($"recency_days", Seq($"user_id"), "qr"),
+        NtileDim($"frequency", Seq($"user_id"), "qf"),
+        NtileDim(expr("mon_cents div 10000"), Seq($"mon_cents", $"user_id"),
+          "qm"))
         .select($"user_id", $"recency_days", $"frequency", $"monetary",
           (lit(6L) - $"qr").as("r_score"),
           $"qf".as("f_score"),
@@ -1288,7 +1303,7 @@ object StatQueries {
     * ranks by the total (cents, user_id) order so no boundary sits on
     * a tie or a float; shares are exact integer ppm of exact Long
     * sums. Scale (100 TB): the fact scan partial-aggs to per-user
-    * rows; the global decile uses [[bucketNtile]] ($100 spend
+    * rows; the global decile uses [[bucketNtiles]] ($100 spend
     * buckets) — NO single-partition window ever sees the user table
     * (the RFM argument); the twin's plain ntile(10) hash-match proves
     * the decomposition. Everything after is a 10-row domain. */
@@ -1300,8 +1315,8 @@ object StatQueries {
         .where($"event_type" === "purchase")
         .groupBy($"user_id")
         .agg((sum(dec2($"value")) * 100).cast(LongType).as("cents"))
-      val dec = bucketNtile(s, perUser, 10,
-        expr("cents div 10000"), Seq($"cents", $"user_id"), "decile")
+      val dec = bucketNtiles(perUser, 10,
+        NtileDim(expr("cents div 10000"), Seq($"cents", $"user_id"), "decile"))
       val per = dec.groupBy($"decile")
         .agg(count(lit(1)).as("users"), sum($"cents").as("sumc"))
       val wAll = Window.partitionBy()

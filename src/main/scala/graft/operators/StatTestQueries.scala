@@ -37,7 +37,7 @@ import graft.Dsl._
   * a 2-dp metric under 500.00 has ≤ 50,000 distinct cents values no
   * matter how many fact rows exist, so the unpartitioned cumulative
   * window runs over a domain table (the bounded-domain exception the
-  * bucketNtile device documents); per-(type,value) partial aggregation
+  * bucketNtiles device documents); per-(type,value) partial aggregation
   * happens BEFORE anything touches the ladder, so the fact table is
   * scanned once with map-side combine and shuffled only as ≤ |types|·|V|
   * grouped rows. For an unbounded-domain metric the ladder would be
@@ -1188,7 +1188,7 @@ object StatTestQueries {
     *
     * Shape: one fact scan collapses to the ≤31-row day domain; the
     * unpartitioned rank window runs on that bounded domain only (the
-    * bucketNtile discipline's allowance). */
+    * bucketNtiles discipline's allowance). */
   val qStatWilcoxon: Q = Q(
     "q_stat_wilcoxon",
     (s, dir) => {

@@ -1,11 +1,15 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression audit: locks in the scale-critical plan
   * shapes so a future edit can't silently reintroduce a scale-killer
   * (SURVEY.md §4 — our job is to not defeat Catalyst). */
-class PlanAuditSpec extends AnyFunSuite with SparkFixture {
+class PlanAuditSpec extends AnyFunSuite with SparkFixture
+    with AdaptiveSparkPlanHelper {
 
   private def planOf(name: String): String =
     Catalog.byName(name).build(spark, sfDir)
@@ -639,15 +643,15 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
 
   test("q_events_rfm: quintile windows partition by bucket; only " +
     "domain-sized sides run single-partition") {
-    // The whole point of bucketNtile: the USER table is never fed to an
-    // unpartitioned window. Each of the three passes contributes one
-    // bucket-partitioned window over the users plus two tiny
-    // single-partition sides (bucket cumsum + 1-row total).
+    // The whole point of bucketNtiles: the USER table is never fed to an
+    // unpartitioned window. Each of the three rank steps is one
+    // bucket-partitioned window over the users; only the bucket
+    // histogram's offsets run on tiny single-partition sides.
     val p = planOf("q_events_rfm")
     assert(p.contains("hashpartitioning(__bkt"),
       s"per-user ranks must come from bucket-partitioned windows:\n$p")
-    // Every downstream read (3 passes × rows/buckets/total + the final
-    // join spine) must go through the persisted per-user aggregate —
+    // Every downstream read (one per dimension into the histogram + the
+    // rank chain's rows) must go through the persisted per-user aggregate —
     // at runtime the events fixture is scanned once to materialize it.
     // Exchange/scan LINE counts are not pinned: each InMemoryTableScan
     // re-prints the cached child plan, so strings multiply without the
@@ -656,6 +660,28 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     assert(imts >= 4,
       s"quintile passes must read the persisted aggregate " +
         s"(got $imts InMemory scans):\n$p")
+  }
+
+  test("q_events_rfm: one bucket histogram per call, no join back on " +
+    "user_id, at most 8 jobs per warm call") {
+    val build = Catalog.byName("q_events_rfm").build
+    build(spark, sfDir).count() // fills the persisted aggregate
+    val jobs = JobLog.during(spark)(build(spark, sfDir).count())
+    assert(jobs.size <= 8, s"${jobs.size} jobs per warm call")
+    // The full result, as Verify writes it; after the action the plan is
+    // the executed one, with any reused exchange as a leaf.
+    val df = build(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    assert(!p.toString.contains("SortMergeJoin"),
+      s"the three rank steps must chain, not join back:\n$p")
+    val hist = collect(p) {
+      case a: HashAggregateExec
+          if a.groupingExpressions.map(_.name) == Seq("dim", "bkt") &&
+            a.aggregateExpressions.exists(_.mode == Final) => a
+    }
+    assert(hist.size == 1,
+      s"the (dim, bucket) histogram must be aggregated once:\n$p")
   }
 
   test("q_anomaly_mad: both median extractions run bucket-partitioned") {

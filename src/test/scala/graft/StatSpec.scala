@@ -327,4 +327,47 @@ class StatSpec extends AnyFunSuite with SparkFixture {
     assert(gains.zip(gains.drop(1)).forall { case (a, b) => b <= a })
     assert(gains.head > 400000L && gains.last < 110000L)
   }
+
+  test("bucketNtiles equals ntile(k) OVER (ORDER BY ...) on one and " +
+    "three dimensions") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.operators.StatQueries.{NtileDim, bucketNtiles}
+    // Under ANSI division a `div 0` raises, so the n < k case shows the
+    // `div __base` branch is never evaluated.
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    // Each dimension: its bucket, its tie order, and the total order the
+    // plain ntile names (the bucket coarsens the order's leading key).
+    val dims = Seq(
+      NtileDim(expr("x div 10"), Seq($"x", $"id"), "tx") -> Seq($"x", $"id"),
+      NtileDim($"y", Seq($"id"), "ty") -> Seq($"y", $"id"),
+      NtileDim(expr("z div 4"), Seq($"z", $"id"), "tz") -> Seq($"z", $"id"))
+    def check(why: String, k: Int, rows: Seq[(Long, Long, Long, Long)]) =
+      for (ds <- Seq(dims.take(1), dims)) {
+        val df = rows.toDF("id", "x", "y", "z")
+        val got = bucketNtiles(df, k, ds.map(_._1): _*)
+        val outs = ds.map(_._1.out)
+        assert(got.columns.toSeq == df.columns.toSeq ++ outs, why)
+        val want = ds.map { case (d, order) =>
+          df.select($"id", ntile(k).over(Window.orderBy(order: _*))
+            .cast("long").as(d.out))
+        }.reduce(_.join(_, "id"))
+        def tiles(f: org.apache.spark.sql.DataFrame) =
+          f.select("id", outs: _*).collect()
+            .map(r => r.getLong(0) -> (1 to outs.size).map(r.getLong)).toMap
+        assert(tiles(got) == tiles(want), s"$why, ${ds.size} dimension(s)")
+      }
+    val rnd = new scala.util.Random(11)
+    check("n < k", 5, Seq((1L, 3L, 2L, 9L), (2L, 40L, 2L, 1L), (3L, 41L, 7L, 5L)))
+    check("n % k == 0", 5, (1L to 20L).map(i =>
+      (i, rnd.nextInt(60).toLong, rnd.nextInt(3).toLong, rnd.nextInt(30).toLong)))
+    check("gaps in the bucket domain", 4, (1L to 13L).map(i =>
+      (i, Seq(1L, 2L, 35L, 37L, 91L)(rnd.nextInt(5)),
+        Seq(0L, 8L, 1000L)(rnd.nextInt(3)), Seq(0L, 50L)(rnd.nextInt(2)))))
+    check("ties inside a bucket", 3, (1L to 17L).map(i =>
+      (i, 20L + rnd.nextInt(2), 4L, 7L)))
+    check("a single bucket", 5, (1L to 9L).map(i => (i, 9L - i, 1L, i % 4)))
+    check("an empty frame", 5, Nil)
+  }
 }
