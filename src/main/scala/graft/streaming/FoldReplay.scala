@@ -13,12 +13,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * AvailableNow, bound the wait. The folds plan on `batch.sparkSession`,
   * a child of the clone, so they inherit its conf. Rows whose per-batch
   * work includes a corpus-scale aggregate (the banding rows) pass a
-  * larger `shufflePartitions`; crash-injection specs pass a
-  * `checkpoint` so a restart re-delivers the fenced batch. */
+  * larger `shufflePartitions`. Every run starts without a checkpoint,
+  * so batch 0 resets each state table; specs inject crashes through
+  * [[Snapshot.crashAt]]. */
 private[graft] object FoldReplay {
   def run(src: DataFrame, name: String,
-      shufflePartitions: String = "4",
-      checkpoint: Option[String] = None)(
+      shufflePartitions: String = "4")(
       fold: (DataFrame, Long) => Unit): Unit = {
     val s = src.sparkSession
     // AQE off for the fold's micro-batch jobs (r15): each per-batch
@@ -33,9 +33,8 @@ private[graft] object FoldReplay {
       "spark.sql.shuffle.partitions" ->
         s.conf.get("spark.graft.replay.shufflePartitions", shufflePartitions),
       Scope.aqeOff)
-    var w = Scope.bind(src, scoped).writeStream.queryName(name)
+    val w = Scope.bind(src, scoped).writeStream.queryName(name)
       .trigger(Trigger.AvailableNow())
-    checkpoint.foreach(c => w = w.option("checkpointLocation", c))
     drive(s, scoped, name)(
       w.foreachBatch((b: DataFrame, id: Long) => fold(b, id)).start())
   }

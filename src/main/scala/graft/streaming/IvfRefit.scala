@@ -162,13 +162,12 @@ object IvfRefit {
     * of (postings, stats)):
     *   (cell, n_old, n_new, moved_in, moved_out, shift_sq_micro2).
     *
-    * `abortBeforeCommit` is the spec's crash hook: every version
-    * directory of the new generation is fully written, then the
-    * process "dies" before the pointer swap — readers must still see
-    * the complete old generation, and a re-run must converge
-    * (IvfRefitSpec injects exactly that). */
-  private[graft] def refit(s: SparkSession, state: String, root: String,
-      abortBeforeCommit: Boolean = false): DataFrame = {
+    * Every version directory of the new generation is written before
+    * the one commit: IvfRefitSpec crashes that commit through
+    * [[Snapshot.crashAt]] — readers must still see the complete old
+    * generation, and a re-run must converge. */
+  private[graft] def refit(s: SparkSession, state: String, root: String)
+      : DataFrame = {
     val frozen = Gen.readCodebook(s, root)
     val newCb = mStep(MonoidTable.read(s, state), frozen)
     val prior = Snapshot.currentManifest(root).getOrElse(Map.empty)
@@ -226,8 +225,6 @@ object IvfRefit {
             Map(vP -> schema))
         }
       val (vC, book) = Snapshot.write(root, Gen.codebookRows(s, newCb))
-      if (abortBeforeCommit) throw new IllegalStateException(
-        "injected crash before the generation swap")
       Snapshot.commit(root, manifest + ("codebook" -> vC),
         written + (vC -> book))
 

@@ -90,15 +90,12 @@ object ModelRefit {
   object Gen {
 
     def publish(s: SparkSession, root: String,
-        model: QualityClassifier.Model,
-        abortBeforeCommit: Boolean = false): Unit = {
+        model: QualityClassifier.Model): Unit = {
       import s.implicits._
       val (v, schema) = Snapshot.write(root, model.w.zipWithIndex
         .map { case (w, j) =>
           (j, java.lang.Double.doubleToLongBits(w)) }
         .toDF("j", "w_bits"))
-      if (abortBeforeCommit) throw new IllegalStateException(
-        "injected crash before the model generation swap")
       Snapshot.commit(root, Map("model" -> v), Map(v -> schema))
     }
 
@@ -116,13 +113,13 @@ object ModelRefit {
 
   /** Replay the histogram maintenance over the staged document chunks
     * (the corpus-dedup stage — same chunking, same key collisions). */
-  private[graft] def maintain(s: SparkSession, dir: String, state: String,
-      checkpoint: Option[String] = None): Unit = {
+  private[graft] def maintain(s: SparkSession, dir: String,
+      state: String): Unit = {
     val st = StreamCorpusDedup.DocStage
     val inDir = st.inDir(s, dir)
     val src = s.readStream.schema(st.schema(s, inDir))
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    FoldReplay.run(src, "q_stream_model_refit", checkpoint = checkpoint) {
+    FoldReplay.run(src, "q_stream_model_refit") {
       (batch, id) =>
         MonoidTable.merge(state, partials(batch), id,
           Seq("n_tok", "n_distinct", "n_stop"))
@@ -156,11 +153,11 @@ object ModelRefit {
   /** Execute one refit: weighted IRLS from the maintained state, atomic
     * generation swap, per-weight drift report (j, w_frozen, w_refit) —
     * a pure function of (frozen model, stats), deterministic. */
-  private[graft] def refit(s: SparkSession, state: String, root: String,
-      abortBeforeCommit: Boolean = false): DataFrame = {
+  private[graft] def refit(s: SparkSession, state: String, root: String)
+      : DataFrame = {
     val frozen = Gen.read(s, root)
     val refitted = trainFromStats(s, state)
-    Gen.publish(s, root, refitted, abortBeforeCommit)
+    Gen.publish(s, root, refitted)
     import s.implicits._
     frozen.w.indices
       .map(j => (j, frozen.w(j), refitted.w(j)))

@@ -194,11 +194,10 @@ object PqRefit {
     * (a pure function of (postings, stats) — deterministic):
     *   (j, codes_changed, cells_rewritten, shift_sq_micro2).
     *
-    * `abortBeforeCommit` is the spec's crash hook — every new version
-    * directory is fully written, then the process "dies" before the
-    * pointer swap. */
-  private[graft] def refit(s: SparkSession, state: String, root: String,
-      abortBeforeCommit: Boolean = false): DataFrame = {
+    * Every new version directory is written before the one commit,
+    * which PqRefitSpec crashes through [[Snapshot.crashAt]]. */
+  private[graft] def refit(s: SparkSession, state: String, root: String)
+      : DataFrame = {
     val frozen = Gen.readCodebooks(s, root)
     val newBooks = mStep(MonoidTable.read(s, state), frozen)
     val prior = Snapshot.currentManifest(root).getOrElse(Map.empty)
@@ -232,8 +231,6 @@ object PqRefit {
             Map(vP -> schema))
         }
       val (vC, book) = Snapshot.write(root, Gen.codebookRows(s, newBooks))
-      if (abortBeforeCommit) throw new IllegalStateException(
-        "injected crash before the PQ generation swap")
       Snapshot.commit(root, manifest + ("codebook" -> vC),
         written + (vC -> book))
 
@@ -266,14 +263,13 @@ object PqRefit {
     * the frozen sub-books and fold the (j, cell, lpos)-keyed partials
     * through the fenced monoid merge. Shares [[StreamVecIndex.VecStage]]
     * staging (same corpus chunks); its own state root. */
-  private[graft] def maintain(s: SparkSession, dir: String, state: String,
-      checkpoint: Option[String] = None,
-      books: Option[Seq[Seq[Array[Float]]]] = None): Unit = {
-    val bks = books.getOrElse(PqQuantizer.Codebooks(s, dir))
+  private[graft] def maintain(s: SparkSession, dir: String,
+      state: String): Unit = {
+    val bks = PqQuantizer.Codebooks(s, dir)
     val inDir = StreamVecIndex.VecStage.inDir(s, dir)
     val src = s.readStream.schema(StreamVecIndex.VecStage.schema(s, inDir))
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    FoldReplay.run(src, "q_vec_pq_refit", checkpoint = checkpoint) {
+    FoldReplay.run(src, "q_vec_pq_refit") {
       (batch, id) =>
         MonoidTable.merge(state, partials(batch, bks), id,
           Seq("j", "cell", "lpos"))

@@ -49,8 +49,8 @@ private[graft] object Snapshot {
     *    directory the manifest references, recorded at write time from
     *    the written frame, so every read of a committed version binds
     *    it ([[read]]) and no micro-batch runs a schema-inference job;
-    *  - `@bid<TAB>n` — [[MonoidTable]]'s last merged batch id, the
-    *    re-delivery fence, read without a job.
+    *  - `@bid<TAB>n` — [[MonoidTable]]'s or [[UpsertState]]'s last
+    *    merged batch id, the re-delivery fence, read without a job.
     * Both ride the same atomic rename as the data they describe. */
   final case class Pointer(manifest: Manifest,
       schemas: Map[String, StructType], bid: Option[Long])
@@ -149,7 +149,8 @@ private[graft] object Snapshot {
     * adds ([[write]] returns it); a directory the prior pointer already
     * mapped keeps its recorded schema. A commit that would map a
     * directory with no recorded schema is refused — readers never
-    * infer. `bid` is the monoid fence line; None writes none.
+    * infer. `bid` is the batch fence line; None writes none.
+    * Tests crash a commit at any of its [[Phase]]s through [[crashAt]].
     *
     * RETENTION WINDOW: GC keeps the versions referenced by the new
     * manifest AND by the one it replaces, so a reader that resolved
@@ -167,6 +168,11 @@ private[graft] object Snapshot {
       bid: Option[Long] = None): Unit = {
     require(!manifest.keys.exists(_.startsWith("@")),
       s"manifest keys starting with @ are reserved: ${manifest.keys}")
+    val crash = armed.get(root)
+    def crashPoint(at: Phase): Unit =
+      if (crash == at && armed.remove(root, at))
+        throw new IllegalStateException(s"injected crash $at at $root")
+    crashPoint(BeforePointer)
     val prior = current(root)
     val dirs = manifest.values.map(versionDir).toSet
     val known = prior.fold(Map.empty[String, StructType])(_.schemas) ++
@@ -185,9 +191,31 @@ private[graft] object Snapshot {
     try out.write(lines.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    crashPoint(BeforeSwap)
     atomicReplace(fs, tmp, pointerPath(root))
+    crashPoint(BeforeGc)
     gc(root, dirs ++
       prior.fold(Set.empty[String])(_.manifest.values.map(versionDir).toSet))
+  }
+
+  /** The crash windows of a [[commit]], in order. */
+  sealed trait Phase
+  case object BeforePointer extends Phase // version dirs written, nothing else
+  case object BeforeSwap extends Phase // `_current.tmp` written, not renamed
+  case object BeforeGc extends Phase // pointer swapped, GC not run
+
+  private val armed =
+    new java.util.concurrent.ConcurrentHashMap[String, Phase]()
+
+  /** THE crash-injection seam (tests only): run `body` with one crash
+    * armed at phase `at` of the next commit to exactly the root string
+    * `root`, which throws an IllegalStateException "injected crash …"
+    * once. Disarms on exit; returns whether the crash fired. */
+  private[graft] def crashAt(root: String, at: Phase)(body: => Unit)
+      : Boolean = {
+    armed.put(root, at)
+    try { body; !armed.containsKey(root) }
+    finally armed.remove(root)
   }
 
   /** Write `df` as the root's next version directory, laid out by
@@ -503,9 +531,9 @@ private[graft] object AppendLog {
   * dynamic partition overwrite whose multi-partition commit was not).
   * Buckets here = 8 (sized to the sandbox's state; production sizes
   * buckets so one partition is a few hundred MB). Newest-wins on the
-  * total key (ts, event_id) is idempotent, so crash-retry re-delivery
-  * needs no batch-id fence: re-merging the same batch publishes new
-  * versions with identical content. */
+  * total key (ts, event_id) is idempotent, so a crash-retry re-merge
+  * publishes identical content; the `@bid` fence makes re-delivery a
+  * manifest lookup. */
 private[graft] object UpsertState {
 
   val buckets = 8
@@ -540,14 +568,15 @@ private[graft] object UpsertState {
     * dataless directory — the r11 seeding special-case
     * dissolved into the manifest design). */
   def merge(state: String, batch: DataFrame, id: Long): Unit = {
+    val prior = if (id == 0L) None else Snapshot.current(state)
+    if (prior.exists(_.bid.exists(id <= _))) return
     val bs = batch.sparkSession
     val bl = withBucket(latest(batch))
     val touched = bl.select("_bkt").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val prior = if (id == 0L) None else Snapshot.current(state)
     val prev = prior.fold(Map.empty: Snapshot.Manifest)(_.manifest)
     if (id == 0L && touched.isEmpty) {
-      Snapshot.commit(state, Map.empty)
+      Snapshot.commit(state, Map.empty, bid = Some(id))
     } else if (touched.nonEmpty) {
       // ONE multi-path scan over the touched buckets' committed dirs;
       // `_bkt` is a pure function of user_id, so it is RECOMPUTED on
@@ -564,7 +593,7 @@ private[graft] object UpsertState {
       val (v, schema) = Snapshot.write(state, merged, "_bkt")
       Snapshot.commit(state,
         prev ++ touched.map(b => b.toString -> s"$v/_bkt=$b"),
-        Map(v -> schema))
+        Map(v -> schema), Some(id))
     }
     // id > 0 with an empty batch: nothing to publish, manifest stands.
   }

@@ -131,8 +131,8 @@ object StreamCorpusDedup {
   }
 
   /** Fold one micro-batch into the two state tables. Exposed so the
-    * spec can crash-inject and re-order batches around the identical
-    * code path the catalog row runs. */
+    * specs can crash ([[Snapshot.crashAt]]) and re-order batches
+    * around the identical code path the catalog row runs. */
   private[graft] def foldBatch(index: String, flags: String,
       batch: DataFrame, id: Long): Unit =
     // The staged single-file chunks arrive as ONE input partition, so

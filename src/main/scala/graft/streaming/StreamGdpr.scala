@@ -156,23 +156,16 @@ object StreamGdpr {
     }
 
   /** The full erasure against corpus-dedup state (index + flags), with
-    * an optional ingest funnel. `abortAfterStep` is the spec's crash
-    * hook: the process "dies" after that many steps committed — the
-    * retry must re-enter at the first unfenced step and converge. */
+    * an optional ingest funnel. After a crash in a step's commit
+    * ([[Snapshot.crashAt]]) the retry must re-enter at the first
+    * unfenced step and converge. */
   private[graft] def erase(s: SparkSession, index: String, flags: String,
       erased: DataFrame, eid: Long, funnel: Option[String] = None,
       verify: (String, String) => org.apache.spark.sql.Column =
-        (_, _) => lit(true),
-      abortAfterStep: Int = Int.MaxValue): Unit = {
+        (_, _) => lit(true)): Unit = {
     val e = erased.select(col("doc_id")).distinct().localCheckpoint(true)
-    var step = 0
-    def gate(): Unit = {
-      step += 1
-      if (step >= abortAfterStep) throw new IllegalStateException(
-        s"injected crash after erasure step $abortAfterStep")
-    }
-    funnel.foreach { f => eraseFunnel(s, f, flags, e, eid); gate() }
-    eraseFlags(s, flags, index, e, eid, verify); gate()
+    funnel.foreach(eraseFunnel(s, _, flags, e, eid))
+    eraseFlags(s, flags, index, e, eid, verify)
     eraseIndex(s, index, e, eid)
   }
 
@@ -351,19 +344,16 @@ object StreamGdpr {
     }
   }
 
-  /** The full IVF-store vector erasure (stats + postings) with the
-    * spec's crash hook — `abortAfterStep = 1` dies between the two
-    * commits; the retry re-enters at the unfenced postings step.
-    * `foldCb` is the codebook the stats fold assigned under (the
-    * frozen warmup model in the shipped flows). */
+  /** The full IVF-store vector erasure (stats + postings). A crash in
+    * the postings commit (the spec arms [[Snapshot.crashAt]] on `root`)
+    * leaves the stats step fenced; the retry re-enters at the unfenced
+    * postings step. `foldCb` is the codebook the stats fold assigned
+    * under (the frozen warmup model in the shipped flows). */
   private[graft] def eraseVectors(s: SparkSession, state: String,
       root: String, erased: DataFrame, eid: Long,
-      foldCb: Seq[Array[Float]],
-      abortAfterStep: Int = Int.MaxValue): Unit = {
+      foldCb: Seq[Array[Float]]): Unit = {
     val e = erased.select(col("vec_id")).distinct().localCheckpoint(true)
     eraseVectorStats(s, state, root, e, eid, foldCb)
-    if (abortAfterStep <= 1) throw new IllegalStateException(
-      "injected crash after vector erasure step 1")
     erasePostingsStore(s, root, e, eid, IvfRefit.Gen.readPostings)
   }
 
@@ -373,12 +363,9 @@ object StreamGdpr {
     * sub-book set the stats fold encoded under. */
   private[graft] def erasePqVectors(s: SparkSession, state: String,
       root: String, erased: DataFrame, eid: Long,
-      foldBooks: Seq[Seq[Array[Float]]],
-      abortAfterStep: Int = Int.MaxValue): Unit = {
+      foldBooks: Seq[Seq[Array[Float]]]): Unit = {
     val e = erased.select(col("vec_id")).distinct().localCheckpoint(true)
     erasePqStats(s, state, root, e, eid, foldBooks)
-    if (abortAfterStep <= 1) throw new IllegalStateException(
-      "injected crash after PQ vector erasure step 1")
     erasePostingsStore(s, root, e, eid, PqRefit.Gen.readPostings)
   }
 

@@ -49,8 +49,8 @@ import org.apache.spark.sql.functions._
   * no-op, the span fold recomputes from the committed fingerprint
   * segment (append-first, the foldBands rule) and the strictly-below
   * prior index, so a retried batch never probes its own contribution
-  * (StreamSpanDedupSpec injects the partial crash and the full
-  * re-delivery).
+  * (CrashSweepSpec crashes every commit of every batch through
+  * [[Snapshot.crashAt]] and re-delivers).
   *
   * Scale (100 TB/day ingest): fingerprinting is the ~2/(window+1)
   * density narrow transform of the BATCH only; the probe is an equi
@@ -117,14 +117,11 @@ object StreamSpanDedup {
   }
 
   /** Fold one micro-batch of (doc_id, text) into the three state
-    * tables. Exposed so the spec can re-deliver, re-order and
-    * crash-inject around the identical code path the catalog row runs;
-    * `abortAfterAppends` "dies" after the fingerprint/text segments
-    * committed but before the span fold — the injected crash between
-    * the fenced commits. */
+    * tables. Exposed so the specs can re-deliver, re-order and crash
+    * (through [[Snapshot.crashAt]]) around the identical code path the
+    * catalog row runs. */
   private[graft] def foldBatch(fpidx: String, docs: String, spans: String,
-      batch: DataFrame, id: Long,
-      abortAfterAppends: Boolean = false): Unit = {
+      batch: DataFrame, id: Long): Unit = {
     val s = batch.sparkSession
     // Staged single-file chunks arrive as ONE input partition — the
     // repartition parallelizes the per-doc winnowing scan (the DocStage
@@ -138,8 +135,6 @@ object StreamSpanDedup {
     // below its own id.
     AppendLog.append(fpidx, TextQueries.Fingerprint.fingerprints(b), id)
     AppendLog.append(docs, b, id)
-    if (abortAfterAppends) throw new IllegalStateException(
-      "injected crash after the fingerprint/text segment commits")
     // Committed fingerprint segments are a few small files each, so a
     // plain scan packs them into 1–3 input splits (maxPartitionBytes ≫
     // segment size) — and because every join downstream is a broadcast,
@@ -183,23 +178,18 @@ object StreamSpanDedup {
     * the corpus store drop the cohort's rows — each fence riding the
     * same atomic manifest swap as the data it fences, so re-delivery
     * no-ops per table and a crash between steps re-enters at the first
-    * unfenced one (`abortAfterStep` is the spec's hook). Because span
+    * unfenced one (the spec crashes a step's commit through
+    * [[Snapshot.crashAt]]). Because span
     * rows are pairwise-pure facts and fingerprints/texts are per-doc
     * transforms, post-erasure state equals a from-scratch build over
     * the retained corpus EXACTLY — and later batches probe the
     * rewritten index, so nothing can resurrect a span against the
     * cohort (spec-pinned, not assumed). */
   private[graft] def eraseSpanState(s: SparkSession, fpidx: String,
-      docs: String, spans: String, erased: DataFrame, eid: Long,
-      abortAfterStep: Int = Int.MaxValue): Unit = {
+      docs: String, spans: String, erased: DataFrame, eid: Long)
+      : Unit = {
     val fence = s"gdpr$eid"
     val e = erased.select(col("doc_id")).distinct().localCheckpoint(true)
-    var step = 0
-    def gate(): Unit = {
-      step += 1
-      if (step >= abortAfterStep) throw new IllegalStateException(
-        s"injected crash after span-erasure step $abortAfterStep")
-    }
     if (!AppendLog.fenced(spans, fence))
       AppendLog.rewrite(s, spans, all => all
         .join(e.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
@@ -209,11 +199,9 @@ object StreamSpanDedup {
         // from later appends'
         .select(all.columns.map(col): _*),
         Set(fence))
-    gate()
     if (!AppendLog.fenced(fpidx, fence))
       AppendLog.rewrite(s, fpidx,
         _.join(e, Seq("doc_id"), "left_anti"), Set(fence))
-    gate()
     if (!AppendLog.fenced(docs, fence))
       AppendLog.rewrite(s, docs,
         _.join(e, Seq("doc_id"), "left_anti"), Set(fence))

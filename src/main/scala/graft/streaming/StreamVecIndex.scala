@@ -113,22 +113,19 @@ object StreamVecIndex {
 
   /** Run the maintenance replay: assign each micro-batch against the
     * frozen codebook, fold its (cell, pos)-keyed partials through the
-    * fenced monoid merge. Exposed so the spec can crash-inject around
-    * the identical code path the catalog row runs. `codebook` defaults
-    * to the shared trained model; a REFIT passes the new codebook and
-    * restarts the query fresh (no checkpoint → batch 0 resets the
-    * state table), which is the whole offline/online contract —
-    * StreamVecIndexSpec pins that a refit cleanly supersedes the old
-    * index. */
+    * fenced monoid merge. `codebook` defaults to the shared trained
+    * model; a REFIT passes the new codebook and restarts the query
+    * fresh (batch 0 resets the state table), which is the whole
+    * offline/online contract — StreamVecIndexSpec pins that a refit
+    * cleanly supersedes the old index. */
   private[graft] def maintain(s: SparkSession, dir: String, state: String,
-      checkpoint: Option[String] = None,
       codebook: Option[Seq[Array[Float]]] = None): Unit = {
     val cb = codebook.getOrElse(
       graft.operators.AnnIvf.Models(s, dir, K, Iters))
     val inDir = VecStage.inDir(s, dir)
     val src = s.readStream.schema(VecStage.schema(s, inDir))
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    FoldReplay.run(src, "q_stream_vec_index", checkpoint = checkpoint) {
+    FoldReplay.run(src, "q_stream_vec_index") {
       (batch, id) =>
         MonoidTable.merge(state,
           partials(graft.operators.AnnIvf.assign(batch, cb)), id,

@@ -92,16 +92,14 @@ object TokenizerRefit {
   object Gen {
 
     def publish(s: SparkSession, root: String,
-        merges: Vector[(String, String)], vocab: Map[String, Long],
-        abortBeforeCommit: Boolean = false): Unit = {
+        merges: Vector[(String, String)], vocab: Map[String, Long])
+        : Unit = {
       import s.implicits._
       val (vM, mSchema) = Snapshot.write(root,
         merges.zipWithIndex.map { case ((l, r), k) => (k, l, r) }
           .toDF("rank", "left", "right"))
       val (vV, vSchema) = Snapshot.write(root,
         vocab.toSeq.sortBy(_._1).toDF("piece", "lp_micro"))
-      if (abortBeforeCommit) throw new IllegalStateException(
-        "injected crash before the tokenizer generation swap")
       Snapshot.commit(root, Map("merges" -> vM, "vocab" -> vV),
         Map(vM -> mSchema, vV -> vSchema))
     }
@@ -126,13 +124,13 @@ object TokenizerRefit {
 
   /** Replay the word-count maintenance over the staged document chunks
     * (the corpus-dedup staging — same chunking, same key collisions). */
-  private[graft] def maintain(s: SparkSession, dir: String, state: String,
-      checkpoint: Option[String] = None): Unit = {
+  private[graft] def maintain(s: SparkSession, dir: String,
+      state: String): Unit = {
     val st = StreamCorpusDedup.DocStage
     val inDir = st.inDir(s, dir)
     val src = s.readStream.schema(st.schema(s, inDir))
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    FoldReplay.run(src, "q_stream_tokenizer_refit", checkpoint = checkpoint) {
+    FoldReplay.run(src, "q_stream_tokenizer_refit") {
       (batch, id) => MonoidTable.merge(state, partials(batch), id, Seq("w"))
     }
   }
@@ -169,14 +167,14 @@ object TokenizerRefit {
     *   unigram: k = piece, values = micro-nat log-prob (or "" when the
     *   entry exists in only one generation). Pure function of (frozen
     *   generation, stats) — deterministic. */
-  private[graft] def refit(s: SparkSession, state: String, root: String,
-      abortBeforeCommit: Boolean = false): DataFrame = {
+  private[graft] def refit(s: SparkSession, state: String, root: String)
+      : DataFrame = {
     val frozenM = Gen.readMerges(s, root)
     val frozenV = Gen.readVocab(s, root)
     val wc = capped(MonoidTable.read(s, state))
     val refitM = BpeTokenizer.trainMerges(wc, BpeTokenizer.nMerges)
     val refitV = UnigramLm.train(wc)
-    Gen.publish(s, root, refitM, refitV, abortBeforeCommit)
+    Gen.publish(s, root, refitM, refitV)
     import s.implicits._
     val bpeRows = (0 until math.max(frozenM.size, refitM.size)).map { k =>
       def fmt(m: Vector[(String, String)]) =

@@ -255,7 +255,9 @@ class IvfRefitSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
 
     val e = intercept[IllegalStateException] {
-      IvfRefit.refit(spark, state, root, abortBeforeCommit = true)
+      Snapshot.crashAt(root, Snapshot.BeforePointer) {
+        IvfRefit.refit(spark, state, root)
+      }
     }
     assert(e.getMessage.contains("injected crash"))
     // Torn attempt: new version dirs exist as orphans, but the pointer

@@ -91,7 +91,9 @@ class ModelRefitSpec extends AnyFunSuite with SparkFixture {
     ModelRefit.Gen.publish(spark, root, frozen)
 
     val e = intercept[IllegalStateException] {
-      ModelRefit.refit(spark, state, root, abortBeforeCommit = true)
+      Snapshot.crashAt(root, Snapshot.BeforePointer) {
+        ModelRefit.refit(spark, state, root)
+      }
     }
     assert(e.getMessage.contains("injected crash"))
     assert(ModelRefit.Gen.read(spark, root).w == frozen.w,

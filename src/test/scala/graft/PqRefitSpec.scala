@@ -228,7 +228,9 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val e = intercept[IllegalStateException] {
-      PqRefit.refit(spark, state, root, abortBeforeCommit = true)
+      Snapshot.crashAt(root, Snapshot.BeforePointer) {
+        PqRefit.refit(spark, state, root)
+      }
     }
     assert(e.getMessage.contains("injected crash"))
     assert(Snapshot.currentManifest(root).get == beforeManifest,
@@ -300,8 +302,10 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
     // Crash between the two commits, then retry — the stats step must
     // no-op on its fence (no double subtraction).
     val e = intercept[IllegalStateException] {
-      StreamGdpr.erasePqVectors(spark, state, root, vCohort, eid = 0L,
-        plantedBooks, abortAfterStep = 1)
+      Snapshot.crashAt(root, Snapshot.BeforePointer) {
+        StreamGdpr.erasePqVectors(spark, state, root, vCohort, eid = 0L,
+          plantedBooks)
+      }
     }
     assert(e.getMessage.contains("injected crash"))
     val statsAfterCrash = statsOf(state)

@@ -248,11 +248,11 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
 
   test("bucketed upsert survives a re-delivered batchId (newest-wins " +
       "idempotence through a real checkpoint restart)") {
-    // The upsert merge needs no batch-id fence — newest-wins on the
-    // total (ts, event_id) key is idempotent — but that claim deserves
-    // the same injection the monoid rows get: crash after merging
-    // batch 2, restart, and the snapshot must still equal the batch
-    // argmax.
+    // Newest-wins on the total (ts, event_id) key is idempotent, and
+    // the merge's `@bid` fence no-ops the re-delivered batch; both
+    // claims deserve the same injection the monoid rows get: crash
+    // after merging batch 2, restart, and the snapshot must still
+    // equal the batch argmax.
     val inDir = stageChunks()
     val state = Files.createTempDirectory("graft_fail_ups").toString + "/t"
     val ckpt = Files.createTempDirectory("graft_fail_upsckpt").toString

@@ -123,8 +123,9 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
     val (index, flags) = buildDedupState(docs)
     val e = docs.where(pmod(col("doc_id"), lit(13)) === 4)
     val ex = intercept[IllegalStateException] {
-      StreamGdpr.erase(spark, index, flags, e, eid = 7L,
-        abortAfterStep = 1)
+      Snapshot.crashAt(index, Snapshot.BeforePointer) {
+        StreamGdpr.erase(spark, index, flags, e, eid = 7L)
+      }
     }
     assert(ex.getMessage.contains("injected crash"))
     assert(MonoidTable.fenced(flags, "gdpr7"),
@@ -318,8 +319,9 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
 
     // Crash after step 1: stats fenced, postings untouched.
     val e = intercept[IllegalStateException] {
-      StreamGdpr.eraseVectors(spark, state, root, vCohort, eid = 0L, vCb,
-        abortAfterStep = 1)
+      Snapshot.crashAt(root, Snapshot.BeforePointer) {
+        StreamGdpr.eraseVectors(spark, state, root, vCohort, eid = 0L, vCb)
+      }
     }
     assert(e.getMessage.contains("injected crash"))
     assert(postingsSet(root).exists(p => p._1 == 1L),

@@ -114,9 +114,10 @@ class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
     // Crash after the fingerprint/text segments of batch 2 commit but
     // before the span fold.
     val e = intercept[IllegalStateException] {
-      StreamSpanDedup.foldBatch(fpidx, docs, spans,
-        df(corpus.filter(r => batches(2).contains(r._1))), 2L,
-        abortAfterAppends = true)
+      Snapshot.crashAt(spans, Snapshot.BeforePointer) {
+        StreamSpanDedup.foldBatch(fpidx, docs, spans,
+          df(corpus.filter(r => batches(2).contains(r._1))), 2L)
+      }
     }
     assert(e.getMessage.contains("injected crash"))
     assert(!AppendLog.fenced(spans, "seg2") &&
@@ -174,8 +175,10 @@ class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
 
     // Crash after step 1 (span rewrite fenced), retry converges.
     val e = intercept[IllegalStateException] {
-      StreamSpanDedup.eraseSpanState(spark, fpidx, docs, spans, cohort,
-        eid = 0L, abortAfterStep = 1)
+      Snapshot.crashAt(fpidx, Snapshot.BeforePointer) {
+        StreamSpanDedup.eraseSpanState(spark, fpidx, docs, spans, cohort,
+          eid = 0L)
+      }
     }
     assert(e.getMessage.contains("injected crash"))
     assert(AppendLog.fenced(spans, "gdpr0") && !AppendLog.fenced(fpidx, "gdpr0"))

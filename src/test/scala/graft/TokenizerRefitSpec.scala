@@ -91,7 +91,9 @@ class TokenizerRefitSpec extends AnyFunSuite with SparkFixture {
     val (fm, fv) = TokenizerRefit.frozenModels(spark, sfDir)
     TokenizerRefit.Gen.publish(spark, root, fm, fv)
     val e = intercept[IllegalStateException] {
-      TokenizerRefit.refit(spark, state, root, abortBeforeCommit = true)
+      Snapshot.crashAt(root, Snapshot.BeforePointer) {
+        TokenizerRefit.refit(spark, state, root)
+      }
     }
     assert(e.getMessage.contains("injected crash"))
     assert(TokenizerRefit.Gen.readMerges(spark, root) == fm &&
