@@ -13,13 +13,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * AvailableNow, bound the wait. The folds plan on `batch.sparkSession`,
   * a child of the clone, so they inherit its conf. Rows whose per-batch
   * work includes a corpus-scale aggregate (the banding rows) pass a
-  * larger `shufflePartitions`. Every run starts without a checkpoint,
-  * so batch 0 resets each state table; specs inject crashes through
-  * [[Snapshot.crashAt]]. */
+  * larger `shufflePartitions`. Each micro-batch is one
+  * [[Snapshot.batch]] on the row's state `root`: `fold` writes every
+  * table of the batch into its transaction, committed once. Every run
+  * starts without a checkpoint, so batch 0 resets the root; specs
+  * inject crashes through [[Snapshot.crashAt]]. */
 private[graft] object FoldReplay {
-  def run(src: DataFrame, name: String,
+  def run(src: DataFrame, name: String, root: String,
       shufflePartitions: String = "4")(
-      fold: (DataFrame, Long) => Unit): Unit = {
+      fold: (Snapshot.Txn, DataFrame, Long) => Unit): Unit = {
     val s = src.sparkSession
     // AQE off for the fold's micro-batch jobs (r15): each per-batch
     // state write is a SMALL bounded job, and AQE turns every one into
@@ -36,7 +38,8 @@ private[graft] object FoldReplay {
     val w = Scope.bind(src, scoped).writeStream.queryName(name)
       .trigger(Trigger.AvailableNow())
     drive(s, scoped, name)(
-      w.foreachBatch((b: DataFrame, id: Long) => fold(b, id)).start())
+      w.foreachBatch((b: DataFrame, id: Long) =>
+        Snapshot.batch(root, id)(fold(_, b, id))).start())
   }
 
   /** Run one replay query that `start` starts on `scoped`, a clone of

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** IVF CODEBOOK REFIT — the offline maintenance event that closes the
   * index-lifecycle loop (r12 verdict ask #1): [[StreamVecIndex]]
@@ -142,17 +141,16 @@ object IvfRefit {
         cb: Seq[Array[Float]]): Unit = {
       val assigned = AnnIvf.assign(
         corpus.select(col("vec_id"), col("embedding")), cb)
-      val (vP, postings) = Snapshot.write(root,
-        assigned.select(col("vec_id"), col("embedding"), col("cell"),
-          col("cell").as("pcell")),
-        "pcell")
-      val occupied = assigned.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      val (vC, book) = Snapshot.write(root, codebookRows(s, cb))
-      Snapshot.commit(root,
-        occupied.map(c => s"cell$c" -> s"$vP/pcell=$c").toMap +
-          ("codebook" -> vC),
-        Map(vP -> postings, vC -> book))
+      Snapshot.update(root, None) { t =>
+        val vP = t.write(
+          assigned.select(col("vec_id"), col("embedding"), col("cell"),
+            col("cell").as("pcell")),
+          "pcell")
+        val occupied = assigned.select(col("cell")).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+        t.put(occupied.map(c => s"cell$c" -> s"$vP/pcell=$c") :+
+          ("codebook" -> t.write(codebookRows(s, cb))): _*)
+      }
     }
   }
 
@@ -169,8 +167,8 @@ object IvfRefit {
   private[graft] def refit(s: SparkSession, state: String, root: String)
       : DataFrame = {
     val frozen = Gen.readCodebook(s, root)
-    val newCb = mStep(MonoidTable.read(s, state), frozen)
-    val prior = Snapshot.currentManifest(root).getOrElse(Map.empty)
+    val newCb = mStep(MonoidTable.read(s, state, StreamVecIndex.Stats),
+      frozen)
 
     // E-step: one narrow broadcast-literal pass; no shuffle until the
     // k-bounded moved-cell aggregate.
@@ -207,26 +205,21 @@ object IvfRefit {
       }.toSet
       // The delta write: ONLY affected cells' new content. Unaffected
       // cells keep their committed directories by manifest pointer.
-      val (manifest, written) =
-        if (affected.isEmpty) (prior, Map.empty[String, StructType])
-        else {
-          val (vP, schema) = Snapshot.write(root,
+      Snapshot.update(root, None) { t =>
+        if (affected.nonEmpty) {
+          val vP = t.write(
             assigned.where(col("cell_new").isin(affected.toSeq: _*))
               .select(col("vec_id"), col("embedding"),
                 col("cell_new").as("cell"), col("cell_new").as("pcell")),
             "pcell")
-          val emptied = moved.collect {
-            case (c, _, _, _, nNew) if affected(c) && nNew == 0L => c
-          }
-          (prior --
-            emptied.map(c => s"cell$c") ++
-            moved.collect { case (c, _, _, _, nNew)
-              if affected(c) && nNew > 0L => s"cell$c" -> s"$vP/pcell=$c" },
-            Map(vP -> schema))
+          t.remove(moved.collect {
+            case (c, _, _, _, nNew) if affected(c) && nNew == 0L => s"cell$c"
+          })
+          t.put(moved.collect { case (c, _, _, _, nNew)
+            if affected(c) && nNew > 0L => s"cell$c" -> s"$vP/pcell=$c" }: _*)
         }
-      val (vC, book) = Snapshot.write(root, Gen.codebookRows(s, newCb))
-      Snapshot.commit(root, manifest + ("codebook" -> vC),
-        written + (vC -> book))
+        t.put("codebook" -> t.write(Gen.codebookRows(s, newCb)))
+      }
 
       // Report: movement accounting + the centroid shift, in exact
       // micro-units² (both codebooks micro-rounded — deterministic).

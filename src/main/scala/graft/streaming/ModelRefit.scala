@@ -60,6 +60,9 @@ object ModelRefit {
 
   import graft.operators.{QualityClassifier, TextQueries}
 
+  /** The histogram table's name under the stats root. */
+  private[graft] val Hist = "hist"
+
   /** One micro-batch's histogram partials: gated labeled triple counts.
     * The md5 gate and the feature/label derivation are the batch
     * trainer's own code paths (Models.gateThresh, QualityScore). */
@@ -83,7 +86,7 @@ object ModelRefit {
   def trainFromStats(s: SparkSession, state: String)
       : QualityClassifier.Model =
     QualityClassifier.trainWeighted(
-      labeledHist(MonoidTable.read(s, state)), col("cnt"))
+      labeledHist(MonoidTable.read(s, state, Hist)), col("cnt"))
 
   /** Model generation store: manifest key `model` → parquet of
     * (j, w_bits) — IEEE-754 bits for bit-exact round-trip. */
@@ -92,11 +95,11 @@ object ModelRefit {
     def publish(s: SparkSession, root: String,
         model: QualityClassifier.Model): Unit = {
       import s.implicits._
-      val (v, schema) = Snapshot.write(root, model.w.zipWithIndex
-        .map { case (w, j) =>
-          (j, java.lang.Double.doubleToLongBits(w)) }
-        .toDF("j", "w_bits"))
-      Snapshot.commit(root, Map("model" -> v), Map(v -> schema))
+      Snapshot.update(root, None)(t => t.put("model" -> t.write(
+        model.w.zipWithIndex
+          .map { case (w, j) =>
+            (j, java.lang.Double.doubleToLongBits(w)) }
+          .toDF("j", "w_bits"))))
     }
 
     def read(s: SparkSession, root: String): QualityClassifier.Model = {
@@ -119,9 +122,9 @@ object ModelRefit {
     val inDir = st.inDir(s, dir)
     val src = s.readStream.schema(st.schema(s, inDir))
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    FoldReplay.run(src, "q_stream_model_refit") {
-      (batch, id) =>
-        MonoidTable.merge(state, partials(batch), id,
+    FoldReplay.run(src, "q_stream_model_refit", state) {
+      (t, batch, _) =>
+        MonoidTable.merge(t, Hist, partials(batch),
           Seq("n_tok", "n_distinct", "n_stop"))
     }
   }

@@ -6,57 +6,69 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Atomic snapshot commits for the local parquet state tables: every
-  * publish writes a NEW version directory and then atomically swaps a
-  * pointer file onto it — the local stand-in for a lakehouse table
+  * publish writes NEW version directories and then atomically swaps a
+  * pointer file onto them — the local stand-in for a lakehouse table
   * format's commit (write data files, swap the table pointer). A crash
   * at ANY point of a publish leaves the pointer on the last committed
   * version: a torn data write is an orphan directory the pointer never
-  * references, garbage-collected by the next successful commit. This
-  * replaced the r8–r11 delete+overwrite discipline, whose torn-write
-  * window was documented as outside the failure model — the r11 verdict
-  * asked for it INSIDE (StreamFailureSpec now kills mid-write and
-  * asserts the table reads back as the last committed version).
+  * references, garbage-collected by the next successful commit.
   *
   * Layout under a state root:
   *   `_current`   pointer file (the commit); content = manifest text,
-  *                each mapped version's schema, the monoid fence
+  *                each mapped version's schema, the batch fence and the
+  *                erasure fences
   *   `v<N>/`      immutable version directories (parquet)
   * Writers never touch a committed version directory, so publishes need
   * no localCheckpoint lineage break: the new version reads the old one
   * while writing, and GC runs only after the swap.
+  *
+  * ONE ROOT PER STREAMING ROW, ONE COMMIT PER MICRO-BATCH: a row's
+  * tables ([[AppendLog]], [[MonoidTable]], [[UpsertState]]) are manifest
+  * keys under the row's single root (`index/seg3`, `flags`, `state/5`),
+  * and every publish is a [[Txn]] — opened by [[batch]] (a micro-batch,
+  * fenced by the pointer's `@bid`) or [[update]] (an erasure or a
+  * generation swap, fenced by an `@fence` line). All of a batch's tables
+  * move in the same pointer swap, so there is no state between two
+  * tables' commits to recover from, and the two entry points are the
+  * only fences.
   *
   * Single-writer by contract (one streaming query owns one state root —
   * the same assumption a checkpoint directory carries). Readers resolve
   * version paths at DataFrame-build time, and GC runs with a
   * ONE-COMMIT RETENTION WINDOW (see [[commit]]): a plan built from the
   * current manifest stays readable across the owning stream's next
-  * merge — the guarantee behind "state queryable between batches" —
+  * commit — the guarantee behind "state queryable between batches" —
   * and is swept only by the commit after next. Readers lagging more
   * than one commit need a wider retention window (the lakehouse knob).
   */
 private[graft] object Snapshot {
 
-  /** Pointer-file content: lines of `key<TAB>versionDir`. MonoidTable
-    * uses the single key "table"; UpsertState uses one key per bucket,
-    * which makes a multi-bucket publish atomic as a WHOLE — the
-    * manifest swap commits every touched bucket's new version in one
-    * filesystem rename (the lakehouse-manifest shape). */
+  /** Pointer-file content: lines of `key<TAB>versionDir`, one key per
+    * table (or per segment / bucket of a table), so a publish touching
+    * several tables or buckets is atomic as a WHOLE — the manifest swap
+    * commits every new version in one filesystem rename (the
+    * lakehouse-manifest shape). */
   type Manifest = Map[String, String]
 
-  /** A committed pointer: the manifest plus two kinds of RESERVED line
-    * the manifest never exposes (keys starting `@` are refused):
+  /** A committed pointer: the manifest plus three kinds of RESERVED
+    * line the manifest never exposes (keys starting `@` are refused):
     *  - `@schema<TAB>v<N><TAB>json` — the schema of every version
     *    directory the manifest references, recorded at write time from
     *    the written frame, so every read of a committed version binds
     *    it ([[read]]) and no micro-batch runs a schema-inference job;
-    *  - `@bid<TAB>n` — [[MonoidTable]]'s or [[UpsertState]]'s last
-    *    merged batch id, the re-delivery fence, read without a job.
-    * Both ride the same atomic rename as the data they describe. */
+    *  - `@bid<TAB>n` — the last committed batch id, [[batch]]'s
+    *    re-delivery fence, read without a job;
+    *  - `@fence<TAB>name` — each committed [[update]]'s fence (a GDPR
+    *    erasure's `gdpr<eid>`), so a re-delivered request no-ops.
+    * All ride the same atomic rename as the data they describe. */
   final case class Pointer(manifest: Manifest,
-      schemas: Map[String, StructType], bid: Option[Long])
+      schemas: Map[String, StructType], bid: Option[Long],
+      fences: Set[String] = Set.empty)
 
+  private val Empty = Pointer(Map.empty, Map.empty, None)
   private val SchemaLine = "@schema\t"
   private val BidLine = "@bid\t"
+  private val FenceLine = "@fence\t"
 
   /** The version directory a manifest value lives in (`v3/_bkt=1` →
     * `v3`): the unit GC keeps or sweeps and the schema lines key. */
@@ -119,7 +131,9 @@ private[graft] object Snapshot {
           .map { case (v, json) =>
             v -> DataType.fromJson(json).asInstanceOf[StructType] }.toMap,
         lines.find(_.startsWith(BidLine))
-          .map(_.substring(BidLine.length).toLong)))
+          .map(_.substring(BidLine.length).toLong),
+        lines.filter(_.startsWith(FenceLine))
+          .map(_.substring(FenceLine.length)).toSet))
     }
   }
 
@@ -143,29 +157,128 @@ private[graft] object Snapshot {
 
   def versionPath(root: String, rel: String): String = s"$root/$rel"
 
-  /** Publish: atomically swap the pointer onto `manifest`, then GC
-    * version directories (torn orphans from crashed attempts included).
-    * `written` holds the schema of every version directory this commit
-    * adds ([[write]] returns it); a directory the prior pointer already
-    * mapped keeps its recorded schema. A commit that would map a
-    * directory with no recorded schema is refused — readers never
-    * infer. `bid` is the batch fence line; None writes none.
-    * Tests crash a commit at any of its [[Phase]]s through [[crashAt]].
+  /** Read access to one root's state: a committed pointer
+    * ([[view]]), or an open [[Txn]]'s pending manifest, which also maps
+    * what the transaction wrote so far. */
+  class View private[Snapshot] (val root: String,
+      protected var p: Pointer) {
+    def pointer: Pointer = p
+    def manifest: Manifest = p.manifest
+
+    /** The directories `pick` selects from the manifest, in one bound
+      * [[read]]; None when `pick` selects none. */
+    def select(s: SparkSession)(
+        pick: Manifest => Iterable[String]): Option[DataFrame] = {
+      val rels = pick(p.manifest)
+      if (rels.isEmpty) None else Some(read(s, root, p, rels))
+    }
+  }
+
+  /** The committed state of `root`, or None before any commit. */
+  def view(root: String): Option[View] = current(root).map(new View(root, _))
+
+  /** THE transaction, and the only way to publish: opened on `base`
+    * (the committed pointer, or empty for a batch-0 reset), it
+    * allocates its `v<N>` directories from one listing — each [[write]]
+    * gets its own, so `@schema` stays keyed by version directory —
+    * records each write's schema, and keeps the pending manifest its
+    * reads see. [[batch]] and [[update]] commit it once. `prior` is the
+    * committed pointer, whose directories the commit's GC retains. */
+  final class Txn private[Snapshot] (root: String, base: Pointer,
+      private[Snapshot] val prior: Option[Pointer], private var next: Long)
+      extends View(root, base) {
+
+    /** Write `df` as a new version directory of this transaction, laid
+      * out by `partitionBy`, and return it. Its recorded schema is what
+      * a bound read of it (or of one of its partition subdirectories)
+      * sees: the written columns minus the partition columns, all
+      * nullable — exactly what parquet schema inference would return.
+      * The directory is unmapped until [[put]] maps it. */
+    def write(df: DataFrame, partitionBy: String*): String = {
+      val v = s"v$next"
+      next += 1
+      val w = df.write.mode("overwrite")
+      (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+        .parquet(versionPath(root, v))
+      p = p.copy(schemas = p.schemas + (v -> GraftShims.asNullable(
+        StructType(df.schema.filterNot(f => partitionBy.contains(f.name))))))
+      v
+    }
+
+    def put(entries: (String, String)*): Unit =
+      p = p.copy(manifest = p.manifest ++ entries)
+
+    def remove(keys: Iterable[String]): Unit =
+      p = p.copy(manifest = p.manifest -- keys)
+  }
+
+  private def open(root: String, base: Pointer, prior: Option[Pointer])
+      : Txn = new Txn(root, base, prior, nextVersion(root).drop(1).toLong)
+
+  /** One micro-batch of the row whose state lives at `root`: `fold`
+    * writes every table the batch touches into one [[Txn]], committed
+    * once with `@bid = id`. THE batch fence: a re-delivered `id` at or
+    * below the committed `@bid` returns without calling `fold`, a
+    * manifest lookup and no job. Batch 0 opens on an empty pointer — a
+    * fresh invocation owns a fresh history, and that reset is a HARD
+    * COMPLIANCE PRECONDITION: a checkpoint-less restart replays the
+    * FULL source, so an erasure is durable only when it was also
+    * applied source-side before any replay (its `@fence` lines are
+    * deliberately not carried into a world rebuilt from a dirty
+    * source). A batch above 0 on a root with no commit is a contract
+    * violation (the engine always delivers batch 0 first) and fails
+    * loudly rather than silently seeding mid-stream. */
+  def batch(root: String, id: Long)(fold: Txn => Unit): Unit = {
+    val prior = current(root)
+    val base = if (id == 0L) Empty else prior.getOrElse(throw
+      new IllegalStateException(s"batch $id at $root before any commit"))
+    val fenced = id > 0L && id <= base.bid.getOrElse(throw
+      new IllegalStateException(s"state at $root records no batch fence"))
+    if (!fenced) {
+      val t = open(root, base, prior)
+      fold(t)
+      commit(t, Some(id), base.fences)
+    }
+  }
+
+  /** A publish outside the micro-batch cadence (an erasure, a refit's
+    * generation swap) on `root`'s committed state, committed once with
+    * the batch fence kept. THE `@fence` check: when the committed
+    * pointer already carries `fence`, returns without calling `body`;
+    * otherwise the commit records `fence` in the same swap as the data
+    * it fences. */
+  def update(root: String, fence: Option[String])(body: Txn => Unit)
+      : Unit = {
+    val prior = current(root)
+    if (!fence.exists(f => prior.exists(_.fences(f)))) {
+      val base = prior.getOrElse(Empty)
+      val t = open(root, base, prior)
+      body(t)
+      commit(t, base.bid, base.fences ++ fence)
+    }
+  }
+
+  /** Publish: atomically swap the pointer onto the transaction's
+    * manifest, then GC version directories (torn orphans from crashed
+    * attempts included). A directory the manifest maps must have a
+    * recorded schema — the prior pointer's or the transaction's write —
+    * or the commit is refused: readers never infer. Tests crash a
+    * commit at any of its [[Phase]]s through [[crashAt]].
     *
     * RETENTION WINDOW: GC keeps the versions referenced by the new
     * manifest AND by the one it replaces, so a reader that resolved
     * paths from the previous manifest survives one concurrent commit —
     * this is what makes the state tables' "queryable between batches"
-    * property safe for a reader racing the owning stream's next merge
-    * (r12 review: immediate GC made the doc's reader-race claim false).
+    * property safe for a reader racing the owning stream's next merge.
     * The superseded generation is swept by the commit after next;
     * garbage is bounded at one prior version per key. Readers must
     * still not lag MORE than one commit — the lakehouse retention knob,
     * fixed at window 1 here because the replay cadence is the only
     * writer. */
-  def commit(root: String, manifest: Manifest,
-      written: Map[String, StructType] = Map.empty,
-      bid: Option[Long] = None): Unit = {
+  private def commit(t: Txn, bid: Option[Long], fences: Set[String])
+      : Unit = {
+    val root = t.root
+    val manifest = t.manifest
     require(!manifest.keys.exists(_.startsWith("@")),
       s"manifest keys starting with @ are reserved: ${manifest.keys}")
     val crash = armed.get(root)
@@ -173,10 +286,8 @@ private[graft] object Snapshot {
       if (crash == at && armed.remove(root, at))
         throw new IllegalStateException(s"injected crash $at at $root")
     crashPoint(BeforePointer)
-    val prior = current(root)
     val dirs = manifest.values.map(versionDir).toSet
-    val known = prior.fold(Map.empty[String, StructType])(_.schemas) ++
-      written
+    val known = t.pointer.schemas
     val unknown = dirs.filterNot(known.contains)
     require(unknown.isEmpty,
       s"commit at $root maps ${unknown.mkString(", ")} with no recorded schema")
@@ -185,7 +296,8 @@ private[graft] object Snapshot {
     fs.mkdirs(rootP)
     val lines = manifest.toSeq.sorted.map { case (k, v) => s"$k\t$v" } ++
       dirs.toSeq.sorted.map(d => s"$SchemaLine$d\t${known(d).json}") ++
-      bid.map(n => s"$BidLine$n")
+      bid.map(n => s"$BidLine$n") ++
+      fences.toSeq.sorted.map(f => s"$FenceLine$f")
     val tmp = new HPath(root, "_current.tmp")
     val out = fs.create(tmp, true)
     try out.write(lines.mkString("\n")
@@ -195,7 +307,7 @@ private[graft] object Snapshot {
     atomicReplace(fs, tmp, pointerPath(root))
     crashPoint(BeforeGc)
     gc(root, dirs ++
-      prior.fold(Set.empty[String])(_.manifest.values.map(versionDir).toSet))
+      t.prior.fold(Set.empty[String])(_.manifest.values.map(versionDir).toSet))
   }
 
   /** The crash windows of a [[commit]], in order. */
@@ -218,25 +330,9 @@ private[graft] object Snapshot {
     finally armed.remove(root)
   }
 
-  /** Write `df` as the root's next version directory, laid out by
-    * `partitionBy`. Returns the directory and the schema a bound read
-    * of it (or of one of its partition subdirectories) sees: the
-    * written columns minus the partition columns, all nullable —
-    * exactly what parquet schema inference would return. Analysis
-    * only, no job. */
-  def write(root: String, df: DataFrame, partitionBy: String*)
-      : (String, StructType) = {
-    val v = nextVersion(root)
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
-      .parquet(versionPath(root, v))
-    v -> GraftShims.asNullable(
-      StructType(df.schema.filterNot(f => partitionBy.contains(f.name))))
-  }
-
-  /** THE reader of committed versions: one scan over the directories
-    * `rels` name (deduplicated — several keys may share one), bound to
-    * the schema `p` recorded for them, so building the frame starts no
+  /** THE reader of state versions: one scan over the directories `rels`
+    * name (deduplicated — several keys may share one), bound to the
+    * schema `p` recorded for them, so building the frame starts no
     * job. The first directory's schema binds the scan, the file schema
     * inference would have read. */
   def read(s: SparkSession, root: String, p: Pointer,
@@ -254,10 +350,7 @@ private[graft] object Snapshot {
     * selects none. */
   def readSelected(s: SparkSession, root: String)(
       pick: Manifest => Iterable[String]): Option[DataFrame] =
-    current(root).flatMap { p =>
-      val rels = pick(p.manifest)
-      if (rels.isEmpty) None else Some(read(s, root, p, rels))
-    }
+    view(root).flatMap(_.select(s)(pick))
 
   /** The pointer swap primitive. On LOCAL filesystems the swap keeps
     * the POSIX rename(2) guarantee via java.nio ATOMIC_MOVE — Hadoop's
@@ -325,197 +418,128 @@ private[graft] object Snapshot {
 }
 
 /** Keyed monoid state-table maintenance — the count/sum merge
-  * discipline all the streaming monoid O-rows share.
+  * discipline all the streaming monoid O-rows share. The table is one
+  * manifest key, `table` → its current version directory.
   *
   * WHY IDEMPOTENCE MUST BE EXPLICIT HERE: Structured Streaming's
   * foreachBatch contract is at-least-once — if the driver dies after
   * the sink write but before the epoch commits, the SAME batchId is
   * re-delivered on restart. A newest-wins merge absorbs that for free
   * (max is idempotent), but count/sum monoids are NOT: merging the same
-  * partials twice double-counts. So [[MonoidTable.merge]] records the
-  * last merged batch id in the pointer's `@bid` line — same atomic
-  * commit as the data it fences, never a sidecar that could diverge
-  * from it — and no-ops on `id <= last`: a manifest lookup, not a job.
-  * Re-delivery of batch 0 is safe by construction (it resets the table
-  * to the same content). Publishes go through [[Snapshot.commit]], so a
-  * crash mid-write leaves the previous version committed, fence intact.
+  * partials twice double-counts. The merge therefore runs inside
+  * [[Snapshot.batch]], whose `@bid` fence rides the same atomic commit
+  * as the data it fences and no-ops a re-delivered batch.
   */
 private[graft] object MonoidTable {
 
-  private val Key = "table"
-
   /** Merge one micro-batch's pre-aggregated partials into the keyed
-    * state table. All non-key columns must be sum-mergeable (the monoid
-    * requirement); they are re-summed under their own names. Skips the
-    * merge entirely when `id` was already folded in (crash-retry
-    * re-delivery), so the maintained table equals the batch recompute
-    * no matter how often the engine re-runs a batch. */
-  def merge(state: String, partials: DataFrame, id: Long,
+    * table. All non-key columns must be sum-mergeable (the monoid
+    * requirement); they are re-summed under their own names. A table
+    * the transaction does not map yet (batch 0's reset) is seeded with
+    * the partials. The new version reads the committed one while
+    * writing — no delete-before-write hazard, so no localCheckpoint
+    * lineage break. */
+  def merge(t: Snapshot.Txn, table: String, partials: DataFrame,
       keys: Seq[String]): Unit = {
     val bs = partials.sparkSession
-    // Batch > 0 against a never-committed table is a contract violation
-    // (the engine always delivers batch 0 first); the .get fails loudly
-    // rather than silently seeding mid-stream.
-    val prior = if (id == 0L) None else Some(Snapshot.current(state).get)
-    val toWrite = prior match {
-      case None => Some(partials)
-      case Some(p) if id <= p.bid.getOrElse(throw new IllegalStateException(
-          s"monoid state at $state records no batch fence")) => None
-      case Some(p) =>
-        val valCols = partials.columns.filterNot(keys.contains).toSeq
-        val sums = valCols.map(c => sum(col(c)).as(c))
-        Some(Snapshot.read(bs, state, p, p.manifest.get(Key))
-          .unionByName(partials)
-          .groupBy(keys.map(col): _*)
-          .agg(sums.head, sums.tail: _*))
-    }
-    toWrite.foreach { m =>
-      // The new version reads the committed one while writing — no
-      // delete-before-write hazard, so no localCheckpoint lineage break
-      // (the old overwrite discipline needed one).
-      val (v, schema) = Snapshot.write(state, Snapshot.sized(m))
-      // Non-table manifest keys (GDPR-erasure fences) ride along,
-      // repointed at the new version (a fence is a marker — left on an
-      // old directory it would pin it past the retention window): a
-      // merge must not wipe the fence that makes a re-delivered
-      // erasure no-op. Batch 0 still resets the world — a fresh
-      // invocation owns a fresh history — and that reset is a HARD
-      // COMPLIANCE PRECONDITION (r13 advice): a checkpoint-less
-      // restart replays the FULL source, so whatever the source still
-      // holds is rebuilt — state-side erasure is durable only when the
-      // erasure was ALSO applied source-side before any replay.
-      // Deliberately NOT preserved across the reset: a fence carried
-      // into a world rebuilt from a dirty source would claim "erased"
-      // over resurrected data — strictly worse than honestly resetting.
-      val keep = prior.fold(Set.empty[String])(_.manifest.keySet)
-      Snapshot.commit(state, (keep + Key).map(_ -> v).toMap,
-        Map(v -> schema), Some(id))
-    }
+    val valCols = partials.columns.filterNot(keys.contains).toSeq
+    val sums = valCols.map(c => sum(col(c)).as(c))
+    publish(t, table, t.select(bs)(_.get(table)).fold(partials)(
+      _.unionByName(partials).groupBy(keys.map(col): _*)
+        .agg(sums.head, sums.tail: _*)))
   }
 
-  /** Publish a surgically-rewritten table (GDPR erasure) as a new
-    * version, preserving every non-table manifest key and the stream's
-    * re-delivery fence, and adding `fenceKeys` (the erasure fence) in
-    * the SAME atomic commit as the data they fence. Fence keys point at
-    * the new version so GC's keep-set follows the data (a fence pinned
-    * to an old directory would retain it forever). */
-  private[graft] def publish(state: String, df: DataFrame,
-      fenceKeys: Set[String] = Set.empty): Unit = {
-    val prior = Snapshot.current(state)
-    val (v, schema) = Snapshot.write(state, Snapshot.sized(df))
-    // Every key — table, new fences, PRIOR fences — repoints at the
-    // new version: a fence is a marker, not a data reference, and one
-    // left on an old directory would pin it past the retention window.
-    Snapshot.commit(state,
-      (prior.fold(Set.empty[String])(_.manifest.keySet) ++ fenceKeys + Key)
-        .map(_ -> v).toMap,
-      Map(v -> schema), prior.flatMap(_.bid))
-  }
+  /** Publish `df` as the table's new version (a merge, or a GDPR
+    * erasure's surgical rewrite). */
+  def publish(t: Snapshot.Txn, table: String, df: DataFrame): Unit =
+    t.put(table -> t.write(Snapshot.sized(df)))
 
-  /** True when the state's manifest carries `key` — the fence probe. */
-  private[graft] def fenced(state: String, key: String): Boolean =
-    Snapshot.currentManifest(state).exists(_.contains(key))
+  /** The maintained table as `v` maps it. */
+  def read(s: SparkSession, v: Snapshot.View, table: String): DataFrame =
+    v.select(s)(_.get(table)).getOrElse(throw new IllegalStateException(
+      s"monoid table $table at ${v.root} has no version"))
 
-  /** The maintained table. */
-  def read(s: SparkSession, state: String): DataFrame =
-    Snapshot.readSelected(s, state)(_.get(Key)).getOrElse(throw
-      new IllegalStateException(
-        s"monoid state at $state has no committed version"))
+  /** The committed table. */
+  def read(s: SparkSession, root: String, table: String): DataFrame =
+    read(s, Snapshot.view(root).getOrElse(throw new IllegalStateException(
+      s"monoid state at $root has no committed version")), table)
 }
 
 /** APPEND-ONLY segment log — the third state discipline beside the
-  * monoid merge and the newest-wins snapshot (r12): each micro-batch's
-  * rows land as one immutable SEGMENT (a version directory), and the
-  * manifest maps `seg<batchId>` → directory, so the maintained table is
-  * the union of committed segments read in one multi-path scan. This is
-  * the shape of every "index the stream" state (the MinHash band index
-  * of q_stream_dedup_corpus): per-batch cost ∝ batch, never ∝ state —
-  * nothing historical is read or rewritten on append.
-  *
-  * Retry-idempotent by the MANIFEST KEY: foreachBatch re-delivery of a
-  * committed batchId finds `seg<id>` already mapped and no-ops — the
-  * fence lives in the same atomic pointer swap as the data it fences
-  * (the monoid `@bid` argument in segment form). Batch 0 resets the
-  * manifest to exactly its own segment, so a fresh invocation is
-  * self-contained; the [[Snapshot]] retention window keeps racing
-  * readers safe exactly as for the other disciplines. */
+  * monoid merge and the newest-wins snapshot: each micro-batch's rows
+  * land as one immutable SEGMENT (a version directory), and the
+  * manifest maps `<table>/seg<batchId>` → directory, so the maintained
+  * table is the union of committed segments read in one multi-path
+  * scan. This is the shape of every "index the stream" state (the
+  * MinHash band index of q_stream_dedup_corpus): per-batch cost ∝
+  * batch, never ∝ state — nothing historical is read or rewritten on
+  * append. Re-delivery is fenced by [[Snapshot.batch]], and batch 0's
+  * reset leaves the manifest holding exactly its own segments, so a
+  * fresh invocation is self-contained; the [[Snapshot]] retention
+  * window keeps racing readers safe exactly as for the other
+  * disciplines. */
 private[graft] object AppendLog {
 
-  def append(state: String, batch: DataFrame, id: Long): Unit = {
-    val prev: Snapshot.Manifest =
-      if (id == 0L) Map.empty
-      else Snapshot.currentManifest(state).getOrElse(Map.empty)
-    if (!prev.contains(s"seg$id")) {
-      val (v, schema) = Snapshot.write(state, Snapshot.sized(batch))
-      Snapshot.commit(state, prev + (s"seg$id" -> v), Map(v -> schema))
-    }
-  }
+  private def segKey(table: String, id: Long): String = s"$table/seg$id"
 
-  /** The union of committed segments (a directory several keys share
-    * scans once), or None before any commit. */
-  def read(s: SparkSession, state: String): Option[DataFrame] =
-    Snapshot.readSelected(s, state)(_.values)
+  private def segs(table: String)(m: Snapshot.Manifest): Map[Long, String] =
+    m.collect { case (k, v) if k.startsWith(s"$table/seg") =>
+      k.drop(table.length + 4).toLong -> v }
+
+  def append(t: Snapshot.Txn, table: String, batch: DataFrame,
+      id: Long): Unit =
+    t.put(segKey(table, id) -> t.write(Snapshot.sized(batch)))
+
+  /** The union of `v`'s segments of `table` (a directory several keys
+    * share scans once), or None when it maps none. */
+  def read(s: SparkSession, v: Snapshot.View, table: String)
+      : Option[DataFrame] =
+    v.select(s)(segs(table)(_).values)
+
+  /** The union of committed segments, or None before any commit. */
+  def read(s: SparkSession, root: String, table: String): Option[DataFrame] =
+    Snapshot.view(root).flatMap(read(s, _, table))
 
   /** COMPACTION — the log's offline maintenance event (run on a
-    * quiesced log, the codebook-refit cadence rule): fold every
-    * committed segment into ONE directory and repoint EVERY manifest
-    * key at it. Keys are retained as fence tombstones — a re-delivered
-    * batchId from before the compaction still finds its key and
-    * no-ops — and the readers de-duplicate directories, so the united
-    * table is unchanged row-for-row while read cost drops from
-    * O(#segments) listings to one. readBefore keeps its contract only
-    * for ids ABOVE the compacted range (all a quiesced log's future
-    * batches are), which is why compaction must not race an in-flight
-    * retry. */
-  def compact(s: SparkSession, state: String): Unit =
-    Snapshot.current(state).foreach { p =>
-      if (p.manifest.values.toSet.size > 1)
-        fold(s, state, p, identity, p.manifest.keySet)
-    }
+    * quiesced log, the codebook-refit cadence rule, inside a
+    * [[Snapshot.update]]): fold every segment into ONE directory and
+    * repoint EVERY segment key at it. The readers de-duplicate
+    * directories, so the united table is unchanged row-for-row while
+    * read cost drops from O(#segments) listings to one. readBefore
+    * keeps its contract only for ids ABOVE the compacted range (all a
+    * quiesced log's future batches are), which is why compaction must
+    * not race an in-flight retry. */
+  def compact(s: SparkSession, t: Snapshot.Txn, table: String): Unit =
+    if (segs(table)(t.manifest).values.toSet.size > 1)
+      rewrite(s, t, table, identity)
 
   /** ERASURE REWRITE — compaction with a row filter (GDPR right-to-be-
-    * forgotten against the maintained log): fold every committed
-    * segment through `keep` into ONE directory and repoint EVERY
-    * manifest key at it, adding `fenceKeys` (the erasure fence) in the
-    * same atomic commit. All seg keys survive as fence tombstones
-    * (compact's rule: a re-delivered pre-erasure batchId still no-ops)
-    * but the erased rows are PHYSICALLY gone — no version directory
-    * retaining them survives the commit after next (the retention
-    * window is the only residual, exactly a lakehouse VACUUM horizon).
-    * Same quiesced-log precondition as [[compact]]. */
-  def rewrite(s: SparkSession, state: String, keep: DataFrame => DataFrame,
-      fenceKeys: Set[String] = Set.empty): Unit =
-    Snapshot.current(state).foreach { p =>
-      if (p.manifest.nonEmpty)
-        fold(s, state, p, keep, p.manifest.keySet ++ fenceKeys)
+    * forgotten against the maintained log): fold every segment through
+    * `keep` into ONE directory and repoint EVERY segment key at it. The
+    * erased rows are PHYSICALLY gone — no version directory retaining
+    * them survives the commit after next (the retention window is the
+    * only residual, exactly a lakehouse VACUUM horizon). Same
+    * quiesced-log precondition as [[compact]]. */
+  def rewrite(s: SparkSession, t: Snapshot.Txn, table: String,
+      keep: DataFrame => DataFrame): Unit =
+    read(s, t, table).foreach { all =>
+      val v = t.write(Snapshot.sized(keep(all)))
+      t.put(segs(table)(t.manifest).keys.toSeq.map(segKey(table, _) -> v): _*)
     }
 
-  /** Write `keep` of every committed segment as one directory and
-    * commit `keys`, all mapped to it. */
-  private def fold(s: SparkSession, state: String, p: Snapshot.Pointer,
-      keep: DataFrame => DataFrame, keys: Set[String]): Unit = {
-    val (v, schema) = Snapshot.write(state,
-      Snapshot.sized(keep(Snapshot.read(s, state, p, p.manifest.values))))
-    Snapshot.commit(state, keys.map(_ -> v).toMap, Map(v -> schema))
-  }
-
-  /** True when the log's manifest carries `key` — the fence probe. */
-  def fenced(state: String, key: String): Boolean =
-    Snapshot.currentManifest(state).exists(_.contains(key))
-
-  /** One committed segment's rows — the materialized form of the batch
-    * that produced it (consumers fold FROM the segment instead of
+  /** One segment's rows — the materialized form of the batch that
+    * produced it (consumers fold FROM the segment instead of
     * recomputing the batch's expensive stage a second time). */
-  def segment(s: SparkSession, state: String, id: Long): Option[DataFrame] =
-    Snapshot.readSelected(s, state)(_.get(s"seg$id"))
+  def segment(s: SparkSession, v: Snapshot.View, table: String, id: Long)
+      : Option[DataFrame] =
+    v.select(s)(_.get(segKey(table, id)))
 
   /** The union of segments with batch id strictly BELOW `id` — "the
     * index as of this batch's arrival", exact under re-delivery (a
     * retried batch must not probe its own half-folded contribution). */
-  def readBefore(s: SparkSession, state: String, id: Long)
+  def readBefore(s: SparkSession, v: Snapshot.View, table: String, id: Long)
       : Option[DataFrame] =
-    Snapshot.readSelected(s, state)(_.collect {
-      case (k, v) if k.startsWith("seg") && k.drop(3).toLong < id => v })
+    v.select(s)(segs(table)(_).collect { case (i, d) if i < id => d })
 }
 
 /** Newest-wins per-user snapshot maintenance, bucketed so merge cost is
@@ -523,17 +547,15 @@ private[graft] object AppendLog {
   * pmod(hash(user_id), buckets)`, each micro-batch reads ONLY the
   * buckets its keys hash into (manifest-addressed paths — pruning by
   * construction, no filter needed) and publishes new versions for ONLY
-  * those buckets. Untouched buckets' files are never opened, rewritten,
-  * or even listed — at 100 TB user cardinality a batch touching 0.1%
-  * of keys rewrites ~0.1% of buckets instead of the world. The
-  * per-bucket manifest makes the multi-bucket publish atomic as a whole
-  * (one pointer swap commits every touched bucket — r12, replacing
-  * dynamic partition overwrite whose multi-partition commit was not).
+  * those buckets, as keys `<table>/<bucket>`. Untouched buckets' files
+  * are never opened, rewritten, or even listed — at 100 TB user
+  * cardinality a batch touching 0.1% of keys rewrites ~0.1% of buckets
+  * instead of the world. The manifest makes the multi-bucket publish
+  * atomic as a whole (one pointer swap commits every touched bucket).
   * Buckets here = 8 (sized to the sandbox's state; production sizes
   * buckets so one partition is a few hundred MB). Newest-wins on the
-  * total key (ts, event_id) is idempotent, so a crash-retry re-merge
-  * publishes identical content; the `@bid` fence makes re-delivery a
-  * manifest lookup. */
+  * total key (ts, event_id) is idempotent, and [[Snapshot.batch]]'s
+  * fence makes re-delivery a manifest lookup. */
 private[graft] object UpsertState {
 
   val buckets = 8
@@ -550,59 +572,51 @@ private[graft] object UpsertState {
       .where(col("_rn") === 1).drop("_rn")
   }
 
+  private def bucketKey(table: String, b: Int): String = s"$table/$b"
+
   /** The committed data directory for one bucket, if any — exposed for
     * the file-identity spec (untouched buckets keep their exact files).
     */
-  private[graft] def bucketDir(state: String, b: Int): Option[String] =
-    Snapshot.currentManifest(state).flatMap(_.get(b.toString))
-      .map(Snapshot.versionPath(state, _))
+  private[graft] def bucketDir(root: String, table: String, b: Int)
+      : Option[String] =
+    Snapshot.currentManifest(root).flatMap(_.get(bucketKey(table, b)))
+      .map(Snapshot.versionPath(root, _))
 
-  /** Merge one micro-batch into the bucketed snapshot. Batch 0 resets
-    * the manifest to exactly its own buckets; later batches collapse
-    * the batch, union against ONLY the stored buckets it touches, and
+  /** Merge one micro-batch into the bucketed snapshot: collapse the
+    * batch, union against ONLY the stored buckets it touches, and
     * publish new versions for just those buckets — one partitioned
-    * write job, one manifest swap. The touched-bucket list is a
-    * driver-side collect bounded by `buckets` (8) — partition routing,
-    * not data. An EMPTY batch 0 commits an empty manifest, which the
-    * first non-empty batch seeds naturally (no read ever opens a
-    * dataless directory — the r11 seeding special-case
-    * dissolved into the manifest design). */
-  def merge(state: String, batch: DataFrame, id: Long): Unit = {
-    val prior = if (id == 0L) None else Snapshot.current(state)
-    if (prior.exists(_.bid.exists(id <= _))) return
+    * write job. The touched-bucket list is a driver-side collect
+    * bounded by `buckets` (8) — partition routing, not data. An empty
+    * batch publishes nothing, and no read ever opens a dataless
+    * directory. */
+  def merge(t: Snapshot.Txn, table: String, batch: DataFrame): Unit = {
     val bs = batch.sparkSession
     val bl = withBucket(latest(batch))
     val touched = bl.select("_bkt").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val prev = prior.fold(Map.empty: Snapshot.Manifest)(_.manifest)
-    if (id == 0L && touched.isEmpty) {
-      Snapshot.commit(state, Map.empty, bid = Some(id))
-    } else if (touched.nonEmpty) {
-      // ONE multi-path scan over the touched buckets' committed dirs;
+    if (touched.nonEmpty) {
+      // ONE multi-path scan over the touched buckets' stored dirs;
       // `_bkt` is a pure function of user_id, so it is RECOMPUTED on
       // read instead of tagged per-path (the first cut opened one scan
       // per bucket — 8 tiny scans per merge, +2 s at fixture scale).
-      val storedRels = touched.flatMap(b => prev.get(b.toString))
-      val stored =
-        if (storedRels.isEmpty) None
-        else prior.map(p => withBucket(Snapshot.read(bs, state, p, storedRels)))
+      val stored = t.select(bs)(m =>
+        touched.flatMap(b => m.get(bucketKey(table, b)))).map(withBucket)
       val merged = latest(stored.fold(bl)(bl.unionByName(_)))
       // ONE write job for all touched buckets: partitionBy lays the
       // version dir out as v<N>/_bkt=<b>/, and the manifest points each
       // bucket key at its subdirectory.
-      val (v, schema) = Snapshot.write(state, merged, "_bkt")
-      Snapshot.commit(state,
-        prev ++ touched.map(b => b.toString -> s"$v/_bkt=$b"),
-        Map(v -> schema), Some(id))
+      val v = t.write(merged, "_bkt")
+      t.put(touched.map(b => bucketKey(table, b) -> s"$v/_bkt=$b"): _*)
     }
-    // id > 0 with an empty batch: nothing to publish, manifest stands.
   }
 
   /** The maintained snapshot: the union of every bucket's committed
     * data directory (manifest-addressed — one multi-path scan). A state
     * root that never committed, or whose manifest maps no buckets,
     * fails with a NAMED error instead of a raw read one. */
-  def read(s: SparkSession, state: String): DataFrame =
-    Snapshot.readSelected(s, state)(_.values).getOrElse(throw new IllegalStateException(
-        s"upsert state at $state holds no data — the replay saw no rows"))
+  def read(s: SparkSession, root: String, table: String): DataFrame =
+    Snapshot.readSelected(s, root)(_.collect {
+      case (k, v) if k.startsWith(s"$table/") => v })
+      .getOrElse(throw new IllegalStateException(
+        s"upsert state at $root holds no data — the replay saw no rows"))
 }

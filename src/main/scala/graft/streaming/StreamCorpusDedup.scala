@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
   * MAINTAINED MinHash band index (r12): the pattern a 100 TB ingest
   * pipeline runs daily — today's crawl must be checked against the
   * historical corpus without ever re-banding history. Two state tables
-  * cooperate per micro-batch:
+  * under the row's one root cooperate per micro-batch:
   *
   *  1. the BAND INDEX ([[AppendLog]]): each batch's (doc_id, band,
   *     band_key) rows — the exact `DedupQueries.MinHashLsh` banding —
@@ -27,9 +27,8 @@ import org.apache.spark.sql.streaming.Trigger
   * The dedup verdict (`flagged ⟺ n_coll > 0 ⟺ ∃ smaller-id doc
   * sharing a band`) therefore equals the batch q_dedup_minhash row's
   * `distinct doc_b` set exactly — spec-pinned, not assumed. Both
-  * merges are fenced (the monoid pointer's `@bid` line; the append-log
-  * manifest key), so crash-retry re-delivery double-counts nothing;
-  * publishes are atomic snapshot commits.
+  * tables move in one [[Snapshot.batch]] commit fenced by the pointer's
+  * `@bid` line, so crash-retry re-delivery double-counts nothing.
   *
   * Scale (100 TB/day ingest): banding is the shared MinHash stage's
   * explode + map-side-combined min-aggregate (one 16-long signature
@@ -43,7 +42,7 @@ import org.apache.spark.sql.streaming.Trigger
   * ~2 s is banding the corpus FRESH each rep — new documents cannot
   * read any precomputed stage, so the stream pays per rep what the 17
   * batch dedup rows amortize over one persisted shingle build — plus
-  * 4 × (segment write + index probe + fenced flag merge) and the fixed
+  * 4 × (segment write + index probe + flag merge + one commit) and the fixed
   * replay machinery. The per-batch shape, not the fixture wall, is the
   * 100 TB claim. T-row (xxhash banding is engine-specific, as for
   * q_dedup_minhash); StreamCorpusDedupSpec pins stream == batch,
@@ -99,53 +98,51 @@ object StreamCorpusDedup {
         coalesce(col("n_coll"), lit(0L)).as("n_coll"))
   }
 
-  /** THE band-index fold skeleton, shared with [[StreamIngest]] (one
-    * definition of the fence discipline — a fix here serves every row
-    * that maintains a band index): band `docs`, append the segment,
-    * fold the flag partials (optionally enriched with extra monoid
-    * columns) through the fenced merge.
+  /** The band index's and the flag table's names under a row's root. */
+  private[graft] val Index = "index"
+  private[graft] val Flags = "flags"
+
+  /** THE band-index fold skeleton, shared with [[StreamIngest]] (a fix
+    * here serves every row that maintains a band index): band `docs`,
+    * append the segment, fold the flag partials (optionally enriched
+    * with extra monoid columns) through the merge — all in the batch's
+    * one transaction.
     *
     * APPEND FIRST: banding is the expensive stage (the MinHash
     * signature aggregation), and the segment write doubles as its
     * materialization — the flag fold reads the bands BACK from the
-    * committed segment instead of recomputing them inside the merge
+    * written segment instead of recomputing them inside the merge
     * lineage (a second full evaluation; measured 8.9 → ~4.4 s at
-    * sf0.1). Crash between the two commits is covered by both fences:
-    * re-delivery no-ops the append (manifest key) and re-runs the
-    * merge (monoid `@bid` fence) from the same segment bytes; the prior
-    * index reads segments strictly BELOW this id, so a retried batch
-    * never probes its own contribution. */
-  private[graft] def foldBands(index: String, flags: String,
-      docs: DataFrame, id: Long,
+    * sf0.1). The prior index reads segments strictly BELOW this id, so
+    * a batch never probes its own contribution. */
+  private[graft] def foldBands(t: Snapshot.Txn, docs: DataFrame, id: Long,
       enrichPartials: DataFrame => DataFrame = identity,
       band: DataFrame => DataFrame = bandRows,
       verify: (String, String) => Column = (_, _) => lit(true)): Unit = {
     val s = docs.sparkSession
-    AppendLog.append(index, band(docs), id)
-    val seg = AppendLog.segment(s, index, id).getOrElse(
-      throw new IllegalStateException(s"segment seg$id missing post-append"))
-    val prior = AppendLog.readBefore(s, index, id)
-    MonoidTable.merge(flags,
-      enrichPartials(flagPartials(seg, prior, verify)), id,
-      Seq("doc_id"))
+    AppendLog.append(t, Index, band(docs), id)
+    val seg = AppendLog.segment(s, t, Index, id).get
+    val prior = AppendLog.readBefore(s, t, Index, id)
+    MonoidTable.merge(t, Flags,
+      enrichPartials(flagPartials(seg, prior, verify)), Seq("doc_id"))
   }
 
   /** Fold one micro-batch into the two state tables. Exposed so the
     * specs can crash ([[Snapshot.crashAt]]) and re-order batches
     * around the identical code path the catalog row runs. */
-  private[graft] def foldBatch(index: String, flags: String,
-      batch: DataFrame, id: Long): Unit =
+  private[graft] def foldBatch(t: Snapshot.Txn, batch: DataFrame,
+      id: Long): Unit =
     // The staged single-file chunks arrive as ONE input partition, so
     // without the repartition the whole MinHash aggregation (explode +
     // 16 hash mins over every shingle) runs in a single map task —
     // measured ~1.2 s/batch single-threaded at sf0.1. Production
     // batches arrive as many files and never need it; the tiny doc-row
     // shuffle is noise next to the banding it parallelizes.
-    foldBands(index, flags, batch.repartition(8), id)
+    foldBands(t, batch.repartition(8), id)
 
   /** The maintained verdict table: every seen doc with its flag. */
-  def verdicts(s: SparkSession, flags: String): DataFrame =
-    MonoidTable.read(s, flags)
+  def verdicts(s: SparkSession, root: String): DataFrame =
+    MonoidTable.read(s, root, Flags)
       .where(col("seen") > 0)
       .select(col("doc_id"), (col("n_coll") > 0).cast("long").as("flagged"))
       .orderBy(col("doc_id"))
@@ -166,8 +163,7 @@ object StreamCorpusDedup {
     "q_stream_dedup_corpus",
     (s, dir) => {
       val inDir = DocStage.inDir(s, dir)
-      val index = DocStage.stateDir(dir, "index")
-      val flags = DocStage.stateDir(dir, "flags")
+      val root = DocStage.stateDir(dir, "dedup")
       val src = s.readStream.schema(DocStage.schema(s, inDir))
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       // 8, not the replay default 4: unlike the windowed-agg replays
@@ -175,10 +171,9 @@ object StreamCorpusDedup {
       // runs a corpus-scale MinHash signature aggregation — the extra
       // partitions parallelize THAT, while the flag/index state stays
       // small enough that 8 stores are not measurable overhead.
-      FoldReplay.run(src, "q_stream_dedup_corpus", shufflePartitions = "8") {
-        (batch, id) => foldBatch(index, flags, batch, id)
-      }
-      verdicts(s, flags)
+      FoldReplay.run(src, "q_stream_dedup_corpus", root,
+        shufflePartitions = "8")(foldBatch)
+      verdicts(s, root)
     })
 
   val all: Vector[Q] = Vector(qStreamDedupCorpus)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * machinery the text corpus uses: the binary codecs and the pHash had
   * no stream-side consumer, and the shared
   * [[StreamCorpusDedup.foldBands]] skeleton gets its second key type —
-  * a fix to the fence discipline now provably serves BOTH index
+  * a fix to the fold skeleton now provably serves BOTH index
   * families.
   *
   * Per micro-batch of media files (media_id, modality, payload):
@@ -24,13 +24,13 @@ import org.apache.spark.sql.functions._
   *     the stream twin of the batch join's `modality` key. Every band
   *     row carries the full hash, so the verify step needs no second
   *     lookup against media state.
-  *  3. FOLD — `foldBands` verbatim: the band rows land as one fenced
+  *  3. FOLD — `foldBands` verbatim: the band rows land as one
   *     [[AppendLog]] segment (history never re-hashed, never
   *     re-banded), the index probe is the (band, band_key) equi join,
   *     and the collision VERIFY — exact `bit_count(ha ^ hb) ≤ 8`, the
   *     batch row's threshold — runs inside the probe join before
-  *     anything counts. Flags fold through the fenced monoid merge,
-  *     both id-directions, so the verdict table is a pure function of
+  *     anything counts. Flags fold through the monoid merge in the
+  *     same batch commit, both id-directions, so the verdict table is a pure function of
   *     the media corpus, invariant to chunking and arrival order (the
   *     corpus-dedup argument, inherited by reuse).
   *
@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions._
   * of the 4 micro-batches decodes + hashes its media slice fresh (new
   * media cannot read a precomputed stage — the corpus-dedup banding
   * argument, applied to pixels) plus the fixed replay machinery and
-  * three fenced commits per batch. The per-batch SHAPE — decode ∝
+  * one commit per batch. The per-batch SHAPE — decode ∝
   * batch, probe ∝ matches — is the 100 TB claim.
   *
   * T-row (the pHash chain is engine-specific bit math):
@@ -95,12 +95,12 @@ object StreamPhashDedup {
 
   /** Fold one micro-batch of media through the shared skeleton.
     * Exposed for the spec's re-ordering and crash injection. */
-  private[graft] def foldBatch(index: String, flags: String,
-      batch: DataFrame, id: Long): Unit =
+  private[graft] def foldBatch(t: Snapshot.Txn, batch: DataFrame,
+      id: Long): Unit =
     // The staged single-file chunks arrive as one input partition; the
     // repartition parallelizes the decode+hash map (the DocStage rule —
     // production batches arrive as many files and skip it).
-    StreamCorpusDedup.foldBands(index, flags, batch.repartition(8), id,
+    StreamCorpusDedup.foldBands(t, batch.repartition(8), id,
       band = phashBands, verify = hammingVerify)
 
   /** Staging: the media corpus (payloads synthesized by the shared
@@ -124,16 +124,14 @@ object StreamPhashDedup {
     "q_stream_phash_dedup",
     (s, dir) => {
       val inDir = MediaStage.inDir(s, dir)
-      val index = MediaStage.stateDir(dir, "index")
-      val flags = MediaStage.stateDir(dir, "flags")
+      val root = MediaStage.stateDir(dir, "dedup")
       val src = s.readStream.schema(MediaStage.schema(s, inDir))
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       // 8 shuffle partitions: each batch runs a corpus-scale decode +
       // hash map (the corpus-dedup rationale, decode for banding).
-      FoldReplay.run(src, "q_stream_phash_dedup", shufflePartitions = "8") {
-        (batch, id) => foldBatch(index, flags, batch, id)
-      }
-      StreamCorpusDedup.verdicts(s, flags)
+      FoldReplay.run(src, "q_stream_phash_dedup", root,
+        shufflePartitions = "8")(foldBatch)
+      StreamCorpusDedup.verdicts(s, root)
     })
 
   val all: Vector[Q] = Vector(qStreamPhashDedup)

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * re-fingerprinting history. This is [[StreamCorpusDedup]]'s
   * AppendLog-segment discipline applied one level down, from doc-level
   * MinHash bands to the winnowing fingerprints that seed exact span
-  * recovery. Three state tables cooperate per micro-batch:
+  * recovery. Three state tables under the row's one root cooperate per
+  * micro-batch:
   *
   *  1. the FINGERPRINT INDEX ([[AppendLog]]): each batch's
   *     (doc_id, pos, fp) rows — the exact
@@ -44,13 +45,12 @@ import org.apache.spark.sql.functions._
   * and a perverse reordering to pin it, plus a planted cross-batch
   * span).
   *
-  * Crash-retry: all three commits are fenced by the AppendLog manifest
-  * key; a crash between them re-delivers the batch — committed tables
-  * no-op, the span fold recomputes from the committed fingerprint
-  * segment (append-first, the foldBands rule) and the strictly-below
-  * prior index, so a retried batch never probes its own contribution
-  * (CrashSweepSpec crashes every commit of every batch through
-  * [[Snapshot.crashAt]] and re-delivers).
+  * Crash-retry: the three tables move in ONE [[Snapshot.batch]] commit
+  * per micro-batch, fenced by the pointer's `@bid` — a crash anywhere
+  * leaves the pointer on the previous batch, and the re-delivery folds
+  * the whole batch again against the strictly-below prior index
+  * (CrashSweepSpec crashes that commit of every batch at every phase
+  * through [[Snapshot.crashAt]] and re-delivers).
   *
   * Scale (100 TB/day ingest): fingerprinting is the ~2/(window+1)
   * density narrow transform of the BATCH only; the probe is an equi
@@ -70,7 +70,7 @@ import org.apache.spark.sql.functions._
   *
   * GDPR composes ([[eraseSpanState]], r14 verdict ask #4): an erased
   * cohort's fingerprints, stored texts AND reported spans (either
-  * side) leave all three logs under one fence each — after which a
+  * side) leave all three logs in one fenced commit — after which a
   * re-run or any later batch CANNOT resurrect a span against the
   * cohort, because the probe index physically no longer holds its
   * fingerprints (spec-pinned: post-erasure == from-scratch build
@@ -78,7 +78,8 @@ import org.apache.spark.sql.functions._
   * with an erased doc reports nothing against it).
   *
   * Bench-cost honesty: each rep replays the 4 staged chunks — 4 ×
-  * (batch fingerprint + probe + extension + three fenced commits) of
+  * (batch fingerprint + probe + extension + three writes and one
+  * commit) of
   * fixed machinery; new documents can read no precomputed stage, so
   * the stream pays per rep what the batch row amortizes over the
   * shared persisted fingerprint stage. T-row (the winnowing
@@ -116,12 +117,17 @@ object StreamSpanDedup {
     }
   }
 
+  /** The three tables' names under the row's root. */
+  private[graft] val FpIdx = "fpidx"
+  private[graft] val Docs = "docs"
+  private[graft] val Spans = "spans"
+
   /** Fold one micro-batch of (doc_id, text) into the three state
     * tables. Exposed so the specs can re-deliver, re-order and crash
     * (through [[Snapshot.crashAt]]) around the identical code path the
     * catalog row runs. */
-  private[graft] def foldBatch(fpidx: String, docs: String, spans: String,
-      batch: DataFrame, id: Long): Unit = {
+  private[graft] def foldBatch(t: Snapshot.Txn, batch: DataFrame, id: Long)
+      : Unit = {
     val s = batch.sparkSession
     // Staged single-file chunks arrive as ONE input partition — the
     // repartition parallelizes the per-doc winnowing scan (the DocStage
@@ -130,12 +136,12 @@ object StreamSpanDedup {
     // APPEND FIRST (the foldBands rule): fingerprinting is the
     // expensive stage and the segment write doubles as its
     // materialization — the span fold reads the fingerprints BACK from
-    // the committed segment instead of recomputing them inside the
-    // probe lineage, and a retried batch probes only segments strictly
-    // below its own id.
-    AppendLog.append(fpidx, TextQueries.Fingerprint.fingerprints(b), id)
-    AppendLog.append(docs, b, id)
-    // Committed fingerprint segments are a few small files each, so a
+    // the written segment instead of recomputing them inside the probe
+    // lineage, and a batch probes only segments strictly below its own
+    // id.
+    AppendLog.append(t, FpIdx, TextQueries.Fingerprint.fingerprints(b), id)
+    AppendLog.append(t, Docs, b, id)
+    // Fingerprint segments are a few small files each, so a
     // plain scan packs them into 1–3 input splits (maxPartitionBytes ≫
     // segment size) — and because every join downstream is a broadcast,
     // the WHOLE seed-probe + span-extension stage fuses onto those
@@ -151,84 +157,72 @@ object StreamSpanDedup {
     // assigns probe rows, not key hashes (a fp-hash layout would pile
     // every hot-key probe row onto one task — the §2.5 skew trap).
     val par = s.sparkContext.defaultParallelism
-    val segFps = AppendLog.segment(s, fpidx, id).getOrElse(
-      throw new IllegalStateException(s"segment seg$id missing post-append"))
-      .repartition(par)
-    val priorFps = AppendLog.readBefore(s, fpidx, id).map(_.repartition(par))
-    val batchDocs = AppendLog.segment(s, docs, id).getOrElse(
-      throw new IllegalStateException(s"doc seg$id missing post-append"))
-    val corpus = AppendLog.readBefore(s, docs, id)
+    val segFps = AppendLog.segment(s, t, FpIdx, id).get.repartition(par)
+    val priorFps =
+      AppendLog.readBefore(s, t, FpIdx, id).map(_.repartition(par))
+    val batchDocs = AppendLog.segment(s, t, Docs, id).get
+    val corpus = AppendLog.readBefore(s, t, Docs, id)
       .fold(batchDocs)(batchDocs.unionByName(_))
-    AppendLog.append(spans,
+    AppendLog.append(t, Spans,
       DedupQueries.extendSeeds(batchSeeds(segFps, priorFps), corpus), id)
   }
 
   /** The maintained span report: the union of committed span segments
     * (each unordered doc pair was probed in exactly one batch, so the
     * union needs no dedup). */
-  def report(s: SparkSession, spans: String): DataFrame =
-    AppendLog.read(s, spans).getOrElse(
+  def report(s: SparkSession, root: String): DataFrame =
+    AppendLog.read(s, root, Spans).getOrElse(
       throw new IllegalStateException(
-        s"span report at $spans has no committed segments"))
+        s"span report at $root has no committed segments"))
       .orderBy(col("doc_a"), col("doc_b"), col("start_a"), col("start_b"))
 
   /** GDPR erasure through the maintained span state (r14 verdict ask
-    * #4): three fenced physical rewrites — the span report drops every
-    * row naming the cohort on EITHER side, the fingerprint index and
-    * the corpus store drop the cohort's rows — each fence riding the
-    * same atomic manifest swap as the data it fences, so re-delivery
-    * no-ops per table and a crash between steps re-enters at the first
-    * unfenced one (the spec crashes a step's commit through
-    * [[Snapshot.crashAt]]). Because span
+    * #4): three physical rewrites — the span report drops every row
+    * naming the cohort on EITHER side, the fingerprint index and the
+    * corpus store drop the cohort's rows — in ONE
+    * [[Snapshot.update]] whose `gdpr<eid>` fence rides the same atomic
+    * swap as the data, so a re-delivered request no-ops and a crashed
+    * one leaves the pre-erasure pointer for the retry (the spec crashes
+    * the commit through [[Snapshot.crashAt]]). Because span
     * rows are pairwise-pure facts and fingerprints/texts are per-doc
     * transforms, post-erasure state equals a from-scratch build over
     * the retained corpus EXACTLY — and later batches probe the
     * rewritten index, so nothing can resurrect a span against the
     * cohort (spec-pinned, not assumed). */
-  private[graft] def eraseSpanState(s: SparkSession, fpidx: String,
-      docs: String, spans: String, erased: DataFrame, eid: Long)
-      : Unit = {
-    val fence = s"gdpr$eid"
-    val e = erased.select(col("doc_id")).distinct().localCheckpoint(true)
-    if (!AppendLog.fenced(spans, fence))
-      AppendLog.rewrite(s, spans, all => all
+  private[graft] def eraseSpanState(s: SparkSession, root: String,
+      erased: DataFrame, eid: Long): Unit =
+    Snapshot.update(root, Some(s"gdpr$eid")) { t =>
+      val e = erased.select(col("doc_id")).distinct().localCheckpoint(true)
+      AppendLog.rewrite(s, t, Spans, all => all
         .join(e.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
         .join(e.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_anti")
         // a using-column join moves its key to the front — re-project
         // the stored order, or the folded segment's schema diverges
         // from later appends'
-        .select(all.columns.map(col): _*),
-        Set(fence))
-    if (!AppendLog.fenced(fpidx, fence))
-      AppendLog.rewrite(s, fpidx,
-        _.join(e, Seq("doc_id"), "left_anti"), Set(fence))
-    if (!AppendLog.fenced(docs, fence))
-      AppendLog.rewrite(s, docs,
-        _.join(e, Seq("doc_id"), "left_anti"), Set(fence))
-  }
+        .select(all.columns.map(col): _*))
+      AppendLog.rewrite(s, t, FpIdx, _.join(e, Seq("doc_id"), "left_anti"))
+      AppendLog.rewrite(s, t, Docs, _.join(e, Seq("doc_id"), "left_anti"))
+    }
 
   /** q_stream_span_dedup (T) — the maintained span report after the
     * staged replay drains: equal to the batch q_dedup_spans output by
     * the probe-once argument above (spec-pinned, not assumed). Shares
     * the corpus-dedup row's 4-chunk document staging; its own state
-    * roots. */
+    * root. */
   val qStreamSpanDedup: Q = Q(
     "q_stream_span_dedup",
     (s, dir) => {
       val st = StreamCorpusDedup.DocStage
       val inDir = st.inDir(s, dir)
-      val fpidx = st.stateDir(dir, "span_fpidx")
-      val docsT = st.stateDir(dir, "span_docs")
-      val spans = st.stateDir(dir, "span_out")
+      val root = st.stateDir(dir, "span")
       val src = s.readStream.schema(st.schema(s, inDir))
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       // 8 shuffle partitions (the corpus-dedup rationale): each batch
       // runs a corpus-scale fingerprint scan + probe join, not just
       // state-sized shuffles.
-      FoldReplay.run(src, "q_stream_span_dedup", shufflePartitions = "8") {
-        (batch, id) => foldBatch(fpidx, docsT, spans, batch, id)
-      }
-      report(s, spans)
+      FoldReplay.run(src, "q_stream_span_dedup", root,
+        shufflePartitions = "8")(foldBatch)
+      report(s, root)
     })
 
   val all: Vector[Q] = Vector(qStreamSpanDedup)

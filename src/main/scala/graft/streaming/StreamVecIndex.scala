@@ -118,6 +118,9 @@ object StreamVecIndex {
     * fresh (batch 0 resets the state table), which is the whole
     * offline/online contract — StreamVecIndexSpec pins that a refit
     * cleanly supersedes the old index. */
+  /** The statistics table's name under the row's root. */
+  private[graft] val Stats = "stats"
+
   private[graft] def maintain(s: SparkSession, dir: String, state: String,
       codebook: Option[Seq[Array[Float]]] = None): Unit = {
     val cb = codebook.getOrElse(
@@ -125,10 +128,10 @@ object StreamVecIndex {
     val inDir = VecStage.inDir(s, dir)
     val src = s.readStream.schema(VecStage.schema(s, inDir))
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    FoldReplay.run(src, "q_stream_vec_index") {
-      (batch, id) =>
-        MonoidTable.merge(state,
-          partials(graft.operators.AnnIvf.assign(batch, cb)), id,
+    FoldReplay.run(src, "q_stream_vec_index", state) {
+      (t, batch, _) =>
+        MonoidTable.merge(t, Stats,
+          partials(graft.operators.AnnIvf.assign(batch, cb)),
           Seq("cell", "pos"))
     }
   }
@@ -141,7 +144,7 @@ object StreamVecIndex {
     (s, dir) => {
       val state = VecStage.stateDir(dir)
       maintain(s, dir, state)
-      driftReport(MonoidTable.read(s, state),
+      driftReport(MonoidTable.read(s, state, Stats),
         graft.operators.AnnIvf.Models(s, dir, K, Iters))
     })
 

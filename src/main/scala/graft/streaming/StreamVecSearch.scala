@@ -67,6 +67,9 @@ import org.apache.spark.sql.streaming.Trigger
   * cannot express bit-stably (the q_vec_knn_ivf precedent). */
 object StreamVecSearch {
 
+  /** The results log's name under the row's root. */
+  private[graft] val Results = "results"
+
   /** Same frozen model AND same nprobe as the batch IVF row
     * (`q_vec_knn_ivf`: k=8, 3 Lloyd iterations, nprobe=3), so the two
     * rows answer with identical accuracy. */
@@ -139,7 +142,7 @@ object StreamVecSearch {
     * Exposed so the spec can re-deliver and re-order around the exact
     * code path the catalog row runs; the distinct probed-cell collect
     * is bounded by k (routing state, not data). */
-  private[graft] def foldBatch(results: String,
+  private[graft] def foldBatch(t: Snapshot.Txn,
       postings: Seq[Int] => Option[DataFrame],
       centroids: Seq[Array[Float]], batch: DataFrame, id: Long): Unit = {
     val s = batch.sparkSession
@@ -149,7 +152,7 @@ object StreamVecSearch {
         .collect().map(_.getInt(0)).toSeq.sorted
       val out = postings(cells).map(scoreTopK(routed, _))
         .getOrElse(emptyResults(s))
-      AppendLog.append(results, out, id)
+      AppendLog.append(t, Results, out, id)
     } finally routed.unpersist()
   }
 
@@ -231,15 +234,16 @@ object StreamVecSearch {
       val cb = graft.operators.AnnIvf.Models(s, dir, K, Iters)
       val postings = Postings.dir(s, dir)
       val inDir = QueryStage.inDir(s, dir)
-      val results = QueryStage.stateDir(dir, "results")
+      val root = QueryStage.stateDir(dir, "results")
       val src = s.readStream.schema(QueryStage.schema(s, inDir))
         .option("maxFilesPerTrigger", 1).parquet(inDir)
-      FoldReplay.run(src, "q_stream_vec_search") { (batch, id) =>
-        foldBatch(results, pathPostings(batch.sparkSession, postings), cb,
+      FoldReplay.run(src, "q_stream_vec_search", root) { (t, batch, id) =>
+        foldBatch(t, pathPostings(batch.sparkSession, postings), cb,
           batch, id)
       }
-      AppendLog.read(s, results).getOrElse(throw new IllegalStateException(
-          s"results log at $results has no committed segments"))
+      AppendLog.read(s, root, Results).getOrElse(throw
+        new IllegalStateException(
+          s"results log at $root has no committed segments"))
         .orderBy(col("qid"), col("rank"))
     })
 

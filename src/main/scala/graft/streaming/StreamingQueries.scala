@@ -608,10 +608,10 @@ object StreamingQueries {
         s.readStream.schema(UpsertStage.schema(s, inDir))
           .option("maxFilesPerTrigger", 1).parquet(inDir))
       // Small-state shuffle sizing, same scoped knob as Replay.run.
-      FoldReplay.run(src, "q_stream_upsert") { (batch, id) =>
-        UpsertState.merge(state, batch, id)
+      FoldReplay.run(src, "q_stream_upsert", state) { (t, batch, _) =>
+        UpsertState.merge(t, "state", batch)
       }
-      UpsertState.read(s, state)
+      UpsertState.read(s, state, "state")
         .select($"user_id", $"ts".cast("timestamp_ntz").as("last_ts"),
           $"event_id".as("last_event_id"),
           $"event_type".as("last_type"), $"value".as("last_value"))
@@ -664,10 +664,10 @@ object StreamingQueries {
       val src = graft.Tables.normalizeTs(
         s.readStream.schema(UpsertStage.schema(s, inDir))
           .option("maxFilesPerTrigger", 1).parquet(inDir))
-      FoldReplay.run(src, "q_stream_daily_agg") { (batch, id) =>
-        MonoidTable.merge(state, partials(batch), id, Seq("day"))
+      FoldReplay.run(src, "q_stream_daily_agg", state) { (t, batch, _) =>
+        MonoidTable.merge(t, "daily", partials(batch), Seq("day"))
       }
-      MonoidTable.read(s, state)
+      MonoidTable.read(s, state, "daily")
         .select($"day", $"n",
           ($"sc".cast(org.apache.spark.sql.types.DoubleType) / 100)
             .as("sum_value"),
@@ -720,11 +720,11 @@ object StreamingQueries {
       val src = graft.Tables.normalizeTs(
         s.readStream.schema(UpsertStage.schema(s, inDir))
           .option("maxFilesPerTrigger", 1).parquet(inDir))
-      FoldReplay.run(src, "q_stream_kalman") { (batch, id) =>
-        MonoidTable.merge(state, partials(batch), id, Seq("day"))
+      FoldReplay.run(src, "q_stream_kalman", state) { (t, batch, _) =>
+        MonoidTable.merge(t, "daily", partials(batch), Seq("day"))
       }
       graft.operators.StatQueries.kalmanChain(s,
-        MonoidTable.read(s, state).select(col("day"), col("v")))
+        MonoidTable.read(s, state, "daily").select(col("day"), col("v")))
     },
     oracle = Some(graft.operators.StatQueries.kalmanOracle))
 
@@ -757,12 +757,12 @@ object StreamingQueries {
       val src = graft.Tables.normalizeTs(
         s.readStream.schema(UpsertStage.schema(s, inDir))
           .option("maxFilesPerTrigger", 1).parquet(inDir))
-      FoldReplay.run(src, "q_stream_decay") { (batch, id) =>
-        MonoidTable.merge(state, partials(batch), id,
+      FoldReplay.run(src, "q_stream_decay", state) { (t, batch, _) =>
+        MonoidTable.merge(t, "daily", partials(batch),
           Seq("event_type", "day"))
       }
       graft.operators.AnalyticsQueries.decayReport(s,
-        MonoidTable.read(s, state)
+        MonoidTable.read(s, state, "daily")
           .select(col("event_type"), col("day"), col("day_cents")))
     },
     oracle = Some(graft.operators.AnalyticsQueries.decayOracle))

@@ -63,6 +63,9 @@ object TokenizerRefit {
 
   import graft.operators.{BpeTokenizer, UnigramLm}
 
+  /** The word-count table's name under the stats root. */
+  private[graft] val Words = "words"
+
   /** One micro-batch's word-count partials — the batch capped-scan's
     * own derivation (Tokenized's `lw`: lower each whitespace token),
     * applied to the raw batch. */
@@ -95,13 +98,12 @@ object TokenizerRefit {
         merges: Vector[(String, String)], vocab: Map[String, Long])
         : Unit = {
       import s.implicits._
-      val (vM, mSchema) = Snapshot.write(root,
-        merges.zipWithIndex.map { case ((l, r), k) => (k, l, r) }
-          .toDF("rank", "left", "right"))
-      val (vV, vSchema) = Snapshot.write(root,
-        vocab.toSeq.sortBy(_._1).toDF("piece", "lp_micro"))
-      Snapshot.commit(root, Map("merges" -> vM, "vocab" -> vV),
-        Map(vM -> mSchema, vV -> vSchema))
+      Snapshot.update(root, None)(t => t.put(
+        "merges" -> t.write(
+          merges.zipWithIndex.map { case ((l, r), k) => (k, l, r) }
+            .toDF("rank", "left", "right")),
+        "vocab" -> t.write(
+          vocab.toSeq.sortBy(_._1).toDF("piece", "lp_micro"))))
     }
 
     private def keyTable(s: SparkSession, root: String, key: String)
@@ -130,8 +132,8 @@ object TokenizerRefit {
     val inDir = st.inDir(s, dir)
     val src = s.readStream.schema(st.schema(s, inDir))
       .option("maxFilesPerTrigger", 1).parquet(inDir)
-    FoldReplay.run(src, "q_stream_tokenizer_refit") {
-      (batch, id) => MonoidTable.merge(state, partials(batch), id, Seq("w"))
+    FoldReplay.run(src, "q_stream_tokenizer_refit", state) {
+      (t, batch, _) => MonoidTable.merge(t, Words, partials(batch), Seq("w"))
     }
   }
 
@@ -171,7 +173,7 @@ object TokenizerRefit {
       : DataFrame = {
     val frozenM = Gen.readMerges(s, root)
     val frozenV = Gen.readVocab(s, root)
-    val wc = capped(MonoidTable.read(s, state))
+    val wc = capped(MonoidTable.read(s, state, Words))
     val refitM = BpeTokenizer.trainMerges(wc, BpeTokenizer.nMerges)
     val refitV = UnigramLm.train(wc)
     Gen.publish(s, root, refitM, refitV)

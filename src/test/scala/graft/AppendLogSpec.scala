@@ -4,36 +4,44 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.AppendLog
+import graft.streaming.{AppendLog, Snapshot}
 
-/** The append-only segment log's contract: manifest-key fencing,
-  * batch-0 reset, and compaction (fold to one directory, fence
-  * tombstones retained, readers de-duplicated). */
+/** The append-only segment log's contract: batch fencing, batch-0
+  * reset, and compaction (fold to one directory, the batch fence
+  * retained, readers de-duplicated). */
 class AppendLogSpec extends AnyFunSuite with SparkFixture {
 
   import spark.implicits._
 
   private def rows(log: String): Set[(Long, String)] =
-    AppendLog.read(spark, log).get
+    AppendLog.read(spark, log, "t").get
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+
+  private def append(log: String, df: org.apache.spark.sql.DataFrame,
+      id: Long): Unit =
+    Snapshot.batch(log, id)(AppendLog.append(_, "t", df, id))
+
+  private def compact(log: String): Unit =
+    Snapshot.update(log, None)(AppendLog.compact(spark, _, "t"))
 
   test("append/read round trip; a re-delivered batchId no-ops; " +
       "batch 0 resets") {
     val log = Files.createTempDirectory("graft_alog").toString + "/t"
-    assert(AppendLog.read(spark, log).isEmpty, "no commit yet")
-    AppendLog.append(log, Seq((1L, "a")).toDF("id", "v"), 0L)
-    AppendLog.append(log, Seq((2L, "b")).toDF("id", "v"), 1L)
+    assert(AppendLog.read(spark, log, "t").isEmpty, "no commit yet")
+    append(log, Seq((1L, "a")).toDF("id", "v"), 0L)
+    append(log, Seq((2L, "b")).toDF("id", "v"), 1L)
     assert(rows(log) == Set((1L, "a"), (2L, "b")))
-    // Re-delivery (crash between epoch write and commit): the manifest
-    // key fences — content must not double.
-    AppendLog.append(log, Seq((2L, "b")).toDF("id", "v"), 1L)
+    // Re-delivery (crash between epoch write and commit): the batch
+    // fence — content must not double.
+    append(log, Seq((2L, "b")).toDF("id", "v"), 1L)
     assert(rows(log) == Set((1L, "a"), (2L, "b")))
     // readBefore excludes the id's own segment.
-    assert(AppendLog.readBefore(spark, log, 1L).get
+    val v = Snapshot.view(log).get
+    assert(AppendLog.readBefore(spark, v, "t", 1L).get
       .collect().map(_.getLong(0)).toSet == Set(1L))
-    assert(AppendLog.readBefore(spark, log, 0L).isEmpty)
+    assert(AppendLog.readBefore(spark, v, "t", 0L).isEmpty)
     // Batch 0 resets — a fresh invocation is self-contained.
-    AppendLog.append(log, Seq((9L, "z")).toDF("id", "v"), 0L)
+    append(log, Seq((9L, "z")).toDF("id", "v"), 0L)
     assert(rows(log) == Set((9L, "z")))
   }
 
@@ -41,26 +49,25 @@ class AppendLogSpec extends AnyFunSuite with SparkFixture {
       "rows exactly, keeps fence tombstones, and new appends continue") {
     val log = Files.createTempDirectory("graft_alog_c").toString + "/t"
     (0 to 3).foreach(i =>
-      AppendLog.append(log, Seq((i.toLong, s"v$i")).toDF("id", "v"),
-        i.toLong))
+      append(log, Seq((i.toLong, s"v$i")).toDF("id", "v"), i.toLong))
     val before = rows(log)
-    AppendLog.compact(spark, log)
+    compact(log)
     assert(rows(log) == before, "compaction must preserve rows exactly")
     // One physical segment directory now serves every fence key…
     val dirs = graft.streaming.Snapshot.currentManifest(log).get
       .values.toSet
     assert(dirs.size == 1, s"expected one folded dir, got $dirs")
     // …and a retention sweep later, only window dirs remain on disk.
-    // Fence tombstones: a re-delivered pre-compaction id still no-ops.
-    AppendLog.append(log, Seq((2L, "v2")).toDF("id", "v"), 2L)
+    // The batch fence: a re-delivered pre-compaction id still no-ops.
+    append(log, Seq((2L, "v2")).toDF("id", "v"), 2L)
     assert(rows(log) == before,
       "a pre-compaction batchId must still be fenced after compaction")
     // New batches append as segments beside the folded one.
-    AppendLog.append(log, Seq((4L, "v4")).toDF("id", "v"), 4L)
+    append(log, Seq((4L, "v4")).toDF("id", "v"), 4L)
     assert(rows(log) == before + ((4L, "v4")))
     // Compacting repeatedly converges (single-dir logs no-op).
-    AppendLog.compact(spark, log)
-    AppendLog.compact(spark, log)
+    compact(log)
+    compact(log)
     assert(graft.streaming.Snapshot.currentManifest(log).get.values.toSet
       .size == 1)
     assert(rows(log) == before + ((4L, "v4")))
@@ -79,18 +86,15 @@ class AppendLogSpec extends AnyFunSuite with SparkFixture {
     val root = Files.createTempDirectory("graft_alog_cd").toString
     val batches = (0 until 4).map(i =>
       docs.where(pmod(col("doc_id"), lit(4)) === i))
-    graft.streaming.StreamCorpusDedup.foldBatch(
-      s"$root/index", s"$root/flags", batches(0), 0L)
-    graft.streaming.StreamCorpusDedup.foldBatch(
-      s"$root/index", s"$root/flags", batches(1), 1L)
+    def fold(id: Int): Unit = Snapshot.batch(root, id.toLong)(
+      graft.streaming.StreamCorpusDedup.foldBatch(_, batches(id), id.toLong))
+    fold(0)
+    fold(1)
     // Offline maintenance between invocations: compact the quiesced log.
-    AppendLog.compact(spark, s"$root/index")
-    graft.streaming.StreamCorpusDedup.foldBatch(
-      s"$root/index", s"$root/flags", batches(2), 2L)
-    graft.streaming.StreamCorpusDedup.foldBatch(
-      s"$root/index", s"$root/flags", batches(3), 3L)
-    val got = graft.streaming.StreamCorpusDedup
-      .verdicts(spark, s"$root/flags")
+    Snapshot.update(root, None)(AppendLog.compact(spark, _, "index"))
+    fold(2)
+    fold(3)
+    val got = graft.streaming.StreamCorpusDedup.verdicts(spark, root)
       .where(col("flagged") === 1L)
       .collect().map(_.getLong(0)).toSet
     assert(got == want,

@@ -33,7 +33,7 @@ class IvfRefitSpec extends AnyFunSuite with SparkFixture {
       "recomputed from scratch, and within 1 micro-unit of the " +
       "float-path train(iters + 1)") {
     val state = IvfRefit.ensureMaintained(spark, sfDir)
-    val got = IvfRefit.mStep(MonoidTable.read(spark, state), frozen)
+    val got = IvfRefit.mStep(MonoidTable.read(spark, state, StreamVecIndex.Stats), frozen)
 
     // Independent recompute: same micro quantization, straight from the
     // corpus in one batch — stats-path == direct-path is the claim the
@@ -89,7 +89,7 @@ class IvfRefitSpec extends AnyFunSuite with SparkFixture {
 
     val root = StreamVecIndex.VecStage.stateDir(sfDir, "gen")
     val state = IvfRefit.ensureMaintained(spark, sfDir)
-    val newCb = IvfRefit.mStep(MonoidTable.read(spark, state), frozen)
+    val newCb = IvfRefit.mStep(MonoidTable.read(spark, state, StreamVecIndex.Stats), frozen)
     val want = AnnIvf.assign(emb, newCb)
       .select(col("vec_id"), col("cell"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
@@ -121,7 +121,7 @@ class IvfRefitSpec extends AnyFunSuite with SparkFixture {
           (a.toDouble - b) * (a.toDouble - b) }.sum).min
       }.sum
     val state = IvfRefit.ensureMaintained(spark, sfDir)
-    val newCb = IvfRefit.mStep(MonoidTable.read(spark, state), frozen)
+    val newCb = IvfRefit.mStep(MonoidTable.read(spark, state, StreamVecIndex.Stats), frozen)
     assert(cost(newCb) <= cost(frozen) + 1e-6,
       "one more Lloyd round must not increase total quantization cost")
   }
@@ -163,9 +163,9 @@ class IvfRefitSpec extends AnyFunSuite with SparkFixture {
     val root = base + "/gen"
     val state = base + "/stats"
     IvfRefit.Gen.bootstrap(spark, plantedCorpus, root, plantedCb)
-    MonoidTable.merge(state,
+    Snapshot.batch(state, 0L)(MonoidTable.merge(_, StreamVecIndex.Stats,
       StreamVecIndex.partials(AnnIvf.assign(plantedCorpus, plantedCb)),
-      0L, Seq("cell", "pos"))
+      Seq("cell", "pos")))
     (root, state)
   }
 
@@ -229,9 +229,9 @@ class IvfRefitSpec extends AnyFunSuite with SparkFixture {
     val batch = StreamVecSearch.queryLog(spark, sfDir)
       .where(col("qid").isin(qids: _*))
     val results = Files.createTempDirectory("graft_refit_serve").toString
-    StreamVecSearch.foldBatch(results,
-      StreamVecSearch.genPostings(spark, root), newCb, batch, 0L)
-    val got = AppendLog.read(spark, results).get
+    Snapshot.batch(results, 0L)(StreamVecSearch.foldBatch(_,
+      StreamVecSearch.genPostings(spark, root), newCb, batch, 0L))
+    val got = AppendLog.read(spark, results, StreamVecSearch.Results).get
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
@@ -273,7 +273,7 @@ class IvfRefitSpec extends AnyFunSuite with SparkFixture {
 
     // The retry completes; the result equals a from-scratch refit.
     IvfRefit.refit(spark, state, root)
-    val newCb = IvfRefit.mStep(MonoidTable.read(spark, state), plantedCb)
+    val newCb = IvfRefit.mStep(MonoidTable.read(spark, state, StreamVecIndex.Stats), plantedCb)
     val want = AnnIvf.assign(plantedCorpus, newCb)
       .select(col("vec_id"), col("cell"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet

@@ -43,7 +43,7 @@ class ModelRefitSpec extends AnyFunSuite with SparkFixture {
 
   test("maintained histogram == the batch histogram (monoid fold)") {
     val state = ModelRefit.ensureMaintained(spark, sfDir)
-    val got = MonoidTable.read(spark, state)
+    val got = MonoidTable.read(spark, state, ModelRefit.Hist)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
       .toMap
@@ -152,7 +152,7 @@ class ModelRefitSpec extends AnyFunSuite with SparkFixture {
 
     StreamGdpr.eraseModelStats(spark, state, cohort, eid = 0L)
 
-    val got = MonoidTable.read(spark, state).collect()
+    val got = MonoidTable.read(spark, state, ModelRefit.Hist).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
       .toMap
     val want = MR.partials(retained).collect()
@@ -163,7 +163,7 @@ class ModelRefitSpec extends AnyFunSuite with SparkFixture {
 
     // Re-delivery no-op on the fence.
     StreamGdpr.eraseModelStats(spark, state, cohort, eid = 0L)
-    assert(MonoidTable.read(spark, state).collect()
+    assert(MonoidTable.read(spark, state, ModelRefit.Hist).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
       .toMap == want, "a re-delivered erasure must change nothing")
 

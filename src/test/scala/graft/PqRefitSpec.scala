@@ -32,7 +32,7 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
   test("mStep from the maintained stats == the batch micro M-step, and " +
       "within 1 micro-unit of the float-path train(iters + 1)") {
     val state = PqRefit.ensureMaintained(spark, sfDir)
-    val got = micro(PqRefit.mStep(MonoidTable.read(spark, state), frozen))
+    val got = micro(PqRefit.mStep(MonoidTable.read(spark, state, PqRefit.Stats), frozen))
 
     // Stats-path == direct-path: the same partials computed in ONE
     // batch over the whole corpus (no streaming) must yield the same
@@ -66,7 +66,7 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
 
     val root = StreamVecIndex.VecStage.stateDir(sfDir, "pqgen")
     val state = PqRefit.ensureMaintained(spark, sfDir)
-    val newBooks = PqRefit.mStep(MonoidTable.read(spark, state), frozen)
+    val newBooks = PqRefit.mStep(MonoidTable.read(spark, state, PqRefit.Stats), frozen)
     assert(micro(PqRefit.Gen.readCodebooks(spark, root)) == micro(newBooks),
       "the committed codebook must be the M-step output")
 
@@ -100,7 +100,7 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
         }.sum
       }.sum
     val state = PqRefit.ensureMaintained(spark, sfDir)
-    val newBooks = PqRefit.mStep(MonoidTable.read(spark, state), frozen)
+    val newBooks = PqRefit.mStep(MonoidTable.read(spark, state, PqRefit.Stats), frozen)
     assert(cost(newBooks) <= cost(frozen) + 1e-6,
       "one more Lloyd round must not increase total quantization cost")
   }
@@ -157,9 +157,9 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
     val state = base + "/stats"
     PqRefit.Gen.bootstrap(spark, plantedCorpus, root, plantedCoarse,
       plantedBooks)
-    MonoidTable.merge(state,
-      PqRefit.partials(plantedCorpus, plantedBooks), 0L,
-      Seq("j", "cell", "lpos"))
+    Snapshot.batch(state, 0L)(MonoidTable.merge(_, PqRefit.Stats,
+      PqRefit.partials(plantedCorpus, plantedBooks),
+      Seq("j", "cell", "lpos")))
     (root, state)
   }
 
@@ -243,7 +243,7 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
       micro(plantedBooks), "readers must still see the old books")
 
     PqRefit.refit(spark, state, root)
-    val newBooks = PqRefit.mStep(MonoidTable.read(spark, state),
+    val newBooks = PqRefit.mStep(MonoidTable.read(spark, state, PqRefit.Stats),
       plantedBooks)
     val want = PqQuantizer.encode(plantedCorpus, newBooks)
       .select(col("vec_id"), col("code"))
@@ -283,7 +283,7 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
     plantedCorpus.join(vCohort, Seq("vec_id"), "left_anti")
 
   private def statsOf(state: String): Set[(Int, Int, Int, Long, Long)] =
-    graft.streaming.MonoidTable.read(spark, state)
+    graft.streaming.MonoidTable.read(spark, state, PqRefit.Stats)
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3),
         r.getLong(4))).toSet
@@ -320,9 +320,9 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
     val (wRoot, wState) = (base + "/gen", base + "/stats")
     PqRefit.Gen.bootstrap(spark, retainedCorpus, wRoot, plantedCoarse,
       plantedBooks)
-    graft.streaming.MonoidTable.merge(wState,
-      PqRefit.partials(retainedCorpus, plantedBooks), 0L,
-      Seq("j", "cell", "lpos"))
+    Snapshot.batch(wState, 0L)(graft.streaming.MonoidTable.merge(_,
+      PqRefit.Stats, PqRefit.partials(retainedCorpus, plantedBooks),
+      Seq("j", "cell", "lpos")))
     assert(statsOf(state) == statsOf(wState),
       "post-erasure PQ statistics must equal the retained-corpus build")
     assert(codesOf(root) == codesOf(wRoot),
@@ -373,9 +373,9 @@ class PqRefitSpec extends AnyFunSuite with SparkFixture {
     // Ground truth: the fold's own partials over the retained corpus.
     val wState = java.nio.file.Files
       .createTempDirectory("graft_pqgdpr_postref").toString + "/stats"
-    graft.streaming.MonoidTable.merge(wState,
-      PqRefit.partials(retainedCorpus, plantedBooks), 0L,
-      Seq("j", "cell", "lpos"))
+    Snapshot.batch(wState, 0L)(graft.streaming.MonoidTable.merge(_,
+      PqRefit.Stats, PqRefit.partials(retainedCorpus, plantedBooks),
+      Seq("j", "cell", "lpos")))
     assert(statsOf(state) == statsOf(wState),
       "post-refit erasure must leave exactly the retained-corpus fold " +
         "statistics under the fold sub-books")

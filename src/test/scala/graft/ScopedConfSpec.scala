@@ -88,7 +88,10 @@ class ScopedConfSpec extends AnyFunSuite with SparkFixture {
         .schema(streaming.StreamingQueries.UpsertStage.schema(spark, staged))
         .option("maxFilesPerTrigger", 1).parquet(staged)
       val buses = streamBuses()
-      streaming.FoldReplay.run(stream, "scope_probe") { (batch: DataFrame, _) =>
+      val root = java.nio.file.Files.createTempDirectory("graft_scope_probe")
+        .toString
+      streaming.FoldReplay.run(stream, "scope_probe", root) {
+          (_, batch: DataFrame, _) =>
         val c = batch.sparkSession.conf
         seen.add(Seq(c.get(pKey), c.get("spark.sql.adaptive.enabled"),
           c.get(bKey)))

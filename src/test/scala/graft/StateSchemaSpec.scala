@@ -46,43 +46,48 @@ class StateSchemaSpec extends AnyFunSuite with SparkFixture {
     rows.toDF("k", "n").select(col("k").as("k", md), col("n"))
 
   private def sums(state: String): Map[String, Long] =
-    MonoidTable.read(spark, state).collect()
+    MonoidTable.read(spark, state, "t").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def merge(state: String, df: DataFrame, id: Long): Unit =
+    Snapshot.batch(state, id)(MonoidTable.merge(_, "t", df, Seq("k")))
 
   test("MonoidTable: merge and GDPR publish record the schema " +
       "inference reads, and publish carries the fence forward") {
     val state = tmp("monoid")
-    MonoidTable.merge(state, monoidBatch("a" -> 1L, "b" -> 2L), 0L,
-      Seq("k"))
-    assertBound(state)(MonoidTable.read(spark, state))
-    MonoidTable.merge(state, monoidBatch("a" -> 10L), 1L, Seq("k"))
-    val merged = assertBound(state)(MonoidTable.read(spark, state))
+    merge(state, monoidBatch("a" -> 1L, "b" -> 2L), 0L)
+    assertBound(state)(MonoidTable.read(spark, state, "t"))
+    merge(state, monoidBatch("a" -> 10L), 1L)
+    val merged = assertBound(state)(MonoidTable.read(spark, state, "t"))
     assert(merged.schema("k").metadata == md, "key metadata survives")
-    MonoidTable.publish(state,
-      MonoidTable.read(spark, state).where(col("k") =!= "b"), Set("gdpr0"))
-    assertBound(state)(MonoidTable.read(spark, state))
+    Snapshot.update(state, Some("gdpr0"))(t => MonoidTable.publish(t, "t",
+      MonoidTable.read(spark, t, "t").where(col("k") =!= "b")))
+    assertBound(state)(MonoidTable.read(spark, state, "t"))
     val p = Snapshot.current(state).get
-    assert(p.bid.contains(1L) && p.manifest.contains("gdpr0"))
+    assert(p.bid.contains(1L) && p.fences.contains("gdpr0"))
     assert(sums(state) == Map("a" -> 11L))
-    assert(!MonoidTable.read(spark, state).columns.contains("_bid"))
+    assert(!MonoidTable.read(spark, state, "t").columns.contains("_bid"))
   }
 
   test("AppendLog: append, compact and rewrite record the schema " +
       "inference reads, for every reader") {
     val log = tmp("alog")
-    (0 to 2).foreach(i => AppendLog.append(log,
-      Seq((i.toLong, s"v$i")).toDF("id", "v")
-        .select(col("id").as("id", md), col("v")), i.toLong))
+    (0 to 2).foreach(i => Snapshot.batch(log, i.toLong)(AppendLog.append(_,
+      "t", Seq((i.toLong, s"v$i")).toDF("id", "v")
+        .select(col("id").as("id", md), col("v")), i.toLong)))
     def before(id: Long)(m: Snapshot.Manifest) = m.collect {
-      case (k, v) if k.drop(3).toLong < id => v }
-    assertBound(log)(AppendLog.read(spark, log).get)
-    assertBound(log, _.get("seg1"))(AppendLog.segment(spark, log, 1L).get)
-    assertBound(log, before(2L))(AppendLog.readBefore(spark, log, 2L).get)
-    AppendLog.compact(spark, log)
-    assertBound(log)(AppendLog.read(spark, log).get)
-    AppendLog.rewrite(spark, log, _.where(col("id") =!= 1L), Set("gdpr0"))
-    val rewritten = assertBound(log, _.filter(_._1.startsWith("seg")).values)(
-      AppendLog.read(spark, log).get)
+      case (k, v) if k.drop(5).toLong < id => v }
+    assertBound(log)(AppendLog.read(spark, log, "t").get)
+    val v = Snapshot.view(log).get
+    assertBound(log, _.get("t/seg1"))(
+      AppendLog.segment(spark, v, "t", 1L).get)
+    assertBound(log, before(2L))(AppendLog.readBefore(spark, v, "t", 2L).get)
+    Snapshot.update(log, None)(AppendLog.compact(spark, _, "t"))
+    assertBound(log)(AppendLog.read(spark, log, "t").get)
+    Snapshot.update(log, Some("gdpr0"))(
+      AppendLog.rewrite(spark, _, "t", _.where(col("id") =!= 1L)))
+    val rewritten = assertBound(log, _.filter(_._1.startsWith("t/seg")).values)(
+      AppendLog.read(spark, log, "t").get)
     assert(rewritten.schema("id").metadata == md)
     assert(rewritten.collect().map(_.getLong(0)).toSet == Set(0L, 2L))
   }
@@ -93,12 +98,12 @@ class StateSchemaSpec extends AnyFunSuite with SparkFixture {
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def batch(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]) =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-    UpsertState.merge(state,
-      batch((1L to 20L).map(u => (u, ts, u, "a", 1.0))), 0L)
-    UpsertState.merge(state,
-      batch((15L to 30L).map(u => (100 + u, ts, u, "b", 2.0))), 1L)
+    Snapshot.batch(state, 0L)(UpsertState.merge(_, "t",
+      batch((1L to 20L).map(u => (u, ts, u, "a", 1.0)))))
+    Snapshot.batch(state, 1L)(UpsertState.merge(_, "t",
+      batch((15L to 30L).map(u => (100 + u, ts, u, "b", 2.0)))))
     assert(Snapshot.currentManifest(state).get.size > 1, "several buckets")
-    val bound = assertBound(state)(UpsertState.read(spark, state))
+    val bound = assertBound(state)(UpsertState.read(spark, state, "t"))
     assert(!bound.columns.contains("_bkt"))
     assert(bound.count() == 30L)
   }
@@ -120,25 +125,25 @@ class StateSchemaSpec extends AnyFunSuite with SparkFixture {
 
   test("a root copied with copyRecursively reads bound") {
     val state = tmp("copy_src")
-    MonoidTable.merge(state, monoidBatch("a" -> 1L), 0L, Seq("k"))
-    MonoidTable.merge(state, monoidBatch("a" -> 2L, "c" -> 5L), 1L, Seq("k"))
+    merge(state, monoidBatch("a" -> 1L), 0L)
+    merge(state, monoidBatch("a" -> 2L, "c" -> 5L), 1L)
     val copy = state.stripSuffix("/t") + "/copy"
     Snapshot.copyRecursively(state, copy)
-    assertBound(copy)(MonoidTable.read(spark, copy))
+    assertBound(copy)(MonoidTable.read(spark, copy, "t"))
     assert(sums(copy) == Map("a" -> 3L, "c" -> 5L))
   }
 
   test("a re-delivered batch id no-ops on the manifest fence, with no " +
       "job") {
     val state = tmp("fence")
-    MonoidTable.merge(state, monoidBatch("a" -> 1L), 0L, Seq("k"))
-    MonoidTable.merge(state, monoidBatch("a" -> 10L), 1L, Seq("k"))
-    MonoidTable.merge(state, monoidBatch("a" -> 100L), 2L, Seq("k"))
+    merge(state, monoidBatch("a" -> 1L), 0L)
+    merge(state, monoidBatch("a" -> 10L), 1L)
+    merge(state, monoidBatch("a" -> 100L), 2L)
     val committed = Snapshot.current(state).get
     assert(committed.bid.contains(2L))
     val jobs = JobLog.during(spark) {
-      MonoidTable.merge(state, monoidBatch("a" -> 100L), 2L, Seq("k"))
-      MonoidTable.merge(state, monoidBatch("a" -> 10L), 1L, Seq("k"))
+      merge(state, monoidBatch("a" -> 100L), 2L)
+      merge(state, monoidBatch("a" -> 10L), 1L)
     }
     assert(jobs.isEmpty, s"a fenced re-delivery started jobs: $jobs")
     assert(Snapshot.current(state).get == committed)
@@ -148,7 +153,7 @@ class StateSchemaSpec extends AnyFunSuite with SparkFixture {
   test("a commit that maps a version with no recorded schema is refused") {
     val root = tmp("refuse")
     intercept[IllegalArgumentException](
-      Snapshot.commit(root, Map("table" -> "v0")))
+      Snapshot.update(root, None)(_.put("table" -> "v0")))
     assert(Snapshot.currentManifest(root).isEmpty)
   }
 

@@ -19,29 +19,30 @@ class StateTablesFsSpec extends AnyFunSuite with SparkFixture {
     "file:" + java.nio.file.Files
       .createTempDirectory(s"graft_fs_$name").toString + "/state"
 
+  /** One transaction writing `df` as the root's `table` version;
+    * returns the version directory. */
+  private def publish(root: String, df: org.apache.spark.sql.DataFrame)
+      : String = {
+    var v = ""
+    Snapshot.update(root, None) { t => v = t.write(df); t.put("table" -> v) }
+    v
+  }
+
   test("Snapshot commit / manifest / GC round-trip under a file: URI") {
     val root = freshRoot("snap")
     assert(Snapshot.currentManifest(root).isEmpty)
-    val v0 = Snapshot.nextVersion(root)
-    assert(v0 == "v0")
-    // create the version dir content through Spark (also a file: write)
+    assert(Snapshot.nextVersion(root) == "v0")
+    // the version dir content is written through Spark (a file: write)
     import spark.implicits._
-    val df0 = Seq((1, "a")).toDF("k", "v")
-    df0.write.parquet(Snapshot.versionPath(root, v0))
-    Snapshot.commit(root, Map("table" -> v0), Map(v0 -> df0.schema))
+    val v0 = publish(root, Seq((1, "a")).toDF("k", "v"))
+    assert(v0 == "v0")
     assert(Snapshot.currentManifest(root).contains(Map("table" -> v0)))
 
-    val v1 = Snapshot.nextVersion(root)
+    val v1 = publish(root, Seq((2, "b")).toDF("k", "v"))
     assert(v1 == "v1")
-    val df1 = Seq((2, "b")).toDF("k", "v")
-    df1.write.parquet(Snapshot.versionPath(root, v1))
-    Snapshot.commit(root, Map("table" -> v1), Map(v1 -> df1.schema))
     assert(Snapshot.currentManifest(root).contains(Map("table" -> v1)))
     // retention window: v0 survives one commit, is swept by the next
-    val v2 = Snapshot.nextVersion(root)
-    val df2 = Seq((3, "c")).toDF("k", "v")
-    df2.write.parquet(Snapshot.versionPath(root, v2))
-    Snapshot.commit(root, Map("table" -> v2), Map(v2 -> df2.schema))
+    publish(root, Seq((3, "c")).toDF("k", "v"))
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "v0")),
@@ -52,12 +53,13 @@ class StateTablesFsSpec extends AnyFunSuite with SparkFixture {
   test("MonoidTable merge / fence / read under a file: URI") {
     import spark.implicits._
     val state = freshRoot("monoid")
-    def batch(rows: (String, Long)*) = rows.toDF("k", "n")
-    MonoidTable.merge(state, batch("a" -> 1L, "b" -> 2L), 0L, Seq("k"))
-    MonoidTable.merge(state, batch("a" -> 10L), 1L, Seq("k"))
+    def merge(id: Long, rows: (String, Long)*) = Snapshot.batch(state, id)(
+      MonoidTable.merge(_, "t", rows.toDF("k", "n"), Seq("k")))
+    merge(0L, "a" -> 1L, "b" -> 2L)
+    merge(1L, "a" -> 10L)
     // re-delivered batch 1 must no-op (the fence)
-    MonoidTable.merge(state, batch("a" -> 10L), 1L, Seq("k"))
-    val got = MonoidTable.read(spark, state)
+    merge(1L, "a" -> 10L)
+    val got = MonoidTable.read(spark, state, "t")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("a" -> 11L, "b" -> 2L))
   }
@@ -66,17 +68,19 @@ class StateTablesFsSpec extends AnyFunSuite with SparkFixture {
       "file: URI") {
     import spark.implicits._
     val log = freshRoot("appendlog")
-    AppendLog.append(log, Seq((1L, "x")).toDF("doc_id", "p"), 0L)
-    AppendLog.append(log, Seq((2L, "y")).toDF("doc_id", "p"), 1L)
-    // re-delivery no-ops on the manifest key
-    AppendLog.append(log, Seq((9L, "dup")).toDF("doc_id", "p"), 1L)
-    assert(AppendLog.read(spark, log).get.count() == 2)
-    assert(AppendLog.readBefore(spark, log, 1L).get
+    def append(id: Long, row: (Long, String)) = Snapshot.batch(log, id)(
+      AppendLog.append(_, "t", Seq(row).toDF("doc_id", "p"), id))
+    append(0L, (1L, "x"))
+    append(1L, (2L, "y"))
+    // re-delivery no-ops on the batch fence
+    append(1L, (9L, "dup"))
+    assert(AppendLog.read(spark, log, "t").get.count() == 2)
+    assert(AppendLog.readBefore(spark, Snapshot.view(log).get, "t", 1L).get
       .select("doc_id").as[Long].collect().toSet == Set(1L))
-    AppendLog.rewrite(spark, log,
-      all => all.where(col("doc_id") =!= 1L), Set("gdpr0"))
-    assert(AppendLog.fenced(log, "gdpr0"))
-    assert(AppendLog.read(spark, log).get
+    Snapshot.update(log, Some("gdpr0"))(AppendLog.rewrite(spark, _, "t",
+      all => all.where(col("doc_id") =!= 1L)))
+    assert(Snapshot.current(log).get.fences == Set("gdpr0"))
+    assert(AppendLog.read(spark, log, "t").get
       .select("doc_id").as[Long].collect().toSet == Set(2L))
   }
 
@@ -86,10 +90,11 @@ class StateTablesFsSpec extends AnyFunSuite with SparkFixture {
     def ev(rows: (Long, java.sql.Timestamp, Long, String)*) =
       rows.toDF("user_id", "ts", "event_id", "v")
     def t(ms: Long) = new java.sql.Timestamp(ms)
-    UpsertState.merge(state, ev((1L, t(10), 1L, "old"),
-      (2L, t(10), 2L, "two")), 0L)
-    UpsertState.merge(state, ev((1L, t(20), 3L, "new")), 1L)
-    val got = UpsertState.read(spark, state)
+    Snapshot.batch(state, 0L)(UpsertState.merge(_, "t",
+      ev((1L, t(10), 1L, "old"), (2L, t(10), 2L, "two"))))
+    Snapshot.batch(state, 1L)(UpsertState.merge(_, "t",
+      ev((1L, t(20), 3L, "new"))))
+    val got = UpsertState.read(spark, state, "t")
       .select("user_id", "v")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "new", 2L -> "two"))
@@ -98,9 +103,7 @@ class StateTablesFsSpec extends AnyFunSuite with SparkFixture {
   test("deleteRecursively and copyRecursively resolve the file: scheme") {
     import spark.implicits._
     val a = freshRoot("copy_src")
-    val df = Seq((1, "a")).toDF("k", "v")
-    df.write.parquet(a + "/v0")
-    Snapshot.commit(a, Map("table" -> "v0"), Map("v0" -> df.schema))
+    publish(a, Seq((1, "a")).toDF("k", "v"))
     val b = a.stripSuffix("state") + "clone"
     Snapshot.copyRecursively(a, b)
     assert(Snapshot.currentManifest(b).contains(Map("table" -> "v0")))

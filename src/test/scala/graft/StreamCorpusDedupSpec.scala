@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DedupQueries
-import graft.streaming.StreamCorpusDedup
+import graft.streaming.{Snapshot, StreamCorpusDedup}
 
 /** The incremental corpus-dedup contract: the maintained verdict table
   * equals the batch MinHash row's flagged set, is invariant to how the
@@ -46,9 +46,9 @@ class StreamCorpusDedupSpec extends AnyFunSuite with SparkFixture {
   private def runBatches(batches: Seq[DataFrame]): Map[Long, Long] = {
     val root = Files.createTempDirectory("graft_cdedup").toString
     batches.zipWithIndex.foreach { case (b, i) =>
-      StreamCorpusDedup.foldBatch(s"$root/index", s"$root/flags", b, i.toLong)
+      Snapshot.batch(root, i.toLong)(StreamCorpusDedup.foldBatch(_, b, i.toLong))
     }
-    asMap(StreamCorpusDedup.verdicts(spark, s"$root/flags"))
+    asMap(StreamCorpusDedup.verdicts(spark, root))
   }
 
   test("chunking and ORDER invariance: ascending, descending, and " +
@@ -83,19 +83,20 @@ class StreamCorpusDedupSpec extends AnyFunSuite with SparkFixture {
     val batches = Seq(docs.where(col("doc_id") =!= a),
       docs.where(col("doc_id") === a))
     batches.zipWithIndex.foreach { case (batch, i) =>
-      val bands = StreamCorpusDedup.bandRows(batch)
-      val prior = if (i == 0) None
-        else graft.streaming.AppendLog.read(spark, s"$root/index")
-      // One-directional: keep only the batch's own docs' rows —
-      // old-doc re-flags dropped.
-      val oneWay = StreamCorpusDedup.flagPartials(bands, prior)
-        .join(bands.select(col("doc_id")).distinct(), Seq("doc_id"),
-          "left_semi")
-      graft.streaming.MonoidTable.merge(s"$root/flags", oneWay, i.toLong,
-        Seq("doc_id"))
-      graft.streaming.AppendLog.append(s"$root/index", bands, i.toLong)
+      Snapshot.batch(root, i.toLong) { t =>
+        val bands = StreamCorpusDedup.bandRows(batch)
+        val prior = if (i == 0) None
+          else graft.streaming.AppendLog.read(spark, t, "index")
+        // One-directional: keep only the batch's own docs' rows —
+        // old-doc re-flags dropped.
+        val oneWay = StreamCorpusDedup.flagPartials(bands, prior)
+          .join(bands.select(col("doc_id")).distinct(), Seq("doc_id"),
+            "left_semi")
+        graft.streaming.MonoidTable.merge(t, "flags", oneWay, Seq("doc_id"))
+        graft.streaming.AppendLog.append(t, "index", bands, i.toLong)
+      }
     }
-    val got = asMap(StreamCorpusDedup.verdicts(spark, s"$root/flags"))
+    val got = asMap(StreamCorpusDedup.verdicts(spark, root))
       .filter(_._2 == 1L).keySet
     assert(!got.contains(b),
       s"the crippled one-directional fold must miss doc $b — if it " +
@@ -117,8 +118,7 @@ class StreamCorpusDedupSpec extends AnyFunSuite with SparkFixture {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          StreamCorpusDedup.foldBatch(s"$root/index", s"$root/flags",
-            batch, id)
+          Snapshot.batch(root, id)(StreamCorpusDedup.foldBatch(_, batch, id))
           if (id == 2L && crashed.compareAndSet(false, true))
             throw new RuntimeException("injected crash after fold")
         }
@@ -130,12 +130,12 @@ class StreamCorpusDedupSpec extends AnyFunSuite with SparkFixture {
     catch { case _: StreamingQueryException => () }
     assert(crashed.get(), "the injection must have fired")
     runOnce()
-    val got = asMap(StreamCorpusDedup.verdicts(spark, s"$root/flags"))
+    val got = asMap(StreamCorpusDedup.verdicts(spark, root))
     assert(got.filter(_._2 == 1L).keySet == batchFlagged,
       "verdicts must equal the batch truth despite the crash")
     // seen must read exactly 1 per doc — a double-merged batch would
     // show seen = 2 for its docs even where flags happen to agree.
-    val seen = graft.streaming.MonoidTable.read(spark, s"$root/flags")
+    val seen = graft.streaming.MonoidTable.read(spark, root, "flags")
       .agg(max(col("seen"))).head().getLong(0)
     assert(seen == 1L, s"re-delivery double-counted seen=$seen")
   }

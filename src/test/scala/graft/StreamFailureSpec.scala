@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{MonoidTable, UpsertState}
+import graft.streaming.{MonoidTable, Snapshot, UpsertState}
 
 /** Failure injection for the foreachBatch state-table rows — the
   * at-least-once window StreamRecoverySpec cannot reach: the driver
@@ -25,6 +25,13 @@ import graft.streaming.{MonoidTable, UpsertState}
   * churn-proportional rewrite (untouched bucket files survive a merge
   * untouched — the 100 TB claim as a file-identity assertion). */
 class StreamFailureSpec extends AnyFunSuite with SparkFixture {
+
+  /** One micro-batch of each discipline, on table `t` of `state`. */
+  private def monoid(state: String, bp: DataFrame, id: Long): Unit =
+    Snapshot.batch(state, id)(MonoidTable.merge(_, "t", bp, Seq("day")))
+
+  private def upsert(state: String, batch: DataFrame, id: Long): Unit =
+    Snapshot.batch(state, id)(UpsertState.merge(_, "t", batch))
 
   private def partials(df: DataFrame): DataFrame =
     df.groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
@@ -88,8 +95,7 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
       "checkpoint restart)") {
     val inDir = stageChunks()
     val got = asMap(MonoidTable.read(spark,
-      runWithCrash(inDir, MonoidTable.merge(_, _, _, Seq("day")),
-        failAt = 2L)))
+      runWithCrash(inDir, monoid, failAt = 2L), "t"))
     val want = asMap(partials(Tables.events(spark, sfDir)))
     assert(got == want,
       "maintained table must equal the batch recompute despite the crash")
@@ -124,24 +130,24 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
     def bp(day: String, n: Long): DataFrame =
       Seq((java.sql.Date.valueOf(day), n, n * 100))
         .toDF("day", "n", "sc")
-    MonoidTable.merge(state, bp("2024-01-01", 5), 0L, Seq("day"))
-    MonoidTable.merge(state, bp("2024-01-01", 3), 1L, Seq("day"))
-    val after1 = asMap(MonoidTable.read(spark, state))
+    monoid(state, bp("2024-01-01", 5), 0L)
+    monoid(state, bp("2024-01-01", 3), 1L)
+    val after1 = asMap(MonoidTable.read(spark, state, "t"))
     // Re-delivery of the committed id: a no-op (double-merge fenced).
-    MonoidTable.merge(state, bp("2024-01-01", 3), 1L, Seq("day"))
-    assert(asMap(MonoidTable.read(spark, state)) == after1)
+    monoid(state, bp("2024-01-01", 3), 1L)
+    assert(asMap(MonoidTable.read(spark, state, "t")) == after1)
     assert(after1 == Map(java.sql.Date.valueOf("2024-01-01") -> (8L, 800L)))
     // A genuinely new id still merges; its own re-delivery no-ops too.
-    MonoidTable.merge(state, bp("2024-01-01", 2), 2L, Seq("day"))
-    MonoidTable.merge(state, bp("2024-01-01", 2), 2L, Seq("day"))
-    assert(asMap(MonoidTable.read(spark, state))
+    monoid(state, bp("2024-01-01", 2), 2L)
+    monoid(state, bp("2024-01-01", 2), 2L)
+    assert(asMap(MonoidTable.read(spark, state, "t"))
       == Map(java.sql.Date.valueOf("2024-01-01") -> (10L, 1000L)))
     // Batch 0 RESETS by design — a fresh invocation of the query row
     // must be self-contained over pre-existing state (in the engine a
     // re-delivered batch 0 carries identical content, so the reset is
     // idempotent there).
-    MonoidTable.merge(state, bp("2024-01-01", 7), 0L, Seq("day"))
-    assert(asMap(MonoidTable.read(spark, state))
+    monoid(state, bp("2024-01-01", 7), 0L)
+    assert(asMap(MonoidTable.read(spark, state, "t"))
       == Map(java.sql.Date.valueOf("2024-01-01") -> (7L, 700L)))
   }
 
@@ -202,16 +208,17 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
     // Batch 0: enough distinct users to populate every bucket.
     val b0 = (1L to 64L).map(u => (u * 10, ts0, u, "a", 1.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    UpsertState.merge(state, b0, 0L)
+    upsert(state, b0, 0L)
     val allBkts = (0 until UpsertState.buckets).toVector
-    assert(allBkts.forall(b => UpsertState.bucketDir(state, b).isDefined),
+    assert(allBkts.forall(b =>
+      UpsertState.bucketDir(state, "t", b).isDefined),
       "batch 0 over 64 users must populate every bucket")
 
     // File identity THROUGH the manifest: an untouched bucket must keep
     // not just equal content but the exact same committed data
     // directory and files (name/size/mtime) — merge cost ∝ churn.
     def listing(b: Int): (String, Set[(String, Long, Long)]) = {
-      val dir = UpsertState.bucketDir(state, b).get
+      val dir = UpsertState.bucketDir(state, "t", b).get
       dir -> new java.io.File(dir).listFiles()
         .filter(_.getName.endsWith(".parquet"))
         .map(f => (f.getName, f.length(), f.lastModified())).toSet
@@ -226,7 +233,7 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
       .select("_bkt").head().getInt(0)
     val b1 = Seq((9999L, ts1, u, "b", 2.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    UpsertState.merge(state, b1, 1L)
+    upsert(state, b1, 1L)
 
     allBkts.filterNot(_ == touchedBkt).foreach { b =>
       assert(listing(b) == before(b),
@@ -237,7 +244,7 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
       "the touched bucket must point at a new version")
 
     // And the snapshot itself is the correct newest-wins collapse.
-    val snap = UpsertState.read(spark, state)
+    val snap = UpsertState.read(spark, state, "t")
       .select("user_id", "event_id", "event_type")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
       .toSet
@@ -266,7 +273,7 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          UpsertState.merge(state, batch, id)
+          upsert(state, batch, id)
           if (id == 2L && crashed.compareAndSet(false, true))
             throw new RuntimeException("injected crash after merge")
         }
@@ -278,7 +285,7 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
     catch { case _: StreamingQueryException => () }
     assert(crashed.get(), "the injection must have fired")
     runOnce()
-    val got = UpsertState.read(spark, state)
+    val got = UpsertState.read(spark, state, "t")
       .select("user_id", "event_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = UpsertState.latest(Tables.events(spark, sfDir))
@@ -299,9 +306,9 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def batch(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]) =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-    UpsertState.merge(state, batch(Seq.empty), 0L)
-    UpsertState.merge(state, batch(Seq((1L, ts, 7L, "a", 1.0))), 1L)
-    val snap = UpsertState.read(spark, state)
+    upsert(state, batch(Seq.empty), 0L)
+    upsert(state, batch(Seq((1L, ts, 7L, "a", 1.0))), 1L)
+    val snap = UpsertState.read(spark, state, "t")
       .select("user_id", "event_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(snap == Set((7L, 1L)))
@@ -325,20 +332,20 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
     def bp(n: Long): DataFrame =
       Seq((java.sql.Date.valueOf("2024-01-01"), n, n * 100))
         .toDF("day", "n", "sc")
-    MonoidTable.merge(state, bp(5), 0L, Seq("day"))
-    val committed = asMap(MonoidTable.read(spark, state))
+    monoid(state, bp(5), 0L)
+    val committed = asMap(MonoidTable.read(spark, state, "t"))
 
     // (a) torn: garbage bytes where a parquet file was being written.
     val torn = java.nio.file.Paths.get(state, "v1")
     Files.createDirectories(torn)
     Files.write(torn.resolve("part-00000.parquet"),
       Array[Byte](0x50, 0x41, 0x52, 0x00, 0x13, 0x37))
-    assert(asMap(MonoidTable.read(spark, state)) == committed,
+    assert(asMap(MonoidTable.read(spark, state, "t")) == committed,
       "a torn uncommitted write must be invisible to readers")
 
     // (b) complete but unswapped: a real parquet dir, pointer untouched.
     bp(99).write.mode("overwrite").parquet(s"$state/v2")
-    assert(asMap(MonoidTable.read(spark, state)) == committed,
+    assert(asMap(MonoidTable.read(spark, state, "t")) == committed,
       "an unswapped complete write must be invisible to readers")
 
     // The next merge writes PAST both orphans (monotonic version
@@ -347,15 +354,15 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
     // exactly one more commit — the retention window that keeps a
     // racing reader's resolved paths alive — and is swept by the one
     // after.
-    MonoidTable.merge(state, bp(3), 1L, Seq("day"))
-    assert(asMap(MonoidTable.read(spark, state))
+    monoid(state, bp(3), 1L)
+    assert(asMap(MonoidTable.read(spark, state, "t"))
       == Map(java.sql.Date.valueOf("2024-01-01") -> (8L, 800L)))
     assert(!Files.exists(torn) && !Files.exists(
       java.nio.file.Paths.get(state, "v2")),
       "the successful commit must GC the orphaned version dirs")
     assert(Files.exists(java.nio.file.Paths.get(state, "v0")),
       "the superseded version must survive ONE commit (reader grace)")
-    MonoidTable.merge(state, bp(1), 2L, Seq("day"))
+    monoid(state, bp(1), 2L)
     assert(!Files.exists(java.nio.file.Paths.get(state, "v0")),
       "the commit after next must sweep the superseded version")
   }
@@ -368,17 +375,17 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
     def bp(n: Long): org.apache.spark.sql.DataFrame =
       Seq((java.sql.Date.valueOf("2024-01-01"), n, n * 100))
         .toDF("day", "n", "sc")
-    MonoidTable.merge(state, bp(5), 0L, Seq("day"))
+    monoid(state, bp(5), 0L)
     // A dashboard reader resolves the current version's paths…
-    val reader = MonoidTable.read(spark, state)
+    val reader = MonoidTable.read(spark, state, "t")
     // …the owning stream merges the next batch (commit + GC)…
-    MonoidTable.merge(state, bp(3), 1L, Seq("day"))
+    monoid(state, bp(3), 1L)
     // …and the reader's already-built plan must still evaluate (it
     // reads the RETAINED superseded version — a consistent snapshot,
     // not a torn mix and not a crash).
     assert(asMap(reader)
       == Map(java.sql.Date.valueOf("2024-01-01") -> (5L, 500L)))
-    assert(asMap(MonoidTable.read(spark, state))
+    assert(asMap(MonoidTable.read(spark, state, "t"))
       == Map(java.sql.Date.valueOf("2024-01-01") -> (8L, 800L)))
   }
 
@@ -391,9 +398,9 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
     val ts1 = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
     def batch(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]) =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-    UpsertState.merge(state, batch((1L to 16L).map(u =>
+    upsert(state, batch((1L to 16L).map(u =>
       (u * 10, ts0, u, "a", 1.0))), 0L)
-    val committed = UpsertState.read(spark, state)
+    val committed = UpsertState.read(spark, state, "t")
       .select("user_id", "event_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -402,16 +409,16 @@ class StreamFailureSpec extends AnyFunSuite with SparkFixture {
     Files.createDirectories(torn)
     Files.write(torn.resolve("part-00000.parquet"),
       Array[Byte](0x50, 0x41, 0x52))
-    assert(UpsertState.read(spark, state)
+    assert(UpsertState.read(spark, state, "t")
       .select("user_id", "event_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == committed,
       "a torn bucket version must be invisible (manifest never saw it)")
 
     // The retried merge publishes past the orphan; ONE pointer swap
     // flips every touched bucket together.
-    UpsertState.merge(state,
+    upsert(state,
       batch(Seq((9999L, ts1, 7L, "b", 2.0), (9998L, ts1, 8L, "b", 2.0))), 1L)
-    val after = UpsertState.read(spark, state)
+    val after = UpsertState.read(spark, state, "t")
       .select("user_id", "event_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(after == committed -- Set((7L, 70L), (8L, 80L))

@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{AppendLog, IvfRefit, MonoidTable, Snapshot, StreamCorpusDedup, StreamVecIndex,
-  StreamGdpr, StreamIngest}
+import graft.streaming.{AppendLog, IvfRefit, MonoidTable, Snapshot,
+  StreamCorpusDedup, StreamVecIndex, StreamGdpr, StreamIngest}
 
 /** The streaming-GDPR contract: erasing doc_ids through the maintained
   * band index / flag monoid / funnel leaves EXACTLY the state a
@@ -25,25 +25,24 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
     .collect().map(_.getLong(0)).toSet
 
   /** Fold `corpus` through the exact parent-row code path in `nb`
-    * modulo-batches; returns (indexRoot, flagsRoot). */
-  private def buildDedupState(corpus: DataFrame, nb: Int = 3)
-      : (String, String) = {
+    * modulo-batches; returns the root. */
+  private def buildDedupState(corpus: DataFrame, nb: Int = 3): String = {
     val root = Files.createTempDirectory("graft_gdpr").toString
     (0 until nb).foreach { i =>
-      StreamCorpusDedup.foldBatch(s"$root/index", s"$root/flags",
-        corpus.where(pmod(col("doc_id"), lit(nb)) === i), i.toLong)
+      Snapshot.batch(root, i.toLong)(StreamCorpusDedup.foldBatch(_,
+        corpus.where(pmod(col("doc_id"), lit(nb)) === i), i.toLong))
     }
-    (s"$root/index", s"$root/flags")
+    root
   }
 
-  private def flagMap(flags: String): Map[Long, (Long, Long)] =
-    MonoidTable.read(spark, flags)
+  private def flagMap(root: String): Map[Long, (Long, Long)] =
+    MonoidTable.read(spark, root, StreamCorpusDedup.Flags)
       .select(col("doc_id"), col("seen"), col("n_coll"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
 
-  private def bandSet(index: String): Map[(Long, Int, Long), Long] =
-    AppendLog.read(spark, index).get
+  private def bandSet(root: String): Map[(Long, Int, Long), Long] =
+    AppendLog.read(spark, root, StreamCorpusDedup.Index).get
       .select(col("doc_id"), col("band"), col("band_key"))
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
@@ -56,34 +55,32 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val e = eraseIds
     assert(e.nonEmpty, "the cohort must be non-empty")
-    val (rIndex, rFlags) = buildDedupState(
+    val rRoot = buildDedupState(
       docs.where(!col("doc_id").isin(e.toSeq: _*)))
-    val want = StreamCorpusDedup.verdicts(spark, rFlags)
+    val want = StreamCorpusDedup.verdicts(spark, rRoot)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want,
       "post-erasure verdicts must equal the rebuild without the cohort")
 
-    val index = StreamCorpusDedup.DocStage.stateDir(sfDir, "gdpr_index")
-    val flags = StreamCorpusDedup.DocStage.stateDir(sfDir, "gdpr_flags")
-    assert(flagMap(flags) == flagMap(rFlags),
+    val root = StreamCorpusDedup.DocStage.stateDir(sfDir, "gdpr")
+    assert(flagMap(root) == flagMap(rRoot),
       "flag table (incl. exact n_coll refunds) must equal the rebuild")
-    assert(bandSet(index) == bandSet(rIndex),
+    assert(bandSet(root) == bandSet(rRoot),
       "band index must equal the rebuild's band rows exactly")
-    // Fence tombstones: every pre-erasure seg key survives, so a
-    // re-delivered pre-erasure batch still no-ops.
-    val keys = Snapshot.currentManifest(index).get.keySet
-    assert(Seq(0, 1, 2, 3).forall(i => keys(s"seg$i")),
+    // Every pre-erasure seg key survives, and the batch fence with it,
+    // so a re-delivered pre-erasure batch still no-ops.
+    val p = Snapshot.current(root).get
+    assert(Seq(0, 1, 2, 3).forall(i => p.manifest.contains(s"index/seg$i")),
       "seg fence tombstones must survive the erasure rewrite")
-    assert(keys("gdpr0"), "the erasure fence must be committed")
+    assert(p.bid.contains(3L), "the batch fence must survive the erasure")
+    assert(p.fences("gdpr0"), "the erasure fence must be committed")
   }
 
   test("physical disappearance: no live version directory retains an " +
       "erased doc's rows after the erasure commit") {
     Catalog.byName("q_stream_gdpr").build(spark, sfDir).count()
     val e = eraseIds
-    val index = StreamCorpusDedup.DocStage.stateDir(sfDir, "gdpr_index")
-    val flags = StreamCorpusDedup.DocStage.stateDir(sfDir, "gdpr_flags")
-    Seq(index, flags).foreach { root =>
+    Seq(StreamCorpusDedup.DocStage.stateDir(sfDir, "gdpr")).foreach { root =>
       val liveDirs = Snapshot.currentManifest(root).get.values
         .map(_.split('/').head).toSet
       liveDirs.foreach { v =>
@@ -98,81 +95,79 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
 
   test("re-delivered erasure no-ops on every table; a NEW erasure id " +
       "still applies") {
-    val (index, flags) = buildDedupState(docs)
+    val root = buildDedupState(docs)
     val e1 = docs.where(pmod(col("doc_id"), lit(11)) === 5)
-    StreamGdpr.erase(spark, index, flags, e1, eid = 1L)
-    val fAfter = flagMap(flags)
-    val bAfter = bandSet(index)
-    StreamGdpr.erase(spark, index, flags, e1, eid = 1L) // re-delivery
-    assert(flagMap(flags) == fAfter && bandSet(index) == bAfter,
+    StreamGdpr.erase(spark, root, e1, eid = 1L)
+    val fAfter = flagMap(root)
+    val bAfter = bandSet(root)
+    val pAfter = Snapshot.current(root)
+    StreamGdpr.erase(spark, root, e1, eid = 1L) // re-delivery
+    assert(flagMap(root) == fAfter && bandSet(root) == bAfter,
       "a re-delivered erasure must change nothing")
+    assert(Snapshot.current(root) == pAfter,
+      "a re-delivered erasure must not commit")
     val e2 = docs.where(pmod(col("doc_id"), lit(11)) === 6)
-    StreamGdpr.erase(spark, index, flags, e2, eid = 2L)
+    StreamGdpr.erase(spark, root, e2, eid = 2L)
     val both = (e1.select(col("doc_id")).collect() ++
       e2.select(col("doc_id")).collect()).map(_.getLong(0)).toSet
-    val (rIndex, rFlags) = buildDedupState(
+    val rRoot = buildDedupState(
       docs.where(!col("doc_id").isin(both.toSeq: _*)))
-    assert(flagMap(flags) == flagMap(rFlags) &&
-      bandSet(index) == bandSet(rIndex),
+    assert(flagMap(root) == flagMap(rRoot) &&
+      bandSet(root) == bandSet(rRoot),
       "sequential erasures must compose to the rebuild without both " +
         "cohorts")
   }
 
-  test("crash between the flags commit and the index rewrite: the " +
-      "retry re-enters at the unfenced step and converges") {
-    val (index, flags) = buildDedupState(docs)
+  test("crash in the erasure's one commit: the pointer stays " +
+      "pre-erasure and the retry converges") {
+    val root = buildDedupState(docs)
     val e = docs.where(pmod(col("doc_id"), lit(13)) === 4)
+    val before = Snapshot.current(root)
     val ex = intercept[IllegalStateException] {
-      Snapshot.crashAt(index, Snapshot.BeforePointer) {
-        StreamGdpr.erase(spark, index, flags, e, eid = 7L)
+      Snapshot.crashAt(root, Snapshot.BeforePointer) {
+        StreamGdpr.erase(spark, root, e, eid = 7L)
       }
     }
     assert(ex.getMessage.contains("injected crash"))
-    assert(MonoidTable.fenced(flags, "gdpr7"),
-      "the flags step must have committed before the crash")
-    assert(!AppendLog.fenced(index, "gdpr7"),
-      "the index step must NOT have committed")
-    // Retry: flags no-op behind its fence (no double refund), index
-    // completes — the pair converges to the rebuild.
-    StreamGdpr.erase(spark, index, flags, e, eid = 7L)
+    assert(Snapshot.current(root) == before,
+      "the crashed erasure must leave the pre-erasure pointer")
+    // Retry: the whole erasure runs once — the root converges to the
+    // rebuild.
+    StreamGdpr.erase(spark, root, e, eid = 7L)
     val eSet = e.select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    val (rIndex, rFlags) = buildDedupState(
+    val rRoot = buildDedupState(
       docs.where(!col("doc_id").isin(eSet.toSeq: _*)))
-    assert(flagMap(flags) == flagMap(rFlags) &&
-      bandSet(index) == bandSet(rIndex),
+    assert(flagMap(root) == flagMap(rRoot) &&
+      bandSet(root) == bandSet(rRoot),
       "the crashed-and-retried erasure must equal the rebuild")
   }
 
   test("erasing ids the corpus never saw is a state no-op (but fences)") {
     import spark.implicits._
-    val (index, flags) = buildDedupState(docs)
-    val f0 = flagMap(flags)
-    val b0 = bandSet(index)
-    StreamGdpr.erase(spark, index, flags,
+    val root = buildDedupState(docs)
+    val f0 = flagMap(root)
+    val b0 = bandSet(root)
+    StreamGdpr.erase(spark, root,
       Seq(1000000001L, 1000000002L).toDF("doc_id"), eid = 3L)
-    assert(flagMap(flags) == f0 && bandSet(index) == b0)
-    assert(MonoidTable.fenced(flags, "gdpr3") &&
-      AppendLog.fenced(index, "gdpr3"),
+    assert(flagMap(root) == f0 && bandSet(root) == b0)
+    assert(Snapshot.current(root).get.fences("gdpr3"),
       "even a no-op erasure commits its fence — re-delivery must " +
         "short-circuit")
   }
 
   // ---- ingest pipeline: three state tables incl. the funnel ----
 
-  private def buildIngestState(corpus: DataFrame, nb: Int = 3)
-      : (String, String, String) = {
+  private def buildIngestState(corpus: DataFrame, nb: Int = 3): String = {
     val root = Files.createTempDirectory("graft_gdpr_ing").toString
     (0 until nb).foreach { i =>
-      StreamIngest.foldBatch(s"$root/index", s"$root/flags",
-        s"$root/funnel",
-        corpus.where(pmod(col("doc_id"), lit(nb)) === i), i.toLong)
+      Snapshot.batch(root, i.toLong)(t => StreamIngest.foldBatch(t,
+        corpus.where(pmod(col("doc_id"), lit(nb)) === i), i.toLong))
     }
-    (s"$root/index", s"$root/flags", s"$root/funnel")
+    root
   }
 
-  private def reportRows(flags: String, funnel: String)
-      : Seq[(Long, String, Long, Long)] =
-    StreamIngest.report(spark, flags, funnel)
+  private def reportRows(root: String): Seq[(Long, String, Long, Long)] =
+    StreamIngest.report(spark, root)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSeq
@@ -180,25 +175,24 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
   test("ingest erasure of RETAINED docs: index, flags AND funnel all " +
       "equal the rebuild without them (the survivors-only exactness " +
       "contract)") {
-    val (index, flags, funnel) = buildIngestState(docs)
+    val root = buildIngestState(docs)
     // A cohort of quality-SURVIVORS — the docs whose per-doc state the
     // pipeline actually retains.
-    val survivors = MonoidTable.read(spark, flags)
+    val survivors = MonoidTable.read(spark, root, StreamCorpusDedup.Flags)
       .where(col("seen") > 0)
       .select(col("doc_id")).collect().map(_.getLong(0)).sorted
     val e = survivors.take(5).toSet
     assert(e.size == 5, "need five retained docs to erase")
     import spark.implicits._
-    StreamGdpr.erase(spark, index, flags, e.toSeq.toDF("doc_id"),
-      eid = 4L, funnel = Some(funnel))
-    val (rIndex, rFlags, rFunnel) = buildIngestState(
+    StreamGdpr.erase(spark, root, e.toSeq.toDF("doc_id"), eid = 4L)
+    val rRoot = buildIngestState(
       docs.where(!col("doc_id").isin(e.toSeq: _*)))
-    assert(reportRows(flags, funnel) == reportRows(rFlags, rFunnel),
+    assert(reportRows(root) == reportRows(rRoot),
       "the funnel report (arrived / quality_pass / derived accepted) " +
         "must equal the rebuild without the erased survivors")
-    assert(flagMap(flags) == flagMap(rFlags),
+    assert(flagMap(root) == flagMap(rRoot),
       "ingest flag table must equal the rebuild")
-    assert(bandSet(index) == bandSet(rIndex),
+    assert(bandSet(root) == bandSet(rRoot),
       "ingest band index must equal the rebuild")
   }
 
@@ -206,21 +200,20 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
       "state, so its erasure is a state no-op and the anonymous " +
       "funnel tallies intentionally retain it (the documented " +
       "aggregates-exempt divergence)") {
-    val (index, flags, funnel) = buildIngestState(docs)
-    val seen = MonoidTable.read(spark, flags)
+    val root = buildIngestState(docs)
+    val seen = MonoidTable.read(spark, root, StreamCorpusDedup.Flags)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val rejected = docs.select(col("doc_id")).collect()
       .map(_.getLong(0)).filterNot(seen).take(1)
     assert(rejected.nonEmpty,
       "fixture premise: the quality gate must reject at least one doc")
-    val before = reportRows(flags, funnel)
-    val f0 = flagMap(flags)
+    val before = reportRows(root)
+    val f0 = flagMap(root)
     import spark.implicits._
-    StreamGdpr.erase(spark, index, flags, rejected.toSeq.toDF("doc_id"),
-      eid = 5L, funnel = Some(funnel))
-    assert(reportRows(flags, funnel) == before,
+    StreamGdpr.erase(spark, root, rejected.toSeq.toDF("doc_id"), eid = 5L)
+    assert(reportRows(root) == before,
       "funnel counters keep the rejected doc's anonymous tally")
-    assert(flagMap(flags) == f0, "no per-doc state existed to erase")
+    assert(flagMap(root) == f0, "no per-doc state existed to erase")
   }
 
   // ------------------------------------------------------------------
@@ -263,15 +256,14 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
     val base = Files.createTempDirectory("graft_vecgdpr").toString
     val (root, state) = (base + "/gen", base + "/stats")
     IvfRefit.Gen.bootstrap(spark, corpus, root, vCb)
-    MonoidTable.merge(state,
-      StreamVecIndex.partials(
-        graft.operators.AnnIvf.assign(corpus, vCb)),
-      0L, Seq("cell", "pos"))
+    Snapshot.batch(state, 0L)(MonoidTable.merge(_, StreamVecIndex.Stats,
+      StreamVecIndex.partials(graft.operators.AnnIvf.assign(corpus, vCb)),
+      Seq("cell", "pos")))
     (root, state)
   }
 
   private def statsSet(state: String): Set[(Int, Int, Long, Long)] =
-    MonoidTable.read(spark, state)
+    MonoidTable.read(spark, state, StreamVecIndex.Stats)
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .toSet
@@ -373,8 +365,8 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
     StreamGdpr.eraseVectors(spark, state, root,
       Seq(9999L).toDF("vec_id"), eid = 7L, vCb)
     assert((statsSet(state), postingsSet(root)) == before)
-    assert(Snapshot.currentManifest(root).get.contains("gdpr7") &&
-      Snapshot.currentManifest(state).get.contains("gdpr7"),
+    assert(Snapshot.current(root).get.fences("gdpr7") &&
+      Snapshot.current(state).get.fences("gdpr7"),
       "both tables must fence the request so re-delivery no-ops")
   }
 
@@ -402,10 +394,9 @@ class StreamGdprSpec extends AnyFunSuite with SparkFixture {
 
     val base = Files.createTempDirectory("graft_vecgdpr_postref").toString
     val wState = base + "/stats"
-    MonoidTable.merge(wState,
-      StreamVecIndex.partials(
-        graft.operators.AnnIvf.assign(vRetained, vCb)),
-      0L, Seq("cell", "pos"))
+    Snapshot.batch(wState, 0L)(MonoidTable.merge(_, StreamVecIndex.Stats,
+      StreamVecIndex.partials(graft.operators.AnnIvf.assign(vRetained, vCb)),
+      Seq("cell", "pos")))
     assert(statsSet(state) == statsSet(wState),
       "post-refit erasure must leave exactly the retained-corpus fold " +
         "statistics under the fold codebook")

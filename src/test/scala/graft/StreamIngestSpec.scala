@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{DedupQueries, TextQueries}
-import graft.streaming.{AppendLog, MonoidTable, StreamCorpusDedup, StreamIngest}
+import graft.streaming.{AppendLog, MonoidTable, Snapshot, StreamCorpusDedup,
+  StreamIngest}
 
 /** The composed streaming-ingest contract: the maintained funnel equals
   * the batch composition (quality gate → dedup among survivors),
@@ -74,14 +75,19 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
       "the one QualityScore.keep definition must make these equal")
   }
 
+  /** One batch through the catalog row's fold. */
+  private def fold(root: String, b: DataFrame, id: Long,
+      gate: Option[StreamIngest.SpanGate] = None): Unit =
+    Snapshot.batch(root, id)(StreamIngest.foldBatch(_, b, id, gate))
+
+  private def flags(root: String): DataFrame =
+    MonoidTable.read(spark, root, StreamCorpusDedup.Flags)
+
   /** Drive foldBatch directly with an explicit batching. */
   private def runBatches(batches: Seq[DataFrame]): (String, Seq[(Long, String, Long, Long)]) = {
     val root = Files.createTempDirectory("graft_ingest").toString
-    batches.zipWithIndex.foreach { case (b, i) =>
-      StreamIngest.foldBatch(s"$root/index", s"$root/flags",
-        s"$root/funnel", b, i.toLong)
-    }
-    (root, asRows(StreamIngest.report(spark, s"$root/flags", s"$root/funnel")))
+    batches.zipWithIndex.foreach { case (b, i) => fold(root, b, i.toLong) }
+    (root, asRows(StreamIngest.report(spark, root)))
   }
 
   test("chunking and arrival order do not change the drained funnel") {
@@ -97,29 +103,26 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
     val byMod = (0 until 3).map(i =>
       docs.where(pmod(col("doc_id"), lit(3)) === i))
     val (root, before) = runBatches(byMod)
-    val segRows = AppendLog.read(spark, s"$root/index").get.count()
-    val flagRows = MonoidTable.read(spark, s"$root/flags").count()
-    val seenMax = MonoidTable.read(spark, s"$root/flags")
-      .agg(max(col("seen"))).head().getLong(0)
-    StreamIngest.foldBatch(s"$root/index", s"$root/flags",
-      s"$root/funnel", byMod(1), 1L)
-    assert(AppendLog.read(spark, s"$root/index").get.count() == segRows,
-      "re-delivery must not append a duplicate band segment")
-    assert(MonoidTable.read(spark, s"$root/flags").count() == flagRows)
-    assert(MonoidTable.read(spark, s"$root/flags")
-      .agg(max(col("seen"))).head().getLong(0) == seenMax,
+    val index = AppendLog.read(spark, root, StreamCorpusDedup.Index)
+    val segRows = index.get.count()
+    val flagRows = flags(root).count()
+    val seenMax = flags(root).agg(max(col("seen"))).head().getLong(0)
+    fold(root, byMod(1), 1L)
+    assert(AppendLog.read(spark, root, StreamCorpusDedup.Index).get.count() ==
+      segRows, "re-delivery must not append a duplicate band segment")
+    assert(flags(root).count() == flagRows)
+    assert(flags(root).agg(max(col("seen"))).head().getLong(0) == seenMax,
       "a double-merged batch would read seen = 2 for its docs")
-    assert(asRows(StreamIngest.report(spark, s"$root/flags",
-      s"$root/funnel")) == before)
+    assert(asRows(StreamIngest.report(spark, root)) == before)
     assert(seenMax == 1L)
   }
 
   test("exactly the quality survivors enter the dedup state") {
     val (root, rows) = runBatches(Seq(docs))
-    val flags = MonoidTable.read(spark, s"$root/flags")
+    val flagT = flags(root)
     val passIds = QualityScore(docs).where(QualityScore.keep)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    val seenIds = flags.where(col("seen") > 0)
+    val seenIds = flagT.where(col("seen") > 0)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(seenIds == passIds)
     assert(rows.map(_._2) == Seq("arrived", "quality_pass", "dedup_accepted"))
@@ -140,8 +143,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          StreamIngest.foldBatch(s"$root/index", s"$root/flags",
-            s"$root/funnel", batch, id)
+          fold(root, batch, id)
           if (id == 2L && crashed.compareAndSet(false, true))
             throw new RuntimeException("injected crash after fold")
         }
@@ -153,14 +155,12 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
     catch { case _: StreamingQueryException => () }
     assert(crashed.get(), "the injection must have fired")
     runOnce()
-    val got = asRows(StreamIngest.report(spark, s"$root/flags",
-      s"$root/funnel"))
+    val got = asRows(StreamIngest.report(spark, root))
     val want = asRows(Catalog.byName("q_stream_ingest").build(spark, sfDir))
     assert(got == want,
       "the funnel must equal the batch truth despite the crash — a " +
         "double-merged batch would inflate arrived/quality_pass")
-    val seenMax = MonoidTable.read(spark, s"$root/flags")
-      .agg(max(col("seen"))).head().getLong(0)
+    val seenMax = flags(root).agg(max(col("seen"))).head().getLong(0)
     assert(seenMax == 1L, s"re-delivery double-counted seen=$seenMax")
   }
 
@@ -202,13 +202,12 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
     // index.
     val root = Files.createTempDirectory("graft_ingest_shadow").toString
     Seq(twinDf, docs).zipWithIndex.foreach { case (b, i) =>
-      StreamIngest.foldBatch(s"$root/index", s"$root/flags",
-        s"$root/funnel", b, i.toLong)
+      fold(root, b, i.toLong)
     }
-    val flags = MonoidTable.read(spark, s"$root/flags")
-    assert(flags.where(col("doc_id") === twinId).count() == 0,
+    val flagT = flags(root)
+    assert(flagT.where(col("doc_id") === twinId).count() == 0,
       "the failing twin must never enter the dedup state")
-    assert(flags.where(col("doc_id") === p)
+    assert(flagT.where(col("doc_id") === p)
       .select(col("n_coll")).head().getLong(0) == 0L,
       s"doc $p must stay accepted — the rejected twin cannot shadow it")
 
@@ -217,12 +216,12 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
     // twin now flags p, proving the shipped gate placement is what the
     // assertion above actually tests.
     val nroot = Files.createTempDirectory("graft_ingest_shadow_neg").toString
-    StreamCorpusDedup.foldBands(s"$nroot/index", s"$nroot/flags",
-      twinDf.repartition(2), 0L)
-    StreamCorpusDedup.foldBands(s"$nroot/index", s"$nroot/flags",
+    Snapshot.batch(nroot, 0L)(
+      StreamCorpusDedup.foldBands(_, twinDf.repartition(2), 0L))
+    Snapshot.batch(nroot, 1L)(StreamCorpusDedup.foldBands(_,
       QualityScore(docs).where(QualityScore.keep)
-        .select(col("doc_id"), col("text")).repartition(8), 1L)
-    assert(MonoidTable.read(spark, s"$nroot/flags")
+        .select(col("doc_id"), col("text")).repartition(8), 1L))
+    assert(flags(nroot)
       .where(col("doc_id") === p)
       .select(col("n_coll")).head().getLong(0) > 0L,
       "without the gate-first order the twin must flag p — if it " +
@@ -250,15 +249,13 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
       "planted docs must pass the quality gate or the chapter is vacuous")
 
     val root = Files.createTempDirectory("graft_ingest_gate").toString
-    val g = StreamIngest.SpanGate(bench, benchFps, s"$root/leaks")
-    StreamIngest.foldBatch(s"$root/index", s"$root/flags", s"$root/funnel",
-      Seq(clean).toDF("doc_id", "text"), 0L, Some(g))
-    StreamIngest.foldBatch(s"$root/index", s"$root/flags", s"$root/funnel",
-      Seq(leaked).toDF("doc_id", "text"), 1L, Some(g))
+    val g = StreamIngest.SpanGate(bench, benchFps)
+    fold(root, Seq(clean).toDF("doc_id", "text"), 0L, Some(g))
+    fold(root, Seq(leaked).toDF("doc_id", "text"), 1L, Some(g))
 
     // Span evidence: the leaked doc convicted against the bench doc,
     // with a run covering at least the planted core.
-    val ev = AppendLog.read(spark, s"$root/leaks").get.collect()
+    val ev = AppendLog.read(spark, root, StreamIngest.Leaks).get.collect()
     assert(ev.nonEmpty, "the evidence log must hold the convicting spans")
     assert(ev.forall(r => r.getAs[Long]("doc_r") == 801L &&
       r.getAs[Long]("doc_b") == 900L))
@@ -266,7 +263,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
       "the evidence must cover the planted core")
 
     // The leaked doc never reached the dedup state; the clean one did.
-    val flagIds = MonoidTable.read(spark, s"$root/flags")
+    val flagIds = flags(root)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(flagIds == Set(800L),
       s"only the clean doc may enter the band/flag state, got $flagIds")
@@ -274,7 +271,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
     // Funnel: arrived 2 → quality_pass 2 → contamination_pass 1 →
     // dedup_accepted 1.
     val rep = StreamIngest
-      .report(spark, s"$root/flags", s"$root/funnel", acceptedOrd = 3L)
+      .report(spark, root, acceptedOrd = 3L)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       .toSeq
     assert(rep == Seq((0L, "arrived", 2L), (1L, "quality_pass", 2L),
@@ -282,14 +279,12 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
       s"funnel shape diverged: $rep")
 
     // Re-delivery of the late batch: every table no-ops, including the
-    // evidence log (fenced by its segment key).
-    import graft.streaming.Snapshot
-    val before = Seq("leaks", "index", "flags", "funnel")
-      .map(t => Snapshot.currentManifest(s"$root/$t").get)
-    StreamIngest.foldBatch(s"$root/index", s"$root/flags", s"$root/funnel",
-      Seq(leaked).toDF("doc_id", "text"), 1L, Some(g))
-    assert(Seq("leaks", "index", "flags", "funnel")
-      .map(t => Snapshot.currentManifest(s"$root/$t").get) == before,
+    // evidence log — all four are keys of the row's one pointer.
+    val before = Snapshot.current(root).get
+    assert(Seq("leaks", "index", "flags", "funnel").forall(t =>
+      before.manifest.keys.exists(_.split('/').head == t)))
+    fold(root, Seq(leaked).toDF("doc_id", "text"), 1L, Some(g))
+    assert(Snapshot.current(root).get == before,
       "a re-delivered gated batch must change nothing")
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{MultimodalBinary, VectorQueries}
-import graft.streaming.{AppendLog, MonoidTable, StreamCorpusDedup,
+import graft.streaming.{AppendLog, MonoidTable, Snapshot, StreamCorpusDedup,
   StreamGdpr, StreamPhashDedup}
 
 /** The streaming multimodal-dedup contract: the maintained pHash
@@ -19,8 +19,8 @@ import graft.streaming.{AppendLog, MonoidTable, StreamCorpusDedup,
   * index through the shared machinery (Hamming-verified refunds). */
 class StreamPhashDedupSpec extends AnyFunSuite with SparkFixture {
 
-  private def asMap(flags: String): Map[Long, Long] =
-    StreamCorpusDedup.verdicts(spark, flags)
+  private def asMap(root: String): Map[Long, Long] =
+    StreamCorpusDedup.verdicts(spark, root)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** The batch truth: later endpoints of the q_multimodal_phash pair
@@ -51,9 +51,9 @@ class StreamPhashDedupSpec extends AnyFunSuite with SparkFixture {
   private def runBatches(batches: Seq[DataFrame]): String = {
     val root = Files.createTempDirectory("graft_phash").toString
     batches.zipWithIndex.foreach { case (b, i) =>
-      StreamPhashDedup.foldBatch(s"$root/index", s"$root/flags", b, i.toLong)
+      Snapshot.batch(root, i.toLong)(StreamPhashDedup.foldBatch(_, b, i.toLong))
     }
-    s"$root/flags"
+    root
   }
 
   test("chunking and order invariance: modulo slices in both orders " +
@@ -113,8 +113,7 @@ class StreamPhashDedupSpec extends AnyFunSuite with SparkFixture {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          StreamPhashDedup.foldBatch(s"$root/index", s"$root/flags",
-            batch, id)
+          Snapshot.batch(root, id)(StreamPhashDedup.foldBatch(_, batch, id))
           if (id == 2L && crashed.compareAndSet(false, true))
             throw new RuntimeException("injected crash after fold")
         }
@@ -126,10 +125,10 @@ class StreamPhashDedupSpec extends AnyFunSuite with SparkFixture {
     catch { case _: StreamingQueryException => () }
     assert(crashed.get(), "the injection must have fired")
     runOnce()
-    val got = asMap(s"$root/flags")
+    val got = asMap(root)
     assert(got.filter(_._2 == 1L).keySet == batchFlagged,
       "verdicts must equal the batch truth despite the crash")
-    val seen = MonoidTable.read(spark, s"$root/flags")
+    val seen = MonoidTable.read(spark, root, StreamCorpusDedup.Flags)
       .agg(max(col("seen"))).head().getLong(0)
     assert(seen == 1L, s"re-delivery double-counted seen=$seen")
   }
@@ -141,20 +140,18 @@ class StreamPhashDedupSpec extends AnyFunSuite with SparkFixture {
     val (b0, b1, b2) = plantedMedia
     val root = Files.createTempDirectory("graft_phash_gdpr").toString
     Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
-      StreamPhashDedup.foldBatch(s"$root/index", s"$root/flags",
-        b, i.toLong)
+      Snapshot.batch(root, i.toLong)(StreamPhashDedup.foldBatch(_, b, i.toLong))
     }
     // Erase media 5 — the smaller-id duplicate that flagged 10 and 20.
-    StreamGdpr.erase(spark, s"$root/index", s"$root/flags",
-      Seq(5L).toDF("doc_id"), eid = 0L,
+    StreamGdpr.erase(spark, root, Seq(5L).toDF("doc_id"), eid = 0L,
       verify = StreamPhashDedup.hammingVerify)
-    val got = asMap(s"$root/flags")
+    val got = asMap(root)
     // Rebuild without 5: 10 stays clean (nothing smaller shares its
     // hash), 20 still collides with 10.
     assert(got == Map(10L -> 0L, 20L -> 1L, 30L -> 0L),
       s"got $got — refunds must subtract exactly the erased partner's " +
         "verified collisions")
-    val left = AppendLog.read(spark, s"$root/index").get
+    val left = AppendLog.read(spark, root, StreamCorpusDedup.Index).get
       .select(col("doc_id")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(left == Set(10L, 20L, 30L),

@@ -12,7 +12,7 @@ import graft.streaming.{AppendLog, Snapshot, StreamSpanDedup}
 /** The streaming span-dedup contract: the maintained fingerprint index
   * + span report equal the batch q_dedup_spans pipeline on the same
   * corpus — whatever the chunking or arrival order — survive
-  * re-delivery and a crash between the fenced commits, and compose
+  * re-delivery and a crash in a batch's one commit, and compose
   * with GDPR erasure such that nothing can resurrect a span against an
   * erased cohort. */
 class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
@@ -22,28 +22,26 @@ class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
   private def df(rows: Seq[(Long, String)]): DataFrame =
     rows.toDF("doc_id", "text")
 
-  /** Fresh state roots (fpidx, docs, spans). */
-  private def roots(): (String, String, String) = {
-    val b = Files.createTempDirectory("graft_streamspan").toString
-    (s"$b/fpidx", s"$b/docs", s"$b/spans")
-  }
+  /** One batch through the exact catalog-row code path. */
+  private def fold(root: String, rows: Seq[(Long, String)], id: Long)
+      : Unit =
+    Snapshot.batch(root, id)(StreamSpanDedup.foldBatch(_, df(rows), id))
 
-  /** Fold `corpus` through the exact catalog-row code path, one batch
-    * per id-list in `batches` (order = arrival order). */
+  /** Fold `corpus` into a fresh root, one batch per id-list in
+    * `batches` (order = arrival order). */
   private def build(corpus: Seq[(Long, String)],
-      batches: Seq[Seq[Long]]): (String, String, String) = {
-    val (fpidx, docs, spans) = roots()
+      batches: Seq[Seq[Long]]): String = {
+    val root = Files.createTempDirectory("graft_streamspan").toString
     batches.zipWithIndex.foreach { case (ids, i) =>
-      StreamSpanDedup.foldBatch(fpidx, docs, spans,
-        df(corpus.filter(r => ids.contains(r._1))), i.toLong)
+      fold(root, corpus.filter(r => ids.contains(r._1)), i.toLong)
     }
-    (fpidx, docs, spans)
+    root
   }
 
   private type SpanRow = (Long, Long, Long, Long, Long, String)
 
-  private def reportSet(spans: String): Set[SpanRow] =
-    StreamSpanDedup.report(spark, spans).collect().map(r =>
+  private def reportSet(root: String): Set[SpanRow] =
+    StreamSpanDedup.report(spark, root).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getString(5))).toSet
 
@@ -72,8 +70,7 @@ class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
       "planted cross-batch spans land with exact offsets") {
     // This batching puts (1, 5) and (6, 9) in DIFFERENT batches.
     val batches = Seq(Seq(1L, 6L, 9L), Seq(2L, 11L), Seq(5L))
-    val (_, _, spans) = build(corpus, batches)
-    val got = reportSet(spans)
+    val got = reportSet(build(corpus, batches))
     assert(got == batchSet(corpus),
       s"stream report must equal the batch pipeline: $got")
     // Exact offsets of the cross-batch spans (1-based, pad lengths).
@@ -89,8 +86,7 @@ class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
     val b3 = Seq(Seq(11L, 9L), Seq(6L, 5L), Seq(2L), Seq(1L))
     val want = batchSet(corpus)
     for (b <- Seq(b1, b2, b3)) {
-      val (_, _, spans) = build(corpus, b)
-      assert(reportSet(spans) == want, s"batching $b diverged")
+      assert(reportSet(build(corpus, b)) == want, s"batching $b diverged")
     }
   }
 
@@ -107,34 +103,28 @@ class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
       "the fixture corpus must contain spans or this test is vacuous")
   }
 
-  test("re-delivery no-ops and a crash between the fenced commits " +
+  test("re-delivery no-ops and a crash in the batch's one commit " +
       "re-enters and converges") {
     val batches = Seq(Seq(1L, 6L, 9L), Seq(2L, 11L), Seq(5L))
-    val (fpidx, docs, spans) = build(corpus, batches.dropRight(1))
-    // Crash after the fingerprint/text segments of batch 2 commit but
-    // before the span fold.
+    val root = build(corpus, batches.dropRight(1))
+    val committed = Snapshot.current(root)
+    // Crash batch 2 after all three tables' versions are written, before
+    // the pointer moves.
     val e = intercept[IllegalStateException] {
-      Snapshot.crashAt(spans, Snapshot.BeforePointer) {
-        StreamSpanDedup.foldBatch(fpidx, docs, spans,
-          df(corpus.filter(r => batches(2).contains(r._1))), 2L)
+      Snapshot.crashAt(root, Snapshot.BeforePointer) {
+        fold(root, corpus.filter(r => batches(2).contains(r._1)), 2L)
       }
     }
     assert(e.getMessage.contains("injected crash"))
-    assert(!AppendLog.fenced(spans, "seg2") &&
-      AppendLog.fenced(fpidx, "seg2"),
-      "the crash must land between the commits or it tests nothing")
-    // Retry re-delivers the whole batch: committed segments no-op, the
-    // span fold completes from the committed segment bytes.
-    StreamSpanDedup.foldBatch(fpidx, docs, spans,
-      df(corpus.filter(r => batches(2).contains(r._1))), 2L)
-    assert(reportSet(spans) == batchSet(corpus))
+    assert(Snapshot.current(root) == committed,
+      "the crashed batch must leave the pre-batch pointer")
+    // Retry re-delivers the whole batch, which folds from scratch.
+    fold(root, corpus.filter(r => batches(2).contains(r._1)), 2L)
+    assert(reportSet(root) == batchSet(corpus))
     // Full re-delivery of an old batch: nothing changes anywhere.
-    val manifests = Seq(fpidx, docs, spans)
-      .map(r => Snapshot.currentManifest(r).get)
-    StreamSpanDedup.foldBatch(fpidx, docs, spans,
-      df(corpus.filter(r => batches(1).contains(r._1))), 1L)
-    assert(Seq(fpidx, docs, spans)
-      .map(r => Snapshot.currentManifest(r).get) == manifests,
+    val pointer = Snapshot.current(root)
+    fold(root, corpus.filter(r => batches(1).contains(r._1)), 1L)
+    assert(Snapshot.current(root) == pointer,
       "a re-delivered batch must be a no-op on all three tables")
   }
 
@@ -142,27 +132,27 @@ class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
       "the report nor later probes (the quiesced-cadence maintenance " +
       "event)") {
     val batches = Seq(Seq(1L, 6L, 9L), Seq(2L, 11L), Seq(5L))
-    val (fpidx, docs, spans) = build(corpus, batches.dropRight(1))
+    val root = build(corpus, batches.dropRight(1))
     // Quiesced-log maintenance after batch 1: fold every table's
-    // segments to one directory (all seg keys survive as tombstones).
-    Seq(fpidx, docs, spans).foreach(AppendLog.compact(spark, _))
-    assert(Snapshot.currentManifest(fpidx).get.values.toSet.size == 1,
+    // segments to one directory (all seg keys survive, mapped to it).
+    Snapshot.update(root, None) { t =>
+      Seq(StreamSpanDedup.FpIdx, StreamSpanDedup.Docs, StreamSpanDedup.Spans)
+        .foreach(AppendLog.compact(spark, t, _))
+    }
+    assert(Snapshot.currentManifest(root).get
+      .filter(_._1.startsWith("fpidx/")).values.toSet.size == 1,
       "compaction must fold the fingerprint segments to one directory")
     // A pre-compaction batch id re-delivered AFTER compaction still
-    // no-ops (the tombstone contract; id > 0 — a batch-0 re-delivery
-    // is the fresh-invocation world reset by design).
-    val manifests = Seq(fpidx, docs, spans)
-      .map(r => Snapshot.currentManifest(r).get)
-    StreamSpanDedup.foldBatch(fpidx, docs, spans,
-      df(corpus.filter(r => batches(1).contains(r._1))), 1L)
-    assert(Seq(fpidx, docs, spans)
-      .map(r => Snapshot.currentManifest(r).get) == manifests,
+    // no-ops (the batch fence; id > 0 — a batch-0 re-delivery is the
+    // fresh-invocation world reset by design).
+    val manifest = Snapshot.currentManifest(root).get
+    fold(root, corpus.filter(r => batches(1).contains(r._1)), 1L)
+    assert(Snapshot.currentManifest(root).get == manifest,
       "a re-delivered pre-compaction batch must no-op on the tombstones")
     // The NEXT batch probes the compacted index — cross-batch pair
     // (1, 5) must still be found, and the final report equals batch.
-    StreamSpanDedup.foldBatch(fpidx, docs, spans,
-      df(corpus.filter(r => batches(2).contains(r._1))), 2L)
-    assert(reportSet(spans) == batchSet(corpus),
+    fold(root, corpus.filter(r => batches(2).contains(r._1)), 2L)
+    assert(reportSet(root) == batchSet(corpus),
       "probing a compacted index must produce the identical report")
   }
 
@@ -170,41 +160,41 @@ class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
       "the cohort; crash re-enters; a later arrival cannot resurrect " +
       "a span against the erased doc") {
     val batches = Seq(Seq(1L, 6L, 9L), Seq(2L, 11L), Seq(5L))
-    val (fpidx, docs, spans) = build(corpus, batches)
+    val root = build(corpus, batches)
     val cohort = Seq(5L, 9L).toDF("doc_id")
 
-    // Crash after step 1 (span rewrite fenced), retry converges.
+    // Crash the erasure's one commit; the pointer stays pre-erasure and
+    // the retry converges.
+    val committed = Snapshot.current(root)
     val e = intercept[IllegalStateException] {
-      Snapshot.crashAt(fpidx, Snapshot.BeforePointer) {
-        StreamSpanDedup.eraseSpanState(spark, fpidx, docs, spans, cohort,
-          eid = 0L)
+      Snapshot.crashAt(root, Snapshot.BeforePointer) {
+        StreamSpanDedup.eraseSpanState(spark, root, cohort, eid = 0L)
       }
     }
     assert(e.getMessage.contains("injected crash"))
-    assert(AppendLog.fenced(spans, "gdpr0") && !AppendLog.fenced(fpidx, "gdpr0"))
-    StreamSpanDedup.eraseSpanState(spark, fpidx, docs, spans, cohort, 0L)
+    assert(Snapshot.current(root) == committed)
+    StreamSpanDedup.eraseSpanState(spark, root, cohort, 0L)
 
     // Ground truth: the same build over the retained corpus only.
     val retained = corpus.filterNot(r => Set(5L, 9L)(r._1))
-    val (wFp, wDocs, wSpans) =
-      build(retained, batches.map(_.filterNot(Set(5L, 9L))))
-    def fpSet(root: String) = AppendLog.read(spark, root).get
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    def docSet(root: String) = AppendLog.read(spark, root).get
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(reportSet(spans) == reportSet(wSpans),
+    val wRoot = build(retained, batches.map(_.filterNot(Set(5L, 9L))))
+    def fpSet(root: String) =
+      AppendLog.read(spark, root, StreamSpanDedup.FpIdx).get
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def docSet(root: String) =
+      AppendLog.read(spark, root, StreamSpanDedup.Docs).get
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(reportSet(root) == reportSet(wRoot),
       "post-erasure span report must equal the retained-corpus build")
-    assert(fpSet(fpidx) == fpSet(wFp),
+    assert(fpSet(root) == fpSet(wRoot),
       "post-erasure fingerprint index must equal the retained build")
-    assert(docSet(docs) == docSet(wDocs),
+    assert(docSet(root) == docSet(wRoot),
       "post-erasure corpus store must equal the retained build")
 
     // Re-delivery of the erasure no-ops everywhere.
-    val manifests = Seq(fpidx, docs, spans)
-      .map(r => Snapshot.currentManifest(r).get)
-    StreamSpanDedup.eraseSpanState(spark, fpidx, docs, spans, cohort, 0L)
-    assert(Seq(fpidx, docs, spans)
-      .map(r => Snapshot.currentManifest(r).get) == manifests)
+    val pointer = Snapshot.current(root)
+    StreamSpanDedup.eraseSpanState(spark, root, cohort, 0L)
+    assert(Snapshot.current(root) == pointer)
 
     // A post-erasure arrival shares core1 (with erased doc 5 AND
     // retained doc 1) and core2 (erased doc 9, retained doc 6): the
@@ -212,14 +202,14 @@ class StreamSpanDedupSpec extends AnyFunSuite with SparkFixture {
     // fingerprints are physically gone, so nothing resurrects.
     val late = Seq(20L ->
       ("late arrival holds5" + core1 + "Qand also6" + core2 + "Rend."))
-    StreamSpanDedup.foldBatch(fpidx, docs, spans, df(late), 3L)
-    val after = reportSet(spans)
+    fold(root, late, 3L)
+    val after = reportSet(root)
     assert(!after.exists(r => Set(r._1, r._2).intersect(Set(5L, 9L)).nonEmpty),
       "no span may name an erased doc after erasure")
     assert(after.exists(r => r._1 == 1L && r._2 == 20L && r._6 == core1),
       "the retained-partner span must still be found")
     assert(after.exists(r => r._1 == 6L && r._2 == 20L && r._6 == core2))
-    assert(after == reportSet(wSpans) ++ batchSet(retained ++ late)
+    assert(after == reportSet(wRoot) ++ batchSet(retained ++ late)
       .filter(r => r._1 == 20L || r._2 == 20L),
       "the final report must be exactly the retained build plus the " +
         "late doc's spans against retained partners")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AnnIvf
-import graft.streaming.{MonoidTable, StreamVecIndex}
+import graft.streaming.{MonoidTable, Snapshot, StreamVecIndex}
 
 /** The streaming IVF-index maintenance contract (r11 verdict ask #1):
   * the maintained index must equal the batch build BIT-FOR-BIT (the
@@ -74,9 +74,9 @@ class StreamVecIndexSpec extends AnyFunSuite with SparkFixture {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          MonoidTable.merge(state,
-            StreamVecIndex.partials(AnnIvf.assign(batch, cb)), id,
-            Seq("cell", "pos"))
+          Snapshot.batch(state, id)(MonoidTable.merge(_, StreamVecIndex.Stats,
+            StreamVecIndex.partials(AnnIvf.assign(batch, cb)),
+            Seq("cell", "pos")))
           // Crash between the state write and the epoch commit — the
           // at-least-once window that re-delivers this batchId.
           if (id == 2L && crashed.compareAndSet(false, true))
@@ -93,7 +93,7 @@ class StreamVecIndexSpec extends AnyFunSuite with SparkFixture {
     def asMap(df: DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
-    val got = asMap(MonoidTable.read(spark, state)
+    val got = asMap(MonoidTable.read(spark, state, StreamVecIndex.Stats)
       .select(col("cell"), col("pos"), col("n"), col("s")))
     val want = asMap(StreamVecIndex.partials(fullAssigned)
       .select(col("cell"), col("pos"), col("n"), col("s")))
@@ -114,17 +114,18 @@ class StreamVecIndexSpec extends AnyFunSuite with SparkFixture {
     val state = Files.createTempDirectory("graft_vecidx_del").toString + "/t"
     val cb = codebook
     val all = fullAssigned
-    MonoidTable.merge(state, StreamVecIndex.partials(all), 0L,
-      Seq("cell", "pos"))
+    def merge(df: DataFrame, id: Long): Unit = Snapshot.batch(state, id)(
+      MonoidTable.merge(_, StreamVecIndex.Stats, df, Seq("cell", "pos")))
+    merge(StreamVecIndex.partials(all), 0L)
     val deletes = StreamVecIndex.partials(
         all.where(col("vec_id") % 5 === 0))
       .select(col("cell"), col("pos"),
         (-col("n")).cast(LongType).as("n"), (-col("s")).as("s"))
-    MonoidTable.merge(state, deletes, 1L, Seq("cell", "pos"))
+    merge(deletes, 1L)
     def asMap(df: DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
-    val got = asMap(MonoidTable.read(spark, state)
+    val got = asMap(MonoidTable.read(spark, state, StreamVecIndex.Stats)
       .where(col("n") =!= 0L) // fully-emptied cells carry a zero row
       .select(col("cell"), col("pos"), col("n"), col("s")))
     val want = asMap(StreamVecIndex.partials(
@@ -150,7 +151,8 @@ class StreamVecIndexSpec extends AnyFunSuite with SparkFixture {
     val refitCb = AnnIvf.train(emb, k = 4, iters = 2) // the offline refit
     StreamVecIndex.maintain(spark, sfDir, state, codebook = Some(refitCb))
     val got = StreamVecIndex
-      .driftReport(MonoidTable.read(spark, state), refitCb)
+      .driftReport(MonoidTable.read(spark, state, StreamVecIndex.Stats),
+        refitCb)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toVector
     val want = StreamVecIndex
       .driftReport(StreamVecIndex.partials(AnnIvf.assign(emb, refitCb)),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AnnIvf
-import graft.streaming.{AppendLog, StreamVecSearch}
+import graft.streaming.{AppendLog, Snapshot, StreamVecSearch}
 
 /** The streaming ANN-serving contract: every drained result is
   * per-query bit-equal to the single-probe AnnIvf.search, the whole log
@@ -18,6 +18,12 @@ import graft.streaming.{AppendLog, StreamVecSearch}
   * cell-pruned search still clears a measured recall floor vs the exact
   * brute force. */
 class StreamVecSearchSpec extends AnyFunSuite with SparkFixture {
+
+  /** One batch of the catalog row's fold into the results root. */
+  private def fold(root: String, postings: Seq[Int] => Option[DataFrame],
+      centroids: Seq[Array[Float]], batch: DataFrame, id: Long): Unit =
+    Snapshot.batch(root, id)(StreamVecSearch.foldBatch(_, postings,
+      centroids, batch, id))
 
   import StreamVecSearch.{K, Iters, NProbe, TopK}
 
@@ -115,30 +121,32 @@ class StreamVecSearchSpec extends AnyFunSuite with SparkFixture {
     val chunks = (0 until 3).map(c =>
       qlog.where(pmod(col("qid"), lit(3)) === c))
     def drain(root: String): Set[(Long, Long, Long, Double)] =
-      asSet(AppendLog.read(spark, root).get)
+      asSet(AppendLog.read(spark, root, StreamVecSearch.Results).get)
 
     val a = Files.createTempDirectory("graft_vsearch_a").toString
     chunks.zipWithIndex.foreach { case (b, i) =>
-      StreamVecSearch.foldBatch(a,
+      fold(a,
         StreamVecSearch.pathPostings(spark, postings), cb, b, i.toLong)
     }
     // Re-deliver batch 1 (driver death between segment commit and epoch
-    // commit re-runs the same id): the manifest key fences it. The
+    // commit re-runs the same id): the batch fence no-ops it. The
     // assert counts ROWS, not a row set — a broken fence appends a
     // byte-identical duplicate segment whose rows a set comparison
     // would collapse, passing exactly the regression this test exists
     // to catch.
     val before = drain(a)
-    val rowsBefore = AppendLog.read(spark, a).get.count()
-    StreamVecSearch.foldBatch(a,
+    val rowsBefore =
+      AppendLog.read(spark, a, StreamVecSearch.Results).get.count()
+    fold(a,
       StreamVecSearch.pathPostings(spark, postings), cb, chunks(1), 1L)
-    assert(AppendLog.read(spark, a).get.count() == rowsBefore,
+    assert(AppendLog.read(spark, a, StreamVecSearch.Results).get.count() ==
+      rowsBefore,
       "a re-delivered batchId must not append a duplicate segment")
     assert(drain(a) == before, "a re-delivered batchId must no-op")
 
     val b = Files.createTempDirectory("graft_vsearch_b").toString
     chunks.reverse.zipWithIndex.foreach { case (ch, i) =>
-      StreamVecSearch.foldBatch(b,
+      fold(b,
         StreamVecSearch.pathPostings(spark, postings), cb, ch, i.toLong)
     }
     assert(drain(b) == before,
@@ -163,7 +171,7 @@ class StreamVecSearchSpec extends AnyFunSuite with SparkFixture {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          StreamVecSearch.foldBatch(results,
+          fold(results,
             StreamVecSearch.pathPostings(spark, postings), cb, batch, id)
           if (id == 2L && crashed.compareAndSet(false, true))
             throw new RuntimeException("injected crash after fold")
@@ -176,7 +184,7 @@ class StreamVecSearchSpec extends AnyFunSuite with SparkFixture {
     catch { case _: StreamingQueryException => () }
     assert(crashed.get(), "the injection must have fired")
     runOnce()
-    val drained = AppendLog.read(spark, results).get
+    val drained = AppendLog.read(spark, results, StreamVecSearch.Results).get
     assert(asSet(drained) == catalogResult,
       "the drained log must equal the catalog truth despite the crash")
     assert(drained.count() == catalogResult.size,
@@ -201,9 +209,10 @@ class StreamVecSearchSpec extends AnyFunSuite with SparkFixture {
     val q = Seq((-1L, far.toSeq)).toDF("qid", "qvec")
     assert(AnnIvf.probeCells(cbPlus, far, NProbe).contains(cb.size),
       "the planted query must genuinely probe the empty cell")
-    StreamVecSearch.foldBatch(s"$root/results",
+    fold(s"$root/results",
       StreamVecSearch.pathPostings(spark, s"$root/postings"), cbPlus, q, 0L)
-    val got = asSet(AppendLog.read(spark, s"$root/results").get)
+    val got = asSet(
+      AppendLog.read(spark, s"$root/results", StreamVecSearch.Results).get)
     assert(got.forall(_._1 == -1L))
     assert(got.map(_._2) == (1L to TopK).toSet,
       "the occupied probed cells must still fill topK ranks")

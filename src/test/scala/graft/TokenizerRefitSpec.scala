@@ -29,12 +29,11 @@ class TokenizerRefitSpec extends AnyFunSuite with SparkFixture {
     def fold(nb: Int): Set[(String, Long)] = {
       val state = Files.createTempDirectory("graft_tokref").toString + "/st"
       (0 until nb).foreach { i =>
-        MonoidTable.merge(state,
-          TokenizerRefit.partials(
-            docs.where(pmod(col("doc_id"), lit(nb)) === i)),
-          i.toLong, Seq("w"))
+        Snapshot.batch(state, i.toLong)(MonoidTable.merge(_,
+          TokenizerRefit.Words, TokenizerRefit.partials(
+            docs.where(pmod(col("doc_id"), lit(nb)) === i)), Seq("w")))
       }
-      MonoidTable.read(spark, state).collect()
+      MonoidTable.read(spark, state, TokenizerRefit.Words).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
     }
     val batch = TokenizerRefit.partials(docs).collect()
@@ -48,7 +47,8 @@ class TokenizerRefitSpec extends AnyFunSuite with SparkFixture {
       "catalog token rows") {
     val base = Files.createTempDirectory("graft_tokref_gen").toString
     val (state, root) = (base + "/st", base + "/gen")
-    MonoidTable.merge(state, TokenizerRefit.partials(docs), 0L, Seq("w"))
+    Snapshot.batch(state, 0L)(MonoidTable.merge(_, TokenizerRefit.Words,
+      TokenizerRefit.partials(docs), Seq("w")))
     val (fm, fv) = TokenizerRefit.frozenModels(spark, sfDir)
     TokenizerRefit.Gen.publish(spark, root, fm, fv)
     TokenizerRefit.refit(spark, state, root)
@@ -87,7 +87,8 @@ class TokenizerRefitSpec extends AnyFunSuite with SparkFixture {
       "leaves BOTH old models readable; the retry converges") {
     val base = Files.createTempDirectory("graft_tokref_crash").toString
     val (state, root) = (base + "/st", base + "/gen")
-    MonoidTable.merge(state, TokenizerRefit.partials(docs), 0L, Seq("w"))
+    Snapshot.batch(state, 0L)(MonoidTable.merge(_, TokenizerRefit.Words,
+      TokenizerRefit.partials(docs), Seq("w")))
     val (fm, fv) = TokenizerRefit.frozenModels(spark, sfDir)
     TokenizerRefit.Gen.publish(spark, root, fm, fv)
     val e = intercept[IllegalStateException] {
